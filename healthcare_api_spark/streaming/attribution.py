@@ -64,8 +64,6 @@ def _merge_extremes_fn(key_col: str):
 def _state_store(
     state_root: str, key_col: str, nb: int
 ) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — per-batch extreme
-    # deltas, read-time min/max fold, periodic compaction.
     return BucketedVersionedState(
         f"{state_root}/touches",
         key_cols=[key_col],

@@ -45,33 +45,14 @@ from healthcare_api_spark.streaming.state import BucketedVersionedState
 _SUFFIX_T = "array<struct<us:bigint,tp:string>>"
 
 
-def _merge_replace_fn(key_col: str):
-    def _merge(prev, d):
-        # batch keys REPLACE wholesale (their row already folded the
-        # carried state in); untouched keys persist
-        if prev is None:
-            return d
-        return (
-            prev.join(
-                d.select(F.col(key_col).alias("_dk")),
-                prev[key_col] == F.col("_dk"),
-                "left_anti",
-            ).unionByName(d)
-        )
-
-    return _merge
-
-
 def _state_store(
     state_root: str, key_col: str, nb: int
 ) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — each batch writes only
-    # its touched keys' new state rows; reads fold newest-delta-wins.
     return BucketedVersionedState(
         f"{state_root}/touches",
         key_cols=[key_col],
         num_buckets=nb,
-        merge_fn=_merge_replace_fn(key_col),
+        replace=True,
     )
 
 

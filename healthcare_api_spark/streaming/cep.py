@@ -44,27 +44,17 @@ def _merge_done(prev, d):
     return prev.unionByName(d).distinct()
 
 
-def _merge_pending(prev, d):
-    """Pending-set fold for the append protocol (r13). The delta holds
-    one row per BATCH KEY: its surviving pendings, or a single marker
-    row (stage IS NULL) when every pending completed — so the fold can
-    replace a batch key's pendings wholesale from the delta alone (the
-    ADVICE r9 bug class: a key whose pendings all complete must still
-    CLEAR its old rows, which delta keys alone cannot express)."""
-    live = d.filter(F.col("stage").isNotNull())
-    if prev is None:
-        return live
-    return prev.join(d.select("k"), "k", "left_anti").unionByName(live)
-
-
 def _pending_store(root: str, nb: int) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — per-batch pending
-    # deltas with explicit clear markers, read-time replace fold.
+    # the delta holds one row per BATCH KEY: its surviving pendings, or
+    # a single marker row (stage IS NULL) when every pending completed,
+    # so the replace fold also clears a key whose pendings all
+    # completed (delta keys alone cannot express an emptied key)
     return BucketedVersionedState(
         f"{root}/pending",
         key_cols=["k"],
         num_buckets=nb,
-        merge_fn=_merge_pending,
+        replace=True,
+        clear_if_null="stage",
     )
 
 

@@ -27,35 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.state import BucketedVersionedState
-
-
-def _merge_counts(prev, d):
-    if prev is None:
-        return d
-    return (
-        prev.unionByName(d)
-        .groupBy("src", "dst")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
-
-
-def _merge_last(prev, d):
-    # key column introspected from the frame (everything except the
-    # fixed payload) so read-side folds need no key-name coupling
-    if prev is None:
-        return d
-    keys = [c for c in d.columns if c not in ("us", "st")]
-    return (
-        prev.unionByName(d)
-        .groupBy(*keys)
-        .agg(F.max(F.struct("us", "st")).alias("m"))
-        .select(
-            *keys,
-            F.col("m.us").alias("us"),
-            F.col("m.st").alias("st"),
-        )
-    )
+from healthcare_api_spark.streaming.state import (
+    BucketedVersionedState,
+    last_merge,
+    sum_merge,
+)
 
 
 def _last_store(state_root: str, key_col: str, nb: int) -> BucketedVersionedState:
@@ -63,18 +39,16 @@ def _last_store(state_root: str, key_col: str, nb: int) -> BucketedVersionedStat
         f"{state_root}/last",
         key_cols=[key_col],
         num_buckets=nb,
-        merge_fn=_merge_last,
+        merge_fn=last_merge("us", "st"),
     )
 
 
 def _counts_store(state_root: str, nb: int) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — each batch writes only
-    # its (src, dst) count delta; reads fold the integer sums exactly.
     return BucketedVersionedState(
         f"{state_root}/counts",
         key_cols=["src", "dst"],
         num_buckets=nb,
-        merge_fn=_merge_counts,
+        merge_fn=sum_merge(["src", "dst"], "n"),
     )
 
 
@@ -137,7 +111,7 @@ def flows_batch(
     )
 
     # new last-event per key: max by (us, st) over the batch (the
-    # fold-at-read merge handles the carried rows — ``_merge_last``)
+    # fold-at-read merge handles the carried rows — ``last_merge``)
     def _last_of(df):
         return (
             df.groupBy("k")

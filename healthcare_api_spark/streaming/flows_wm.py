@@ -40,46 +40,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.state import BucketedVersionedState
-
-
-def _merge_counts(prev, d):
-    if prev is None:
-        return d
-    return (
-        prev.unionByName(d)
-        .groupBy("src", "dst")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
-
-
-def _merge_suffix_fn(key_col: str):
-    def _merge(prev, d):
-        # batch keys REPLACE wholesale; untouched keys persist
-        if prev is None:
-            return d
-        return (
-            prev.join(
-                d.select(F.col(key_col).alias("_dk")),
-                prev[key_col] == F.col("_dk"),
-                "left_anti",
-            ).unionByName(d)
-        )
-
-    return _merge
+from healthcare_api_spark.streaming.state import BucketedVersionedState, sum_merge
 
 
 def _suffix_store(
     state_root: str, key_col: str, nb: int
 ) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits for both stores — the
-    # counts store appends ± integer deltas (sum fold at read), the
-    # suffix store appends touched keys' new rows (newest-delta-wins).
     return BucketedVersionedState(
         f"{state_root}/suffix",
         key_cols=[key_col],
         num_buckets=nb,
-        merge_fn=_merge_suffix_fn(key_col),
+        replace=True,
     )
 
 
@@ -88,7 +59,7 @@ def _counts_store(state_root: str, nb: int) -> BucketedVersionedState:
         f"{state_root}/counts",
         key_cols=["src", "dst"],
         num_buckets=nb,
-        merge_fn=_merge_counts,
+        merge_fn=sum_merge(["src", "dst"], "n"),
     )
 
 

@@ -37,58 +37,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.state import BucketedVersionedState
+from healthcare_api_spark.streaming.state import (
+    BucketedVersionedState,
+    last_merge,
+    sum_merge,
+)
 
 
-def _merge_counts(prev, d):
-    if prev is None:
-        return d
-    return (
-        prev.unionByName(d)
-        .groupBy("src", "dst")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
-
-
-def _merge_last(prev, d):
-    # key column introspected from the frame (everything except the
-    # fixed payload) so read-side folds need no key-name coupling
-    # (read_markov_attribution reconstructs this store without the
-    # writer's key_col)
-    if prev is None:
-        return d
-    keys = [c for c in d.columns if c not in ("us", "tp")]
-    return (
-        prev.unionByName(d)
-        .groupBy(*keys)
-        .agg(F.max(F.struct("us", "tp")).alias("m"))
-        .select(
-            *keys,
-            F.col("m.us").alias("us"),
-            F.col("m.tp").alias("tp"),
-        )
-    )
-
-
-def _last_store(
-    state_root: str, key_col: str, nb: int
-) -> BucketedVersionedState:
+def _last_store(state_root: str, nb: int) -> BucketedVersionedState:
+    # keyed by the batch frame's own ``k`` column, so readers need not
+    # know the writer's key column name
     return BucketedVersionedState(
         f"{state_root}/last",
-        key_cols=[key_col],
+        key_cols=["k"],
         num_buckets=nb,
-        merge_fn=_merge_last,
+        merge_fn=last_merge("us", "tp"),
     )
 
 
 def _counts_store(state_root: str, nb: int) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — per-batch delta dirs,
-    # read-time integer-sum fold, periodic compaction.
     return BucketedVersionedState(
         f"{state_root}/counts",
         key_cols=["src", "dst"],
         num_buckets=nb,
-        merge_fn=_merge_counts,
+        merge_fn=sum_merge(["src", "dst"], "n"),
     )
 
 
@@ -107,7 +79,7 @@ def markov_batch(
     from pyspark.sql import Window
 
     spark = batch_df.sparkSession
-    last_store = _last_store(state_root, key_col, num_state_buckets)
+    last_store = _last_store(state_root, num_state_buckets)
     counts_store = _counts_store(state_root, num_state_buckets)
 
     ev = batch_df.select(
@@ -117,11 +89,11 @@ def markov_batch(
         F.lit(False).alias("_seed"),
     ).localCheckpoint(eager=False)
 
-    touched = last_store.touched_buckets(ev.select(F.col("k").alias(key_col)))
+    touched = last_store.touched_buckets(ev.select("k"))
     carry = last_store.read(spark, before_batch=batch_id, buckets=touched)
     if carry is not None:
         seeds = (
-            carry.select(F.col(key_col).alias("k"), "us", "tp")
+            carry.select("k", "us", "tp")
             .join(ev.select("k").distinct(), "k", "semi")
             .withColumn("_seed", F.lit(True))
         )
@@ -159,7 +131,7 @@ def markov_batch(
             df.groupBy("k")
             .agg(F.max(F.struct("us", "tp")).alias("m"))
             .select(
-                F.col("k").alias(key_col),
+                "k",
                 F.col("m.us").alias("us"),
                 F.col("m.tp").alias("tp"),
             )
@@ -228,7 +200,7 @@ def read_markov_attribution(
             "touch_type string, p_full_ppm bigint, p_drop_ppm bigint,"
             " removal_effect_ppm bigint, credit_ppm bigint",
         )
-    last = _last_store(state_root, "k", num_state_buckets).read(spark)
+    last = _last_store(state_root, num_state_buckets).read(spark)
     tr = counts
     if last is not None:
         nulls = (

@@ -51,33 +51,14 @@ from pyspark.sql import functions as F
 from healthcare_api_spark.streaming.state import BucketedVersionedState
 
 
-def _merge_replace_fn(key_col: str):
-    def _merge(prev, d):
-        # batch users' state REPLACES wholesale (the walk consumed the
-        # seed); untouched users persist from prior versions
-        if prev is None:
-            return d
-        return (
-            prev.join(
-                d.select(F.col(key_col).alias("_dk")),
-                prev[key_col] == F.col("_dk"),
-                "left_anti",
-            ).unionByName(d)
-        )
-
-    return _merge
-
-
 def _state_store(
     state_root: str, key_col: str, nb: int
 ) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — each batch writes only
-    # its touched keys' new state rows; reads fold newest-delta-wins.
     return BucketedVersionedState(
         f"{state_root}/paths",
         key_cols=[key_col],
         num_buckets=nb,
-        merge_fn=_merge_replace_fn(key_col),
+        replace=True,
     )
 
 

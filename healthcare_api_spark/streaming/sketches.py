@@ -26,17 +26,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from healthcare_api_spark.operators.sketches import kmv_build, kmv_merge
-from healthcare_api_spark.streaming.state import BucketedVersionedState
-
-
-def _kmv_merge_fn(group_cols: list[str], k: int):
-    def _merge(prev, d):
-        if prev is None:
-            return d
-        return kmv_merge(prev, d, group_cols, k)
-
-    return _merge
+from healthcare_api_spark.operators.sketches import (
+    bloom_merge,
+    cms_merge,
+    hll_merge,
+    kmv_build,
+    kmv_merge,
+)
+from healthcare_api_spark.streaming.state import BucketedVersionedState, pairwise
 
 
 def _store(
@@ -45,15 +42,14 @@ def _store(
     num_state_buckets: int,
     k: int = 64,
 ):
-    # r13 (guide §6): constructor merge_fn → append-protocol commits
-    # (per-batch delta dirs, read-time fold, periodic compaction) —
-    # commit I/O ∝ |batch sketch|, not |accumulated state|. The reader
-    # must pass the SAME k the writer used (both default to 64).
+    # the read fold re-applies the bottom-k merge, so readers must pass
+    # the writer's k (both default to 64); the manifest enforces it
     return BucketedVersionedState(
         f"{state_root}/kmv",
         key_cols=list(group_cols),
         num_buckets=num_state_buckets,
-        merge_fn=_kmv_merge_fn(list(group_cols), k),
+        merge_fn=pairwise(kmv_merge, list(group_cols), k),
+        params={"k": k},
     )
 
 
@@ -102,16 +98,9 @@ def read_kmv_state(
 ) -> DataFrame | None:
     """Newest complete per-group sketch state (None before the first
     commit). ``k`` must match the writer's — the append-protocol fold
-    re-applies the bottom-k merge at read time."""
+    re-applies the bottom-k merge at read time, so a different ``k``
+    raises (the store manifest records the writer's)."""
     return _store(state_root, group_cols, num_state_buckets, k).read(spark)
-
-
-def _cms_merge_fn(prev, d):
-    from healthcare_api_spark.operators.sketches import cms_merge
-
-    if prev is None:
-        return d
-    return cms_merge(prev, d)
 
 
 def _cms_store(state_root: str, num_state_buckets: int):
@@ -119,7 +108,7 @@ def _cms_store(state_root: str, num_state_buckets: int):
         f"{state_root}/cms",
         key_cols=["r", "bucket"],
         num_buckets=num_state_buckets,
-        merge_fn=_cms_merge_fn,
+        merge_fn=pairwise(cms_merge),
     )
 
 
@@ -154,7 +143,7 @@ def streaming_cms(
     the plain batch SQL oracle. State size is ≤ depth×width cells
     forever; estimate with ``cms_lookup(read_cms_state(...), ...)``.
     """
-    from healthcare_api_spark.operators.sketches import cms_build, cms_merge
+    from healthcare_api_spark.operators.sketches import cms_build
 
     store = _cms_store(state_root, num_state_buckets)
 
@@ -179,23 +168,12 @@ def read_cms_state(
     return _cms_store(state_root, num_state_buckets).read(spark)
 
 
-def _hll_merge_fn(group_cols: list[str]):
-    def _merge(prev, d):
-        from healthcare_api_spark.operators.sketches import hll_merge
-
-        if prev is None:
-            return d
-        return hll_merge(prev, d, group_cols)
-
-    return _merge
-
-
 def _hll_store(state_root: str, group_cols: list[str], num_state_buckets: int):
     return BucketedVersionedState(
         f"{state_root}/hll",
         key_cols=[*group_cols, "reg"],
         num_buckets=num_state_buckets,
-        merge_fn=_hll_merge_fn(list(group_cols)),
+        merge_fn=pairwise(hll_merge, list(group_cols)),
     )
 
 
@@ -231,7 +209,7 @@ def streaming_hll(
     up with ``hll_rollup`` — sketch algebra works on the streaming
     state unchanged.
     """
-    from healthcare_api_spark.operators.sketches import hll_build, hll_merge
+    from healthcare_api_spark.operators.sketches import hll_build
 
     store = _hll_store(state_root, group_cols, num_state_buckets)
 
@@ -256,22 +234,12 @@ def read_hll_state(
     return _hll_store(state_root, group_cols, num_state_buckets).read(spark)
 
 
-def _bloom_merge_fn(prev, d):
-    from healthcare_api_spark.operators.sketches import bloom_merge
-
-    if prev is None:
-        return d
-    return bloom_merge(prev, d)
-
-
 def _bloom_store(state_root: str, num_state_buckets: int):
-    from healthcare_api_spark.streaming.state import BucketedVersionedState
-
     return BucketedVersionedState(
         f"{state_root}/bloom",
         key_cols=["word_idx"],
         num_buckets=num_state_buckets,
-        merge_fn=_bloom_merge_fn,
+        merge_fn=pairwise(bloom_merge),
     )
 
 
@@ -302,7 +270,7 @@ def streaming_bloom(
     ≤ m_bits/32 words forever; probe the live filter with
     ``bloom_probe(read_bloom_state(...), ...)``.
     """
-    from healthcare_api_spark.operators.sketches import bloom_build, bloom_merge
+    from healthcare_api_spark.operators.sketches import bloom_build
 
     store = _bloom_store(state_root, num_state_buckets)
 

@@ -32,35 +32,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.state import BucketedVersionedState
-
-
-def _merge_last(prev, d):
-    # key column introspected from the frame (everything except the
-    # fixed payload) so read-side folds need no key-name coupling
-    if prev is None:
-        return d
-    keys = [c for c in d.columns if c not in ("us", "s")]
-    return (
-        prev.unionByName(d)
-        .groupBy(*keys)
-        .agg(F.max(F.struct("us", "s")).alias("m"))
-        .select(
-            *keys,
-            F.col("m.us").alias("us"),
-            F.col("m.s").alias("s"),
-        )
-    )
+from healthcare_api_spark.streaming.state import BucketedVersionedState, last_merge
 
 
 def _state_store(state_root: str, key_col: str, nb: int) -> BucketedVersionedState:
-    # r13 (guide §6): append-protocol commits — per-batch delta dirs,
-    # read-time max-by-(us,s) fold, periodic compaction.
     return BucketedVersionedState(
         f"{state_root}/last",
         key_cols=[key_col],
         num_buckets=nb,
-        merge_fn=_merge_last,
+        merge_fn=last_merge("us", "s"),
     )
 
 

@@ -47,22 +47,40 @@ no read-own-output.
 Append + compact commit protocol (r13, guide §6). The full-snapshot
 protocol above rewrites every touched bucket's FULL merged state per
 micro-batch — commit I/O ∝ |touched-bucket state|, while only the
-delta is new. When the store is constructed with a ``merge_fn`` (a
-pure function ``(prev_state_or_None, delta) -> merged_state``), it
-switches to an append protocol whose commit I/O ∝ |delta|:
+delta is new. A store constructed with a declared merge kind switches
+to an append protocol whose commit I/O ∝ |delta|:
 
 - ``merge_batch`` writes the RAW delta as an immutable, bucketed
   ``d{batch_id}/`` directory (still ``_SUCCESS``-gated) — no pre-state
   read, no merge execution, no tombstones at commit time;
 - ``read`` resolves per bucket the newest complete base snapshot and
-  folds every newer complete delta through ``merge_fn`` in commit
-  order — the fold runs lazily inside the consumer's own job, exactly
-  reproducing ``state_n = merge_fn(state_{n-1}, delta_n)``;
+  reduces it together with EVERY newer complete delta in ONE pass:
+  all pending delta directories are one multi-path scan, unioned with
+  the base and reduced once — one aggregate exchange per read,
+  whatever the fold depth. The pass runs lazily inside the consumer's
+  own job;
 - every ``compact_every`` pending deltas, the next commit writes a
-  full ``v{batch_id}`` snapshot instead (the legacy path, tombstones
-  included), covering the batch's touched buckets AND every bucket
-  with a pending delta — which bounds the fold depth and keeps
+  full ``v{batch_id}`` snapshot instead (tombstones included) — the
+  same single pass over the base, the pending deltas and the batch's
+  own delta — covering the batch's touched buckets AND every bucket
+  with a pending delta, which bounds the fold depth and keeps
   retention working.
+
+The two merge kinds, and the contract each one's single pass relies on:
+
+- **associative reduce** (``merge_fn=``): a pure ``(prev_or_None,
+  delta) -> merged`` with ``merge_fn(a, b) == reduce(a ∪ b)`` per key —
+  sums, struct extremes, bottom-k, register max, bit-or, distinct. The
+  pass is ``merge_fn(base, ⋃ deltas)``; with no base it is
+  ``merge_fn(merge_fn(None, first), ⋃ other deltas)``, so a merge that
+  normalizes on its first fold still sees ``merge_fn(None, d)`` once.
+  ``sum_merge``, ``last_merge`` and ``pairwise`` build the common ones.
+- **replace, newest wins** (``replace=True``): a delta carries the
+  COMPLETE new rows of every key it holds. The pass tags each row with
+  its version (base −1, delta ``d{v}`` → v), keeps per key the rows of
+  the newest version holding it (one ``max(_v)`` window over the key),
+  then drops clear markers — rows whose ``clear_if_null`` column is
+  NULL, which a delta writes for a key whose state became empty.
 
 The compaction coverage rule is load-bearing: because a snapshot
 always folds in EVERY bucket that has any pending delta, a delta
@@ -73,16 +91,80 @@ delta resolution. Crash/replay semantics are unchanged: delta dirs
 are immutable and ``_SUCCESS``-gated, an incomplete ``d{batch}`` is
 invisible to the census and rewritten by the replay, and a replayed
 batch reading ``before_batch`` folds exactly the pre-batch versions.
+
+Store manifest: the first append-protocol commit writes
+``{path}/_store.json`` — merge kind, ``key_cols``, ``num_buckets`` and
+the kind's parameters (e.g. the kmv ``k``). Every ``read`` and
+``merge_batch`` compares it with the opening store's configuration and
+raises on a mismatch, so a reader built with the wrong ``k`` or bucket
+count fails instead of silently folding differently from the writer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from healthcare_api_spark.streaming.rollup import _fs_and_path
 
 _BUCKET_SEED = 42
+_MANIFEST = "_store.json"
+
+
+def _path_int(pattern: str):
+    """The integer ``pattern`` captures from each row's file path."""
+    return F.regexp_extract(F.col("_metadata.file_path"), pattern, 1).cast(
+        "long"
+    )
+
+
+def sum_merge(key_cols: list[str], col: str):
+    """Associative reduce: per-key BIGINT sum of ``col`` (transition
+    and token counts; ± deltas retract)."""
+
+    def _merge(prev, d):
+        if prev is None:
+            return d.select(*key_cols, F.col(col).cast("bigint").alias(col))
+        return (
+            prev.unionByName(d)
+            .groupBy(*key_cols)
+            .agg(F.sum(col).cast("bigint").alias(col))
+        )
+
+    return _merge
+
+
+def last_merge(*payload: str):
+    """Associative reduce: per key, the greatest ``struct(*payload)``
+    (a key's last event by (time, tiebreak)). Keys are every other
+    column, introspected from the frame."""
+
+    def _merge(prev, d):
+        if prev is None:
+            return d
+        keys = [c for c in d.columns if c not in payload]
+        return (
+            prev.unionByName(d)
+            .groupBy(*keys)
+            .agg(F.max(F.struct(*payload)).alias("_m"))
+            .select(*keys, *[F.col(f"_m.{c}").alias(c) for c in payload])
+        )
+
+    return _merge
+
+
+def pairwise(merge, *args):
+    """Associative reduce from a two-sketch merge ``merge(a, b, *args)``
+    (``cms_merge``, ``kmv_merge``, ``hll_merge``, ``bloom_merge``); the
+    first fold keeps the delta as it is."""
+
+    def _merge(prev, d):
+        return d if prev is None else merge(prev, d, *args)
+
+    return _merge
 
 
 class BucketedVersionedState:
@@ -97,6 +179,9 @@ class BucketedVersionedState:
         keep_versions: int = 2,
         merge_fn=None,
         compact_every: int = 8,
+        replace: bool = False,
+        clear_if_null: str | None = None,
+        params: dict | None = None,
     ) -> None:
         if num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")
@@ -104,15 +189,26 @@ class BucketedVersionedState:
             raise ValueError("keep_versions must be >= 1")
         if compact_every < 1:
             raise ValueError("compact_every must be >= 1")
+        if merge_fn is not None and replace:
+            raise ValueError("a store is either merge_fn (reduce) or replace")
+        if clear_if_null is not None and not replace:
+            raise ValueError("clear_if_null needs replace=True")
         self.path = path
         self.key_cols = list(key_cols)
         self.num_buckets = num_buckets
         self.keep_versions = keep_versions
-        # ``merge_fn`` set → append + compact protocol (r13, guide §6):
-        # commits write raw deltas, reads fold them; the SAME function
-        # must be passed by the writer and every reader of this path.
+        # a declared merge kind → append + compact protocol (see the
+        # module docstring); the writer and every reader of this path
+        # must declare the same kind — the manifest enforces it
         self.merge_fn = merge_fn
+        self.replace = replace
+        self.clear_if_null = clear_if_null
+        self.params = dict(params or {})
         self.compact_every = compact_every
+
+    @property
+    def _append(self) -> bool:
+        return self.merge_fn is not None or self.replace
 
     # -- bucket assignment (deterministic across sessions: xxhash64
     # with a fixed seed, the same family the batch stores use) --------
@@ -167,6 +263,45 @@ class BucketedVersionedState:
         out.update(deltas)
         return sorted(out)
 
+    # -- the store manifest -------------------------------------------
+    def _manifest(self) -> dict:
+        return {
+            "kind": "replace" if self.replace else "reduce",
+            "clear_if_null": self.clear_if_null,
+            "key_cols": self.key_cols,
+            "num_buckets": self.num_buckets,
+            "params": self.params,
+        }
+
+    def _sync_manifest(self, spark: SparkSession, create: bool) -> None:
+        """Raise when ``_store.json`` disagrees with this store's
+        configuration; with ``create`` (a commit), write it when it
+        does not exist yet."""
+        fs, _, jvm = _fs_and_path(spark, self.path)
+        mpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{_MANIFEST}")
+        mine = self._manifest()
+        if not fs.exists(mpath):
+            if create:
+                out = fs.create(mpath, True)
+                try:
+                    out.write(bytearray(json.dumps(mine).encode()))
+                finally:
+                    out.close()
+            return
+        stream = fs.open(mpath)
+        try:
+            theirs = json.loads(bytes(stream.readAllBytes()).decode())
+        finally:
+            stream.close()
+        diff = [k for k in mine if mine[k] != theirs.get(k)]
+        if diff:
+            raise ValueError(
+                f"state store {self.path} was written with "
+                + ", ".join(f"{k}={theirs.get(k)!r}" for k in diff)
+                + "; opened with "
+                + ", ".join(f"{k}={mine[k]!r}" for k in diff)
+            )
+
     # -- reads --------------------------------------------------------
     def _base_paths(
         self,
@@ -188,22 +323,94 @@ class BucketedVersionedState:
         return sorted(paths)
 
     def _read_base(self, spark: SparkSession, paths: list[str]):
-        # r12: no mergeSchema on the hot path — it launches a
-        # distributed footer-merge JOB per read (~5-8 reads per
-        # 2-batch lifecycle), and every version merge_batch writes
-        # carries ``_tomb``, so current-layout versions share one
-        # schema. Only a state dir written by pre-tombstone code can
-        # surface a footer without ``_tomb``; fall back to the merged
-        # read for exactly that case (merging yields _tomb=null there,
-        # which coalesce() keeps).
+        # every snapshot carries ``_tomb`` (the emptied-bucket markers
+        # ``_write_snapshot`` adds); deltas never do
+        if not paths:
+            return None
         df = spark.read.parquet(*paths)
-        if "_tomb" not in df.columns:
-            df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if "_tomb" in df.columns:
-            df = df.filter(
-                ~F.coalesce(F.col("_tomb"), F.lit(False))
-            ).drop("_tomb")
-        return df
+        return df.filter(~F.col("_tomb")).drop("_tomb")
+
+    @staticmethod
+    def _pending(
+        bases: dict[int, list[int]],
+        deltas: dict[int, list[int]],
+        before_batch: int | None,
+    ) -> list[int]:
+        """Complete deltas newer than the newest eligible base ANYWHERE
+        (older ones are fully shadowed for every bucket by the
+        coverage invariant), ascending."""
+        base_max = max(
+            (
+                v
+                for vs in bases.values()
+                for v in vs
+                if before_batch is None or v < before_batch
+            ),
+            default=-1,
+        )
+        return sorted(
+            v
+            for v in deltas
+            if v > base_max and (before_batch is None or v < before_batch)
+        )
+
+    def _fold(
+        self,
+        spark: SparkSession,
+        base: DataFrame | None,
+        versions: list[int],
+        buckets: set[int] | None,
+        batch: tuple[int, DataFrame] | None = None,
+    ) -> DataFrame | None:
+        """ONE reduce over the base, the pending delta ``versions``
+        (restricted to ``buckets``) and, for a compaction commit, the
+        batch's own ``(batch_id, delta)``."""
+        if not versions and batch is None:
+            return base
+
+        def scan(vs, schema=None):
+            # one scan over the version ROOTS: a path per bucket dir
+            # would pass Spark's 32-path threshold and list them in a
+            # distributed job; the bucket restriction filters on the
+            # file path instead, which prunes files at planning time
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            df = reader.option("recursiveFileLookup", "true").parquet(
+                *[f"{self.path}/d{v}" for v in vs]
+            )
+            if buckets is None:
+                return df
+            return df.filter(_path_int(r"/_pt=(\d+)/").isin(*buckets))
+
+        if self.replace:
+            parts = [] if base is None else [base.withColumn("_v", F.lit(-1))]
+            if versions:
+                vtag = _path_int(r"/d(\d+)/_pt=")
+                parts.append(scan(versions).withColumn("_v", vtag))
+            if batch is not None:
+                parts.append(batch[1].withColumn("_v", F.lit(batch[0])))
+            u = reduce(DataFrame.unionByName, parts)
+            if (base is not None) + len(versions) + (batch is not None) > 1:
+                newest = F.max("_v").over(Window.partitionBy(*self.key_cols))
+                u = u.withColumn("_vmax", newest).filter(
+                    F.col("_v") == F.col("_vmax")
+                ).drop("_vmax")
+            u = u.drop("_v")
+            if self.clear_if_null is not None:
+                u = u.filter(F.col(self.clear_if_null).isNotNull())
+            return u
+        schema = None
+        if base is None and versions:
+            first = scan(versions[:1])
+            base = self.merge_fn(None, first)
+            # every delta is the same writer's frame: skip re-inferring
+            # the schema (a footer-reading job) for the rest
+            schema, versions = first.schema, versions[1:]
+        rest = [scan(versions, schema)] if versions else []
+        if batch is not None:
+            rest.append(batch[1])
+        if not rest:
+            return base
+        return self.merge_fn(base, reduce(DataFrame.unionByName, rest))
 
     def read(
         self,
@@ -218,46 +425,28 @@ class BucketedVersionedState:
         compacting ``merge_batch`` commits) are filtered out here, so
         callers only ever see live state rows.
 
-        With a ``merge_fn`` (append protocol) the result is the FOLD of
-        the newest base snapshots and every newer complete delta in
-        commit order — lazily, inside the consumer's own jobs. The one
-        global cutoff (deltas newer than the newest base anywhere) is
-        exact because compaction always covers every pending-delta
-        bucket (see the module docstring)."""
+        With a declared merge kind (append protocol) the result is ONE
+        reduce over the newest base snapshots and every newer complete
+        delta — ``merge_fn(base, ⋃ deltas)`` for the associative kind,
+        newest-version-per-key minus clear markers for the replace
+        kind (module docstring) — so the read plan holds one aggregate
+        exchange whatever the fold depth, and runs lazily inside the
+        consumer's own jobs. The one global cutoff (deltas newer than
+        the newest base anywhere) is exact because compaction always
+        covers every pending-delta bucket. Raises when the store's
+        manifest disagrees with this store's configuration."""
         bases, deltas = self._census(spark)
-        paths = self._base_paths(bases, before_batch, buckets)
-        state = self._read_base(spark, paths) if paths else None
-        if self.merge_fn is None:
-            return state
-        # newest eligible base ANYWHERE — deltas at or below it are
-        # fully shadowed for every bucket by the coverage invariant
-        base_max = max(
-            (
-                v
-                for vs in bases.values()
-                for v in vs
-                if before_batch is None or v < before_batch
-            ),
-            default=-1,
+        base = self._read_base(
+            spark, self._base_paths(bases, before_batch, buckets)
         )
-        for vid in sorted(deltas):
-            if vid <= base_max:
-                continue
-            if before_batch is not None and vid >= before_batch:
-                continue
-            dpaths = [
-                f"{self.path}/d{vid}/_pt={b}"
-                for b in deltas[vid]
-                if buckets is None or b in buckets
-            ]
-            if not dpaths:
-                continue
-            d = spark.read.parquet(*dpaths)
-            # fn(None, d) — not d itself — so the fold reproduces the
-            # legacy protocol's v0 = merge_fn(None, delta) bit for bit
-            # (some merges normalize/cast on the first fold)
-            state = self.merge_fn(state, d)
-        return state
+        if not self._append:
+            return base
+        self._sync_manifest(spark, create=False)
+        pending = self._pending(bases, deltas, before_batch)
+        return self._fold(spark, base, [
+            v for v in pending  # an empty delta has no files to scan
+            if deltas[v] and (buckets is None or not buckets.isdisjoint(deltas[v]))
+        ], buckets)
 
     # -- the per-batch merge ------------------------------------------
     def touched_buckets(self, delta: DataFrame) -> set[int]:
@@ -288,12 +477,12 @@ class BucketedVersionedState:
         """Fold ``delta`` into the state. Idempotent: a complete
         ``v{batch_id}`` (or ``d{batch_id}``) short-circuits.
 
-        Legacy protocol (no constructor ``merge_fn``): read the touched
+        Legacy protocol (no declared merge kind): read the touched
         buckets' pre-batch state, ``merge_fn(prev_or_None, delta) ->
         DataFrame`` (full post-merge state for those buckets), write
         them as version ``v{batch_id}``, prune shadowed versions.
 
-        Append protocol (constructor ``merge_fn`` set, r13 guide §6):
+        Append protocol (a declared merge kind):
         write the RAW delta as bucketed ``d{batch_id}`` — one job, no
         pre-state read, commit I/O ∝ |delta|; ``read`` folds. Every
         ``compact_every`` pending deltas the commit compacts instead:
@@ -301,9 +490,11 @@ class BucketedVersionedState:
         every pending-delta bucket (the coverage invariant ``read``'s
         global cutoff relies on)."""
         spark = delta.sparkSession
+        if self._append:
+            self._sync_manifest(spark, create=True)
         if self.is_batch_complete(spark, batch_id):
             return
-        if self.merge_fn is not None:
+        if self._append:
             self._merge_batch_append(
                 delta, batch_id, touched, materialize
             )
@@ -313,26 +504,13 @@ class BucketedVersionedState:
                 "merge_batch needs a merge_fn (argument or constructor)"
             )
         if touched is None:
-            # r12 optimization: the delta plan used to run TWICE per
-            # batch — once inside ``touched_buckets`` (distinct bucket
-            # ids) and once again in the version write below. For the
-            # sketch/flow maintainers the delta is a full aggregation
-            # (window pass, tokenize+groupBy) over the micro-batch, so
-            # the doubled execution was the dominant avoidable cost
-            # (guide §1.2: remove duplicate passes before tuning
-            # anything else). Materialize it once; both consumers then
-            # read the cached blocks. Callers whose delta is already a
-            # cheap projection of a checkpointed frame opt out with
-            # ``materialize=False`` — for those the extra checkpoint
-            # job costs more than the second cached scan it saves
-            # (measured: st16 42→46 jobs, +2 s, before the opt-out).
+            # lazy checkpoint: the touched-bucket collect below is
+            # the first action, so ONE job materializes the delta AND
+            # fetches its bucket ids, and the version write re-reads the
+            # blocks instead of re-running the delta plan. Callers whose
+            # delta is a cheap projection of a checkpointed frame opt out
+            # (``materialize=False``: st16 measured 42→46 jobs without).
             if materialize:
-                # lazy checkpoint: the touched-bucket collect right
-                # below is the first action over the frame, so ONE job
-                # both materializes the checkpoint blocks and fetches
-                # the bucket ids (eager=True spent a separate job on
-                # materialization first); the version write then reads
-                # the same blocks with lineage truncated either way
                 delta = delta.localCheckpoint(eager=False)
             touched = self.touched_buckets(delta)
         if not touched:
@@ -402,10 +580,7 @@ class BucketedVersionedState:
         — fold everything into a full ``v{batch_id}`` snapshot."""
         spark = delta.sparkSession
         bases, deltas = self._census(spark)
-        base_max = max(
-            (v for vs in bases.values() for v in vs), default=-1
-        )
-        pending = [v for v in deltas if v > base_max]
+        pending = self._pending(bases, deltas, batch_id)
         if len(pending) < self.compact_every:
             if touched is not None and not touched:
                 return
@@ -431,10 +606,15 @@ class BucketedVersionedState:
             cover.update(deltas[v])
         if not cover:
             return
-        prev = self.read(spark, before_batch=batch_id, buckets=cover)
-        self._write_snapshot(
-            spark, self.merge_fn(prev, delta), cover, batch_id
+        base = self._read_base(
+            spark, self._base_paths(bases, batch_id, cover)
         )
+        # the pending deltas hold no bucket outside ``cover``
+        merged = self._fold(
+            spark, base, [v for v in pending if deltas[v]], None,
+            (batch_id, delta),
+        )
+        self._write_snapshot(spark, merged, cover, batch_id)
         self._prune(spark, batch_id)
 
     def _prune(self, spark: SparkSession, batch_id: int) -> None:

@@ -22,18 +22,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.state import BucketedVersionedState
+from healthcare_api_spark.streaming.state import BucketedVersionedState, sum_merge
 
 
 def _store(state_path: str, num_state_buckets: int) -> BucketedVersionedState:
-    # r13 (guide §6): constructor merge_fn → append-protocol commits;
-    # per-batch I/O is the batch vocabulary's counts, not the
-    # accumulated vocabulary, and reads fold the pending deltas.
     return BucketedVersionedState(
         state_path,
         key_cols=["tok"],
         num_buckets=num_state_buckets,
-        merge_fn=_merge_counts,
+        merge_fn=sum_merge(["tok"], "cnt"),
     )
 
 
@@ -45,16 +42,6 @@ def _batch_counts(batch_df: DataFrame, text_col: str) -> DataFrame:
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _merge_counts(existing: DataFrame | None, batch_counts: DataFrame) -> DataFrame:
-    if existing is None:
-        return batch_counts.select("tok", F.col("cnt").cast("bigint").alias("cnt"))
-    return (
-        existing.unionByName(batch_counts)
-        .groupBy("tok")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
 
 

@@ -7,7 +7,9 @@ streaming near-dup, KMV, and heavy-hitter state tables."""
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from healthcare_api_spark.streaming.state import BucketedVersionedState
@@ -1205,17 +1207,12 @@ def test_append_replace_merge_clears_keys_via_markers(spark, tmp_path):
     carries explicit clear rows removes a key wholesale at fold time,
     across both delta folds and compaction."""
 
-    def _replace(prev, d):
-        live = d.filter(F.col("cnt").isNotNull())
-        if prev is None:
-            return live
-        return prev.join(d.select("k"), "k", "left_anti").unionByName(live)
-
     store = BucketedVersionedState(
         str(tmp_path / "rstate"),
         key_cols=["k"],
         num_buckets=4,
-        merge_fn=_replace,
+        replace=True,
+        clear_if_null="cnt",
         compact_every=2,
     )
     store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0)
@@ -1257,3 +1254,180 @@ def test_append_store_reads_legacy_snapshot_dirs(spark, tmp_path):
         r["k"]: r["cnt"] for r in store.read(spark, before_batch=2).collect()
     }
     assert pre == {"a": 4, "b": 2}
+
+
+# ---------------------------------------------------------------------
+# One-pass reads: read() reduces the base and every pending delta in a
+# single aggregate. It must equal the sequential per-delta fold, and
+# its plan must not grow with the fold depth.
+# ---------------------------------------------------------------------
+
+
+def _replace_seq(prev, d):
+    """Sequential reference for the replace kind: a delta key's rows
+    replace the key's rows wholesale; NULL-cnt rows only clear."""
+    live = d.filter(F.col("cnt").isNotNull())
+    if prev is None:
+        return live
+    return prev.join(d.select("k"), "k", "left_anti").unionByName(live)
+
+
+def _seq_fold(merge, frames):
+    state = None
+    for d in frames:
+        state = merge(state, d)
+    return state
+
+
+def _rows(df):
+    return [] if df is None else sorted(
+        (r["k"], r["cnt"]) for r in df.collect()
+    )
+
+
+def _fold_frames(spark, kind):
+    frames = []
+    for i in range(10):
+        rows = [(f"key{(3 * i + j) % 11}", i + j) for j in range(3)]
+        if i == 0:
+            rows = []  # an empty delta: a complete dir with no bucket
+        elif kind == "replace":
+            rows += [("m", i), ("m", 100 + i)]  # a key with two rows
+            if i in (2, 4):
+                rows.append(("a", 7 * i))  # added, then re-added
+            if i == 3:
+                rows.append(("a", None))  # cleared in between
+            if i == 6:
+                rows.append(("key1", None))
+        frames.append(_mk(spark, rows))
+    return frames
+
+
+@pytest.mark.parametrize("kind", ["reduce", "replace"])
+def test_one_pass_read_equals_sequential_fold(spark, tmp_path, kind):
+    """Fold depths 1-8 without a base (the first delta empty), the
+    compaction commit (depth 0 over the new snapshot) and depth 1 over
+    it; replay views, bucket restriction and an incomplete delta — each
+    equal to folding the deltas one by one in commit order."""
+    path = str(tmp_path / kind)
+    if kind == "reduce":
+        store = BucketedVersionedState(
+            path, ["k"], num_buckets=4, merge_fn=_merge_counts
+        )
+        merge = _merge_counts
+    else:
+        store = BucketedVersionedState(
+            path, ["k"], num_buckets=4, replace=True, clear_if_null="cnt"
+        )
+        merge = _replace_seq
+    frames = _fold_frames(spark, kind)
+    for i, d in enumerate(frames):
+        store.merge_batch(d, i)
+        assert _rows(store.read(spark)) == _rows(
+            _seq_fold(merge, frames[: i + 1])
+        ), f"after batch {i}"
+    names = os.listdir(path)
+    assert "v8" in names and "d9" in names and "d8" not in names
+
+    for b in (0, 1, 4, 8, 9):  # replay views across the compaction
+        assert _rows(store.read(spark, before_batch=b)) == _rows(
+            _seq_fold(merge, frames[:b])
+        ), f"before batch {b}"
+    for before in (None, 6):
+        want = _seq_fold(merge, frames[: before or len(frames)])
+        assert _rows(
+            store.read(spark, before_batch=before, buckets={0, 2})
+        ) == _rows(want.filter(store.bucket_expr().isin(0, 2)))
+
+    # a crashed (no _SUCCESS) delta is invisible to the fold
+    frames[1].withColumn("_pt", store.bucket_expr()).write.partitionBy(
+        "_pt"
+    ).parquet(f"{path}/d10")
+    os.remove(f"{path}/d10/_SUCCESS")
+    assert _rows(store.read(spark)) == _rows(_seq_fold(merge, frames))
+
+
+_EXCHANGE = re.compile(r"(?<![A-Za-z])(?:Broadcast)?Exchange\b")
+
+
+def _final_plan_exchanges(df) -> int:
+    """Exchanges in the final adaptive plan (the text before its
+    ``== Initial Plan ==`` section) once ``df`` has run."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(_EXCHANGE.findall(plan.split("== Initial Plan ==")[0]))
+
+
+def test_read_plan_has_one_exchange_at_any_fold_depth(spark, tmp_path):
+    path = str(tmp_path / "plan")
+    # compact_every=1 commits a base snapshot at batch 1; the same path
+    # reopened with compact_every=8 then piles up pending deltas on it
+    seed = BucketedVersionedState(
+        path, ["k"], num_buckets=4, merge_fn=_merge_counts, compact_every=1
+    )
+    for i in range(2):
+        seed.merge_batch(_mk(spark, [(f"key{j}", 1) for j in range(8)]), i)
+    store = BucketedVersionedState(
+        path, ["k"], num_buckets=4, merge_fn=_merge_counts
+    )
+    for i in range(2, 10):
+        store.merge_batch(_mk(spark, [(f"key{i % 8}", i)]), i)
+        depth = sum(  # d0 predates the v1 base
+            1 for n in os.listdir(path) if n.startswith("d") and n != "d0"
+        )
+        if depth in (1, 8):
+            assert _final_plan_exchanges(store.read(spark)) == 1, depth
+    assert depth == 8 and "v1" in os.listdir(path)
+
+
+def test_session_flows_read_plan_exchanges(spark, tmp_path):
+    from datetime import datetime
+
+    from healthcare_api_spark.streaming.flows import (
+        flows_batch,
+        read_session_flows,
+    )
+
+    schema = "user_id long, ts timestamp, event_type string"
+    root = str(tmp_path / "flows")
+    for b in range(4):
+        rows = [
+            (u, datetime(2024, 1, 1, 10, 2 * b + i), f"s{(u + b + i) % 3}")
+            for u in range(5)
+            for i in range(2)
+        ]
+        flows_batch(spark.createDataFrame(rows, schema), b, root,
+                    "user_id", "ts", "event_type")
+    assert _final_plan_exchanges(read_session_flows(spark, root)) <= 2
+
+
+def test_store_manifest_rejects_mismatched_reader(spark, tmp_path):
+    """The first commit records kind, key columns, bucket count and the
+    kmv k; a reader opening the store differently raises instead of
+    folding with the wrong parameters."""
+    import json
+
+    from healthcare_api_spark.operators.sketches import kmv_build
+    from healthcare_api_spark.streaming.sketches import _store, read_kmv_state
+
+    root = str(tmp_path / "sk")
+    df = spark.createDataFrame(
+        [(g, u) for g in ("a", "b") for u in range(50)], "g string, u long"
+    )
+    _store(root, ["g"], 4, k=8).merge_batch(kmv_build(df, ["g"], "u", 8), 0)
+    with open(f"{root}/kmv/_store.json") as f:
+        manifest = json.load(f)
+    assert manifest["kind"] == "reduce" and manifest["params"] == {"k": 8}
+    assert manifest["key_cols"] == ["g"] and manifest["num_buckets"] == 4
+    assert read_kmv_state(
+        spark, root, ["g"], num_state_buckets=4, k=8
+    ).count() == 2
+    with pytest.raises(ValueError, match="k"):
+        read_kmv_state(spark, root, ["g"], num_state_buckets=4, k=64)
+    with pytest.raises(ValueError, match="num_buckets"):
+        read_kmv_state(spark, root, ["g"], num_state_buckets=16, k=8)
+    replace = BucketedVersionedState(
+        f"{root}/kmv", ["g"], num_buckets=4, replace=True, params={"k": 8}
+    )
+    with pytest.raises(ValueError, match="kind"):
+        replace.merge_batch(kmv_build(df, ["g"], "u", 8), 1)
