@@ -20,10 +20,10 @@ Cross-engine determinism rules used throughout:
 # query -> def line -> primary module (273 gates; regenerate: python tools/gen_toc.py)
 #   [a]
 #     a10_histogram                      L527    operators/relational
-#     a11_psi_drift                      L5929   operators/analytics
-#     a12_incremental_agg                L3436   operators/relational
-#     a13_equi_depth_hist                L3711   operators
-#     a14_co_occurrence                  L4028   operators/analytics
+#     a11_psi_drift                      L5932   operators/analytics
+#     a12_incremental_agg                L3439   operators/relational
+#     a13_equi_depth_hist                L3714   operators
+#     a14_co_occurrence                  L4031   operators/analytics
 #     a1_group_collect                   L421    (inline DataFrame ops)
 #     a2_distinct_set                    L416    operators/relational
 #     a3_count_accurate                  L406    operators/relational
@@ -34,36 +34,36 @@ Cross-engine determinism rules used throughout:
 #     a8_exact_percentiles               L476    (inline DataFrame ops)
 #     a9_pivot                           L466    operators/relational
 #   [d]
-#     d10_quality_canonical              L6047   operators/dedup
-#     d11_fuzzy_join                     L5983   operators/dedup
-#     d12_sorted_neighborhood            L3533   operators/dedup
-#     d13_passjoin                       L3739   operators/dedup
-#     d14_semdedup                       L3809   operators/dedup
-#     d15_incremental_cc                 L3835   operators/dedup
-#     d16_sparse_cosine                  L4119   operators/dedup
-#     d17_sentence_dedup                 L4138   operators/dedup
-#     d18_prefix_jaccard                 L5069   operators/dedup
-#     d19_paragraph_dedup                L6814   operators/dedup
-#     d1_dedup_exact                     L2253   operators/dedup
-#     d20_cdc_chunks                     L7257   operators/dedup
-#     d21_containment                    L5089   functions/text
-#     d2_dedup_minhash                   L2262   operators/dedup
-#     d3_simhash                         L2268   operators/dedup
-#     d4_ngram_jaccard                   L2274   operators/dedup
-#     d5_embed_neardup                   L2305   operators/dedup
-#     d6_neardup_clusters                L2280   operators/dedup
-#     d7_decontaminate                   L2593   operators/curation
-#     d8_boilerplate_lines               L2694   operators/curation
+#     d10_quality_canonical              L6050   operators/dedup
+#     d11_fuzzy_join                     L5986   operators/dedup
+#     d12_sorted_neighborhood            L3536   operators/dedup
+#     d13_passjoin                       L3742   operators/dedup
+#     d14_semdedup                       L3812   operators/dedup
+#     d15_incremental_cc                 L3838   operators/dedup
+#     d16_sparse_cosine                  L4122   operators/dedup
+#     d17_sentence_dedup                 L4141   operators/dedup
+#     d18_prefix_jaccard                 L5072   operators/dedup
+#     d19_paragraph_dedup                L6817   operators/dedup
+#     d1_dedup_exact                     L2256   operators/dedup
+#     d20_cdc_chunks                     L7260   operators/dedup
+#     d21_containment                    L5092   functions/text
+#     d2_dedup_minhash                   L2265   operators/dedup
+#     d3_simhash                         L2271   operators/dedup
+#     d4_ngram_jaccard                   L2277   operators/dedup
+#     d5_embed_neardup                   L2308   operators/dedup
+#     d6_neardup_clusters                L2283   operators/dedup
+#     d7_decontaminate                   L2596   operators/curation
+#     d8_boilerplate_lines               L2697   operators/curation
 #     d9_exact_substring                 L1265   operators/dedup
 #   [ds]
-#     ds1_stratified_sample              L2609   operators/curation
-#     ds2_pack_sequences                 L2642   operators/curation
-#     ds3_exact_k_sample                 L2619   operators/curation
-#     ds4_assign_splits                  L2632   operators/curation
-#     ds5_pack_global                    L2711   operators/curation
-#     ds6_weighted_sample                L6037   operators/curation
-#     ds7_interleave_sources             L3425   operators/curation
-#     ds8_token_mixture                  L4868   operators/curation
+#     ds1_stratified_sample              L2612   operators/curation
+#     ds2_pack_sequences                 L2645   operators/curation
+#     ds3_exact_k_sample                 L2622   operators/curation
+#     ds4_assign_splits                  L2635   operators/curation
+#     ds5_pack_global                    L2714   operators/curation
+#     ds6_weighted_sample                L6040   operators/curation
+#     ds7_interleave_sources             L3428   operators/curation
+#     ds8_token_mixture                  L4871   operators/curation
 #   [f]
 #     f10_f12_cast_append                L815    (inline DataFrame ops)
 #     f1_f2_string_clean                 L730    (inline DataFrame ops)
@@ -74,34 +74,34 @@ Cross-engine determinism rules used throughout:
 #     f8_json_extract                    L783    (inline DataFrame ops)
 #     f9_f11_struct_build                L792    (inline DataFrame ops)
 #   [fs]
-#     fs10_text_bm25                     L5776   (inline DataFrame ops)
-#     fs11_repeat_and                    L5427   (inline DataFrame ops)
-#     fs12_text_phrase                   L4398   (inline DataFrame ops)
-#     fs13_quantity_search               L3118   (inline DataFrame ops)
-#     fs14_composite_search              L3232   (inline DataFrame ops)
-#     fs15_uri_and_subsumption           L3166   (inline DataFrame ops)
-#     fs1_search_token                   L3101   (inline DataFrame ops)
-#     fs2_search_range                   L3109   (inline DataFrame ops)
-#     fs3_search_count                   L5794   (inline DataFrame ops)
-#     fs4_search_sort_page               L5800   (inline DataFrame ops)
-#     fs5_search_text                    L6312   (inline DataFrame ops)
-#     fs6_page_non_unique                L5811   (inline DataFrame ops)
-#     fs7_nested_has                     L6298   (inline DataFrame ops)
-#     fs8_chained_sort                   L6018   (inline DataFrame ops)
-#     fs9_filter_grammar                 L5757   (inline DataFrame ops)
+#     fs10_text_bm25                     L5779   (inline DataFrame ops)
+#     fs11_repeat_and                    L5430   (inline DataFrame ops)
+#     fs12_text_phrase                   L4401   (inline DataFrame ops)
+#     fs13_quantity_search               L3121   (inline DataFrame ops)
+#     fs14_composite_search              L3235   (inline DataFrame ops)
+#     fs15_uri_and_subsumption           L3169   (inline DataFrame ops)
+#     fs1_search_token                   L3104   (inline DataFrame ops)
+#     fs2_search_range                   L3112   (inline DataFrame ops)
+#     fs3_search_count                   L5797   (inline DataFrame ops)
+#     fs4_search_sort_page               L5803   (inline DataFrame ops)
+#     fs5_search_text                    L6315   (inline DataFrame ops)
+#     fs6_page_non_unique                L5814   (inline DataFrame ops)
+#     fs7_nested_has                     L6301   (inline DataFrame ops)
+#     fs8_chained_sort                   L6021   (inline DataFrame ops)
+#     fs9_filter_grammar                 L5760   (inline DataFrame ops)
 #   [g]
-#     g10_bfs_hops                       L6573   operators/graph
-#     g11_stress_centrality              L6596   operators/graph
-#     g12_sssp_weighted                  L6620   operators/graph
-#     g1_pagerank                        L3693   operators
-#     g2_triangle_count                  L5491   operators
-#     g3_kcore                           L5501   operators
-#     g4_label_propagation               L5475   operators
-#     g5_connected_components            L6323   operators/graph
-#     g6_adamic_adar                     L6342   operators/graph
-#     g7_personalized_pagerank           L6735   operators/graph
-#     g8_modularity                      L6529   operators/graph
-#     g9_hits                            L6550   operators/graph
+#     g10_bfs_hops                       L6576   operators/graph
+#     g11_stress_centrality              L6599   operators/graph
+#     g12_sssp_weighted                  L6623   operators/graph
+#     g1_pagerank                        L3696   operators
+#     g2_triangle_count                  L5494   operators
+#     g3_kcore                           L5504   operators
+#     g4_label_propagation               L5478   operators
+#     g5_connected_components            L6326   operators/graph
+#     g6_adamic_adar                     L6345   operators/graph
+#     g7_personalized_pagerank           L6738   operators/graph
+#     g8_modularity                      L6532   operators/graph
+#     g9_hits                            L6553   operators/graph
 #   [j]
 #     j1_broadcast_join                  L841    operators/relational
 #     j2_docs_by_group                   L868    operators/assay
@@ -112,38 +112,38 @@ Cross-engine determinism rules used throughout:
 #   [k]
 #     k1_sketch_distinct                 L1273   (inline DataFrame ops)
 #     k2_sketch_quantiles                L1284   (inline DataFrame ops)
-#     k3_cms_heavy_hitters               L3384   operators/sketches
-#     k4_kmv_distinct                    L3861   operators/sketches
-#     k5_sample_quantiles                L5725   operators/sketches
-#     k6_sketch_rollup                   L4426   operators/sketches
-#     k7_kmv_set_ops                     L3879   operators/sketches
-#     k8_hll_distinct                    L3895   operators/sketches
-#     k9_bloom_filter                    L6830   operators/sketches
+#     k3_cms_heavy_hitters               L3387   operators/sketches
+#     k4_kmv_distinct                    L3864   operators/sketches
+#     k5_sample_quantiles                L5728   operators/sketches
+#     k6_sketch_rollup                   L4429   operators/sketches
+#     k7_kmv_set_ops                     L3882   operators/sketches
+#     k8_hll_distinct                    L3898   operators/sketches
+#     k9_bloom_filter                    L6833   operators/sketches
 #   [l]
 #     l1_zorder_key                      L490    operators/layout
 #     l2_zorder_ranked                   L505    operators/layout
-#     l3_zorder3                         L5912   operators/layout
-#     l4_hilbert_key                     L3578   operators/layout
+#     l3_zorder3                         L5915   operators/layout
+#     l4_hilbert_key                     L3581   operators/layout
 #   [m]
-#     m10_gif_frames                     L3912   operators/multimodal
-#     m11_scene_cuts                     L5255   operators/multimodal
-#     m12_image_ahash                    L4466   operators/multimodal
-#     m13_image_neardup                  L4505   (inline DataFrame ops)
-#     m14_image_hamming_pairs            L4527   operators/dedup
-#     m15_image_hash_retrieval           L4593   operators/dedup
-#     m16_audio_vad_windows              L4645   operators/multimodal
-#     m17_image_patches                  L2783   operators/multimodal
-#     m18_keyframes                      L6666   operators/multimodal
-#     m19_patch_vote_neardup             L2824   operators/multimodal
-#     m1_attachment_meta                 L2725   (inline DataFrame ops)
-#     m2_image_decode                    L2738   operators/multimodal
-#     m3_audio_features                  L2877   operators/multimodal
-#     m4_video_frames                    L2926   operators/multimodal
-#     m5_gif_decode                      L3039   operators/multimodal
-#     m6_jpeg_decode                     L6150   operators/multimodal
-#     m7_progressive_jpeg                L6208   operators/multimodal
-#     m8_adam7_png                       L3281   operators/multimodal
-#     m9_palette_png                     L2983   operators/multimodal
+#     m10_gif_frames                     L3915   operators/multimodal
+#     m11_scene_cuts                     L5258   operators/multimodal
+#     m12_image_ahash                    L4469   operators/multimodal
+#     m13_image_neardup                  L4508   (inline DataFrame ops)
+#     m14_image_hamming_pairs            L4530   operators/dedup
+#     m15_image_hash_retrieval           L4596   operators/dedup
+#     m16_audio_vad_windows              L4648   operators/multimodal
+#     m17_image_patches                  L2786   operators/multimodal
+#     m18_keyframes                      L6669   operators/multimodal
+#     m19_patch_vote_neardup             L2827   operators/multimodal
+#     m1_attachment_meta                 L2728   (inline DataFrame ops)
+#     m2_image_decode                    L2741   operators/multimodal
+#     m3_audio_features                  L2880   operators/multimodal
+#     m4_video_frames                    L2929   operators/multimodal
+#     m5_gif_decode                      L3042   operators/multimodal
+#     m6_jpeg_decode                     L6153   operators/multimodal
+#     m7_progressive_jpeg                L6211   operators/multimodal
+#     m8_adam7_png                       L3284   operators/multimodal
+#     m9_palette_png                     L2986   operators/multimodal
 #   [p]
 #     p10_array_rename                   L661    (inline DataFrame ops)
 #     p11_rename_flat                    L683    (inline DataFrame ops)
@@ -159,114 +159,114 @@ Cross-engine determinism rules used throughout:
 #     q5_local_supplier                  L1391   (inline DataFrame ops)
 #     q6_forecast_revenue                L1415   (inline DataFrame ops)
 #   [s]
-#     s10_orc_roundtrip                  L6109   (inline DataFrame ops)
-#     s11_csv_roundtrip                  L5837   sources/ndjson
-#     s12_snapshot_diff                  L5943   sources/store
-#     s13_scd2_history                   L3335   operators/temporal
+#     s10_orc_roundtrip                  L6112   (inline DataFrame ops)
+#     s11_csv_roundtrip                  L5840   sources/ndjson
+#     s12_snapshot_diff                  L5946   sources/store
+#     s13_scd2_history                   L3338   operators/temporal
 #     s14_soft_delete                    L1453   sources/store
 #     s15_time_travel                    L1496   sources/store
 #     s1_s4_ndjson_roundtrip             L605    sources/ndjson
 #     s8_upsert_lastwin                  L1442   operators/relational
 #     s9_bucketed_upsert                 L1551   sources/store
 #   [st]
-#     st10_streaming_hll                 L7320   operators/sketches
-#     st11_streaming_ewma                L2114   streaming/smoothing
-#     st12_streaming_cep                 L2061   streaming/cep
-#     st13_streaming_attribution         L1770   streaming/attribution
-#     st14_streaming_multitouch          L1817   streaming/multitouch
-#     st15_streaming_multitouch_wm       L1859   streaming/multitouch_wm
-#     st16_streaming_flows_wm            L1910   streaming/flows_wm
-#     st17_streaming_markov              L1962   streaming/markov
-#     st18_streaming_attribution_wm      L2010   streaming/attribution_wm
-#     st1_tumbling_window                L2229   (inline DataFrame ops)
-#     st2_sessionize                     L2240   (inline DataFrame ops)
+#     st10_streaming_hll                 L7323   operators/sketches
+#     st11_streaming_ewma                L2117   streaming/smoothing
+#     st12_streaming_cep                 L2064   streaming/cep
+#     st13_streaming_attribution         L1773   streaming/attribution
+#     st14_streaming_multitouch          L1820   streaming/multitouch
+#     st15_streaming_multitouch_wm       L1862   streaming/multitouch_wm
+#     st16_streaming_flows_wm            L1913   streaming/flows_wm
+#     st17_streaming_markov              L1965   streaming/markov
+#     st18_streaming_attribution_wm      L2013   streaming/attribution_wm
+#     st1_tumbling_window                L2232   (inline DataFrame ops)
+#     st2_sessionize                     L2243   (inline DataFrame ops)
 #     st3_stream_agg_maintenance         L1593   streaming/upsert
-#     st4_stream_stream_join             L2174   streaming/joins
-#     st5_streaming_neardup              L1637   streaming/neardup
-#     st6_streaming_kmv                  L1680   operators/sketches
-#     st7_streaming_session_flows        L1728   streaming/flows
-#     st8_streaming_bloom                L6908   operators/sketches
-#     st9_streaming_cms                  L6999   operators/sketches
+#     st4_stream_stream_join             L2177   streaming/joins
+#     st5_streaming_neardup              L1640   streaming/neardup
+#     st6_streaming_kmv                  L1683   operators/sketches
+#     st7_streaming_session_flows        L1731   streaming/flows
+#     st8_streaming_bloom                L6911   operators/sketches
+#     st9_streaming_cms                  L7002   operators/sketches
 #   [t]
-#     t10_tfidf                          L2544   operators/textops
-#     t11_unigram_logprob                L2550   operators/textops
-#     t12_compression_ratio              L2557   operators/textops
-#     t13_chunk_tokens                   L6132   operators/textops
-#     t14_bpe_pairs                      L6141   operators/textops
-#     t15_fold_accents                   L5884   functions/text
-#     t16_inverted_index                 L3361   operators/textops
-#     t17_bigram_logprob                 L3417   operators/textops
-#     t18_phrase_search                  L5403   operators/textops
-#     t19_proximity_rank                 L4164   operators/textops
-#     t1_lang_id                         L2504   operators/textops
-#     t20_quality_logistic               L5354   operators/textops
-#     t21_zipf_fit                       L4985   operators/textops
-#     t22_repetition_filter              L4912   operators/textops
-#     t23_bpe_train                      L4931   operators/textops
-#     t24_perplexity_buckets             L4974   operators/textops
-#     t25_substring_search               L6980   operators/textops
-#     t26_gopher_rules                   L7087   operators/textops
-#     t27_bpe_encode                     L7153   operators/textops
-#     t28_multi_substring                L7190   operators/textops
-#     t29_char_entropy                   L7242   operators/textops
-#     t2_quality_score                   L2509   operators/textops
-#     t30_hashed_classifier              L7298   operators/textops
-#     t31_ngram_novelty                  L7226   operators/textops
-#     t32_readability                    L7211   operators/textops
-#     t33_rake_keywords                  L6512   operators/textops
-#     t34_blocklist_screen               L6360   operators/curation
+#     t10_tfidf                          L2547   operators/textops
+#     t11_unigram_logprob                L2553   operators/textops
+#     t12_compression_ratio              L2560   operators/textops
+#     t13_chunk_tokens                   L6135   operators/textops
+#     t14_bpe_pairs                      L6144   operators/textops
+#     t15_fold_accents                   L5887   functions/text
+#     t16_inverted_index                 L3364   operators/textops
+#     t17_bigram_logprob                 L3420   operators/textops
+#     t18_phrase_search                  L5406   operators/textops
+#     t19_proximity_rank                 L4167   operators/textops
+#     t1_lang_id                         L2507   operators/textops
+#     t20_quality_logistic               L5357   operators/textops
+#     t21_zipf_fit                       L4988   operators/textops
+#     t22_repetition_filter              L4915   operators/textops
+#     t23_bpe_train                      L4934   operators/textops
+#     t24_perplexity_buckets             L4977   operators/textops
+#     t25_substring_search               L6983   operators/textops
+#     t26_gopher_rules                   L7090   operators/textops
+#     t27_bpe_encode                     L7156   operators/textops
+#     t28_multi_substring                L7193   operators/textops
+#     t29_char_entropy                   L7245   operators/textops
+#     t2_quality_score                   L2512   operators/textops
+#     t30_hashed_classifier              L7301   operators/textops
+#     t31_ngram_novelty                  L7229   operators/textops
+#     t32_readability                    L7214   operators/textops
+#     t33_rake_keywords                  L6515   operators/textops
+#     t34_blocklist_screen               L6363   operators/curation
 #     t35_vocab_gini                     L987    operators/textops
-#     t3_token_counts                    L2514   operators/textops
-#     t4_fingerprints                    L2519   operators/textops
-#     t5_corpus_stats                    L2524   operators/textops
-#     t6_repetition                      L2585   operators/curation
-#     t7_redact_pii                      L2670   operators/curation
-#     t8_quality_gate                    L2650   operators/curation
-#     t9_top_tokens                      L2538   operators/textops
+#     t3_token_counts                    L2517   operators/textops
+#     t4_fingerprints                    L2522   operators/textops
+#     t5_corpus_stats                    L2527   operators/textops
+#     t6_repetition                      L2588   operators/curation
+#     t7_redact_pii                      L2673   operators/curation
+#     t8_quality_gate                    L2653   operators/curation
+#     t9_top_tokens                      L2541   operators/textops
 #   [u]
-#     u10_leakage_safe_splits            L7495   operators/graph
-#     u11_dedup_eval                     L7456   operators/dedup
-#     u12_lsh_eval                       L6713   operators/dedup
-#     u13_entity_resolution              L6387   operators/dedup
-#     u14_dataloader_pipeline            L6446   operators/curation
-#     u15_kcenter_coreset                L4766   operators/similarity
-#     u16_temperature_mixture            L4889   operators/curation
-#     u1_canonical_urls                  L2565   operators/curation
-#     u2_domain_stats                    L3658   operators/curation
-#     u3_url_dedup_groups                L4091   operators/curation
-#     u4_domain_quota                    L3673   operators/textops
-#     u6_winsorize                       L5117   operators/curation
-#     u7_winsorize_pct                   L5136   operators
-#     u8_importance_weights              L7135   operators/curation
-#     u9_curation_pipeline               L7395   operators/textops
+#     u10_leakage_safe_splits            L7498   operators/graph
+#     u11_dedup_eval                     L7459   operators/dedup
+#     u12_lsh_eval                       L6716   operators/dedup
+#     u13_entity_resolution              L6390   operators/dedup
+#     u14_dataloader_pipeline            L6449   operators/curation
+#     u15_kcenter_coreset                L4769   operators/similarity
+#     u16_temperature_mixture            L4892   operators/curation
+#     u1_canonical_urls                  L2568   operators/curation
+#     u2_domain_stats                    L3661   operators/curation
+#     u3_url_dedup_groups                L4094   operators/curation
+#     u4_domain_quota                    L3676   operators/textops
+#     u6_winsorize                       L5120   operators/curation
+#     u7_winsorize_pct                   L5139   operators
+#     u8_importance_weights              L7138   operators/curation
+#     u9_curation_pipeline               L7398   operators/textops
 #   [v]
-#     v10_prefix_rerank                  L4702   operators/similarity
-#     v11_ann_recall                     L5155   operators/similarity
-#     v12_ivf_pruned                     L2430   operators/similarity
-#     v13_lsh_pruned                     L2338   operators/similarity
-#     v14_rank_metrics                   L7065   operators/similarity
-#     v15_kmeans_stats                   L7173   operators/similarity
-#     v16_ivfpq_topk                     L7279   operators/similarity
-#     v17_filtered_ann                   L7367   operators/similarity
-#     v18_mmr_topk                       L4719   operators/similarity
-#     v19_binary_ann                     L4785   operators/similarity
-#     v1_ann_topk                        L2319   operators/similarity
-#     v20_rag_pipeline                   L4846   operators/similarity
-#     v21_l2_range_join                  L4738   operators/similarity
-#     v22_ivf_batch_probe                L2455   operators/similarity
-#     v2_ann_lsh                         L2326   operators/similarity
-#     v3_ivf_topk                        L2387   operators/similarity
-#     v4_pca_project                     L2484   operators/similarity
-#     v5_knn_join                        L5972   operators/similarity
-#     v6_sq8_topk                        L3568   operators/similarity
-#     v7_pq_topk                         L4011   operators/similarity
-#     v8_pooled_embeddings               L5375   operators/similarity
-#     v9_hybrid_rrf                      L4801   operators/similarity
+#     v10_prefix_rerank                  L4705   operators/similarity
+#     v11_ann_recall                     L5158   operators/similarity
+#     v12_ivf_pruned                     L2433   operators/similarity
+#     v13_lsh_pruned                     L2341   operators/similarity
+#     v14_rank_metrics                   L7068   operators/similarity
+#     v15_kmeans_stats                   L7176   operators/similarity
+#     v16_ivfpq_topk                     L7282   operators/similarity
+#     v17_filtered_ann                   L7370   operators/similarity
+#     v18_mmr_topk                       L4722   operators/similarity
+#     v19_binary_ann                     L4788   operators/similarity
+#     v1_ann_topk                        L2322   operators/similarity
+#     v20_rag_pipeline                   L4849   operators/similarity
+#     v21_l2_range_join                  L4741   operators/similarity
+#     v22_ivf_batch_probe                L2458   operators/similarity
+#     v2_ann_lsh                         L2329   operators/similarity
+#     v3_ivf_topk                        L2390   operators/similarity
+#     v4_pca_project                     L2487   operators/similarity
+#     v5_knn_join                        L5975   operators/similarity
+#     v6_sq8_topk                        L3571   operators/similarity
+#     v7_pq_topk                         L4014   operators/similarity
+#     v8_pooled_embeddings               L5378   operators/similarity
+#     v9_hybrid_rrf                      L4804   operators/similarity
 #   [w]
-#     w10_rolling_distinct               L4050   (inline DataFrame ops)
-#     w11_rolling_quantiles              L5298   operators
-#     w12_sessionize                     L5053   operators/analytics
-#     w13_session_flows                  L5174   operators/analytics
+#     w10_rolling_distinct               L4053   (inline DataFrame ops)
+#     w11_rolling_quantiles              L5301   operators
+#     w12_sessionize                     L5056   operators/analytics
+#     w13_session_flows                  L5177   operators/analytics
 #     w14_sequence_match                 L1179   operators/analytics
 #     w15_touch_attribution              L1002   operators/analytics
 #     w16_touch_lag                      L1019   operators/analytics
@@ -282,34 +282,34 @@ Cross-engine determinism rules used throughout:
 #     w3_rank_topn_per_group             L1318   (inline DataFrame ops)
 #     w5_funnel                          L975    operators/analytics
 #     w6_cohort_retention                L1206   operators/analytics
-#     w7_hopping_window                  L6063   streaming/upsert
-#     w8_time_weighted_avg               L3721   operators
-#     w9_ohlc_bars                       L3970   operators/similarity
+#     w7_hopping_window                  L6066   streaming/upsert
+#     w8_time_weighted_avg               L3724   operators
+#     w9_ohlc_bars                       L3973   operators/similarity
 #   [x]
-#     x10_rolling_median                 L3638   operators
-#     x11_ewma                           L5520   operators
-#     x12_cusum_changepoint              L5216   operators
-#     x13_matrix_profile                 L4993   operators
-#     x14_sax_symbols                    L5190   operators/temporal
-#     x15_sax_motifs                     L5026   operators/temporal
-#     x16_sax_similarity                 L6881   operators/temporal
-#     x17_holt_linear                    L5543   operators/temporal
-#     x18_acf                            L3593   operators/temporal
-#     x19_holt_winters                   L5572   operators/temporal
+#     x10_rolling_median                 L3641   operators
+#     x11_ewma                           L5523   operators
+#     x12_cusum_changepoint              L5219   operators
+#     x13_matrix_profile                 L4996   operators
+#     x14_sax_symbols                    L5193   operators/temporal
+#     x15_sax_motifs                     L5029   operators/temporal
+#     x16_sax_similarity                 L6884   operators/temporal
+#     x17_holt_linear                    L5546   operators/temporal
+#     x18_acf                            L3596   operators/temporal
+#     x19_holt_winters                   L5575   operators/temporal
 #     x1_asof_join                       L912    operators/temporal
-#     x21_dtw_band                       L5605   operators/temporal
-#     x22_binseg_changepoints            L5641   operators/temporal
-#     x23_forecast_mase                  L5669   operators/temporal
-#     x24_series_features                L5699   operators/temporal
-#     x25_strength_features              L3464   operators/temporal
+#     x21_dtw_band                       L5608   operators/temporal
+#     x22_binseg_changepoints            L5644   operators/temporal
+#     x23_forecast_mase                  L5672   operators/temporal
+#     x24_series_features                L5702   operators/temporal
+#     x25_strength_features              L3467   operators/temporal
 #     x2_interval_join                   L929    operators/temporal
 #     x3_hierarchical_rollup             L952    operators/rollup
 #     x4_gapfill                         L1221   operators/temporal
 #     x5_mad_anomalies                   L1252   operators/temporal
-#     x6_ltob_downsample                 L5866   operators/temporal
-#     x7_lttb_downsample                 L6081   operators/temporal
-#     x8_seasonal_decompose              L3496   operators
-#     x9_series_correlation              L3617   operators
+#     x6_ltob_downsample                 L5869   operators/temporal
+#     x7_lttb_downsample                 L6084   operators/temporal
+#     x8_seasonal_decompose              L3499   operators
+#     x9_series_correlation              L3620   operators
 # === end TOC ===
 
 from __future__ import annotations
@@ -1593,14 +1593,17 @@ def q_s9_bucketed_upsert(spark, sf_dir):
 def q_st3_stream_agg_maintenance(spark, sf_dir):
     """A REAL Structured-Streaming run inside the correctness gate: the
     events table is re-written as two micro-batch files, streamed with
-    readStream + foreachBatch into parquet agg state via
-    merge_agg_state, and the FINAL STATE is the result — hash-checked
+    readStream + foreachBatch into the agg state store (reduce kind
+    merge_agg_state), and the FINAL STATE is the result — hash-checked
     against a full batch recompute in SQL. Proves the streaming MV
     path end-to-end, not just its batch twin."""
     import shutil
     import tempfile
 
-    from healthcare_api_spark.streaming.upsert import streaming_agg_maintenance
+    from healthcare_api_spark.streaming.upsert import (
+        read_agg_state,
+        streaming_agg_maintenance,
+    )
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select(
@@ -1620,7 +1623,7 @@ def q_st3_stream_agg_maintenance(spark, sf_dir):
         q.processAllAvailable()
         q.stop()
         out = (
-            spark.read.parquet(state)
+            read_agg_state(spark, state, ["user_id"], specs)
             .select(
                 "user_id",
                 F.round("value_sum", 4).alias("value_sum"),

@@ -31,6 +31,26 @@ class RollupTier:
     df: DataFrame
 
 
+def _merged_partials():
+    """Re-aggregate tier partials: counts and sums add, min/max
+    combine."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("sum_v").alias("sum_v"),
+        F.min("min_v").alias("min_v"),
+        F.max("max_v").alias("max_v"),
+    ]
+
+
+def merge_tiers(a: DataFrame, b: DataFrame,
+                group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Merge two tiers of one level bucket by bucket — the associative
+    reduce behind ``refresh_tier`` and the streaming tier store."""
+    return a.unionByName(b).groupBy("bucket", *group_cols).agg(
+        *_merged_partials()
+    )
+
+
 def hierarchical_rollup(
     events: DataFrame,
     ts_col: str,
@@ -75,12 +95,7 @@ def hierarchical_rollup(
         src = prev_nestable
         tier = src.groupBy(
             F.date_trunc(_TRUNC[lv], F.col("bucket")).alias("bucket"), *group_cols
-        ).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
+        ).agg(*_merged_partials())
         tiers[lv] = tier
         if lv != "week":
             prev_nestable = tier
@@ -99,14 +114,7 @@ def refresh_tier(existing: DataFrame, new_events: DataFrame, ts_col: str,
     (checkpointed foreachBatch provides it).
     """
     delta = hierarchical_rollup(new_events, ts_col, value_col, [level], group_cols)[level]
-    keys = ["bucket", *group_cols]
-    merged = existing.unionByName(delta)
-    return merged.groupBy(*keys).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    )
+    return merge_tiers(existing, delta, group_cols)
 
 
 def rollup_union(tiers: dict[str, DataFrame]) -> DataFrame:

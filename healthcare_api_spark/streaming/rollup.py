@@ -1,81 +1,55 @@
 """Streaming continuous-aggregate maintenance (SURVEY.md §2.9 + the
 hypertable-rollup custom operator, streaming flavor).
 
-``streaming_rollup_refresh`` wires ``operators.rollup.refresh_tier`` into
-a checkpointed ``foreachBatch``: each micro-batch aggregates ONLY its own
-events at the tier's resolution and merge-adds them into the persisted
-tier — cost per batch is O(batch + touched buckets), never a re-scan of
-history.
+``streaming_rollup_refresh`` runs the tier refresh in a checkpointed
+``foreachBatch``: each micro-batch aggregates ONLY its own events at
+the tier's resolution (``hierarchical_rollup``) and commits that
+partial tier as a delta to a ``BucketedVersionedState`` keyed by
+``(bucket, *group_cols)``. The store's associative reduce is
+``merge_tiers`` — the same cnt/sum add and min/max combine
+``refresh_tier`` applies — so commit cost is O(batch), never a re-scan
+of history, and ``read_tier`` folds the committed partials into the
+current tier in one pass.
 
-Exactly-once semantics: ``foreachBatch`` is at-least-once (a batch can
-replay after a failure between the state write and the offset commit),
-so the merge-add must be idempotent per ``batch_id``. The tier is
-persisted as immutable versioned snapshots ``<tier_path>/v<batch_id>``:
-
-- a replayed batch whose complete snapshot already exists is SKIPPED;
-- a replayed batch with a partial snapshot (no ``_SUCCESS``) recomputes
-  the merge from the newest complete snapshot STRICTLY OLDER than the
-  batch and overwrites — same inputs, same output, no double count;
-- a crash mid-write never corrupts the prior snapshot (different dir).
-
-This is the standard snapshot-isolation pattern a MERGE-capable table
-format (Delta/Iceberg) gives for free at production scale; plain parquet
-needs it spelled out. ``read_tier`` resolves the newest complete
-snapshot; old snapshots beyond ``keep_versions`` are pruned after each
-successful commit (always retaining enough history for in-flight
-replays).
+Exactly-once semantics come from the store: ``foreachBatch`` is
+at-least-once, a replayed batch whose delta is complete is skipped, a
+crashed one (no ``_SUCCESS``) is invisible to reads and rewritten by
+the replay, and a commit never reads the tier it extends — so a
+corrupt committed version surfaces as a read error instead of being
+silently replaced by one batch's totals.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
-from healthcare_api_spark.operators.rollup import refresh_tier
+from healthcare_api_spark.operators.rollup import hierarchical_rollup, merge_tiers
+from healthcare_api_spark.streaming.state import BucketedVersionedState, pairwise
 
 _TIER_SCHEMA = "bucket timestamp, cnt bigint, sum_v double, min_v double, max_v double"
-_VERSION_RE = re.compile(r"^v(\d+)$")
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
-
-
-def _complete_versions(spark: SparkSession, tier_path: str) -> list[int]:
-    """batch_ids of snapshots that finished writing (``_SUCCESS`` present),
-    ascending. Listing goes through the Hadoop FileSystem API so the same
-    code addresses local paths and object stores."""
-    fs, hpath, jvm = _fs_and_path(spark, tier_path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for status in fs.listStatus(hpath):
-        m = _VERSION_RE.match(status.getPath().getName())
-        if m and fs.exists(jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _empty_tier(spark: SparkSession, group_cols: tuple[str, ...]) -> DataFrame:
-    schema = _TIER_SCHEMA
-    for g in group_cols:
-        schema += f", {g} string"
-    return spark.createDataFrame([], schema)
+def _store(
+    tier_path: str, group_cols: tuple[str, ...], keep_versions: int = 2
+) -> BucketedVersionedState:
+    return BucketedVersionedState(
+        tier_path,
+        key_cols=["bucket", *group_cols],
+        keep_versions=keep_versions,
+        merge_fn=pairwise(merge_tiers, group_cols),
+    )
 
 
 def read_tier(
     spark: SparkSession, tier_path: str, group_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Read the newest complete snapshot of a streaming-maintained tier
-    (empty frame with the tier schema if none committed yet)."""
-    versions = _complete_versions(spark, tier_path)
-    if not versions:
-        return _empty_tier(spark, group_cols)
-    return spark.read.parquet(f"{tier_path}/v{versions[-1]}")
+    """The current streaming-maintained tier (empty frame with the tier
+    schema if no batch committed yet)."""
+    tier = _store(tier_path, group_cols).read(spark)
+    if tier is not None:
+        return tier
+    schema = _TIER_SCHEMA + "".join(f", {g} string" for g in group_cols)
+    return spark.createDataFrame([], schema)
 
 
 def apply_rollup_batch(
@@ -88,67 +62,11 @@ def apply_rollup_batch(
     group_cols: tuple[str, ...] = (),
     keep_versions: int = 2,
 ) -> None:
-    """Idempotently merge one micro-batch into the versioned tier.
-
-    Safe under foreachBatch's at-least-once replay: a batch whose
-    complete snapshot exists is skipped; a partial snapshot (crash
-    mid-write, no ``_SUCCESS``) is recomputed from the newest complete
-    snapshot strictly older than ``batch_id`` and overwritten — same
-    inputs, same output, no double count.
-    """
-    apply_versioned_merge(
-        batch_df,
-        batch_id,
-        tier_path,
-        lambda existing, batch: refresh_tier(
-            existing, batch, ts_col, value_col, level, group_cols
-        ),
-        lambda spark: _empty_tier(spark, group_cols),
-        keep_versions=keep_versions,
-    )
-
-
-def apply_versioned_merge(
-    batch_df: DataFrame,
-    batch_id: int,
-    path: str,
-    merge_fn,
-    empty_fn,
-    keep_versions: int = 2,
-) -> None:
-    """Generic exactly-once micro-batch accumulator: merge ``batch_df``
-    into the versioned state at ``path`` via ``merge_fn(existing,
-    batch) -> DataFrame``, with the same snapshot/_SUCCESS/replay
-    semantics as the rollup tier (this is the shared skeleton —
-    continuous aggregates, heavy-hitter counts, any add-merge state).
-    ``empty_fn(spark)`` supplies the empty state frame for the first
-    batch."""
-    from pyspark.errors import AnalysisException
-
-    spark = batch_df.sparkSession
-    versions = _complete_versions(spark, path)
-    if versions and versions[-1] >= batch_id:
-        return  # replayed batch already fully applied — idempotent skip
-    prior = [v for v in versions if v < batch_id]
-    if prior:
-        try:
-            existing = spark.read.parquet(f"{path}/v{prior[-1]}")
-        except AnalysisException as e:
-            # Only a vanished path may fall back to empty; any other
-            # read failure (corrupt footer, permissions) must NOT
-            # silently replace accumulated history with one batch.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            existing = empty_fn(spark)
-    else:
-        existing = empty_fn(spark)
-    merged = merge_fn(existing, batch_df)
-    merged.write.mode("overwrite").parquet(f"{path}/v{batch_id}")
-    # prune snapshots older than the retained window (never the one
-    # just written, and only after its _SUCCESS is down)
-    for v in prior[: max(0, len(prior) - (keep_versions - 1))]:
-        fs, _, jvm = _fs_and_path(spark, path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/v{v}"), True)
+    """Idempotently commit one micro-batch's partial tier: replaying a
+    committed ``batch_id`` is a no-op, so foreachBatch's at-least-once
+    delivery never double counts."""
+    delta = hierarchical_rollup(batch_df, ts_col, value_col, [level], group_cols)[level]
+    _store(tier_path, group_cols, keep_versions).merge_batch(delta, batch_id)
 
 
 def streaming_rollup_refresh(
@@ -161,18 +79,9 @@ def streaming_rollup_refresh(
     checkpoint: str | None = None,
     keep_versions: int = 2,
 ):
-    """readStream → per-batch incremental tier refresh persisted as
-    versioned snapshots under ``tier_path``. Returns the StreamingQuery.
-
-    Snapshot-per-batch also removes the read-own-input hazard the old
-    in-place overwrite had (the merge reads ``v<prev>`` and writes
-    ``v<batch_id>`` — disjoint paths, no materialization barrier needed).
-    At production scale the same ``refresh_tier`` merge runs against a
-    MERGE-capable table (Delta/Iceberg) or the bucketed copy-on-write
-    store, where the rewrite is bounded to touched buckets — tier tables
-    are orders of magnitude smaller than raw events, so even the full
-    rewrite is cheap relative to the batch scan it replaces.
-    """
+    """readStream → per-batch incremental tier refresh persisted in the
+    state store under ``tier_path``; read it with ``read_tier``.
+    Returns the StreamingQuery."""
     def _refresh(batch_df: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(
             batch_df, batch_id, tier_path, ts_col, value_col, level,

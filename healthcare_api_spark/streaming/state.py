@@ -1,72 +1,33 @@
 """Bucketed, versioned micro-batch state store (VERDICT r7 #3).
 
-The r7 streaming operators (near-dup admission, KMV fold, heavy-hitter
-counts) kept their cross-batch state as ONE parquet table rewritten
-whole every micro-batch. Correct — but the per-batch IO was
-O(|state| + |delta|), and at a 100 TB corpus the band-owner state is
-corpus-scale: rewriting it per batch is the bottleneck. Worse, the
-in-place ``mode("overwrite")`` deleted the only copy before the new
-files committed (a mid-write crash lost all state) and a foreachBatch
-REPLAY after a partial failure read its own output (ADVICE r7: every
-doc then collided with itself).
-
-This store fixes all three with the two patterns the repo already
-owns, composed:
-
-- **bucketing** (``BucketedResourceStore.upsert``, sources/store.py:140)
-  — state rows live in ``num_buckets`` hash-of-key buckets; a batch
-  reads and rewrites ONLY the buckets its delta touches;
-- **immutable versioned snapshots** (``apply_versioned_merge``,
-  streaming/rollup.py:111) — each batch writes a NEW directory
-  ``v{batch_id}/`` containing just its touched buckets, with Spark's
-  ``_SUCCESS`` marking completeness. Prior versions are never mutated,
-  so a crash mid-write loses nothing and a replay reads the exact
-  pre-batch state (versions strictly older than the replayed batch).
+Every cross-batch state table in ``streaming/`` (session flows, sketch
+states, attribution touch sets, the rollup tier, st3's aggregate
+partials) lives in one store with one commit protocol: append + compact.
+Keyed rows sit in ``num_buckets`` hash-of-key buckets, and each
+micro-batch commits a new immutable directory — prior ones are never
+mutated, so a mid-write crash loses nothing and a foreachBatch replay
+never reads its own output.
 
 Layout::
 
-    {path}/v{batch_id}/_pt={bucket}/part-*.parquet
-    {path}/v{batch_id}/_SUCCESS
+    {path}/d{batch_id}/_pt={bucket}/part-*.parquet   raw batch delta
+    {path}/v{batch_id}/_pt={bucket}/part-*.parquet   compacted snapshot
+    {path}/{d,v}{batch_id}/_SUCCESS                  completeness marker
+    {path}/_store.json                               the store manifest
 
-The CURRENT state of bucket b is its newest complete version's
-``_pt=b`` directory (a version's bucket dir always holds that bucket's
-FULL merged state, because the merge folds the previous copy in).
-Reads resolve bucket → newest-version once from a directory listing
-(O(versions × buckets) driver-side names, never data) and issue one
-multi-path parquet scan. Retention is per BUCKET: an old version is
-deleted only when every bucket in it has ``keep_versions`` newer
-complete copies — so the pre-batch state needed by an in-flight replay
-always survives pruning.
-
-Exactly-once contract (same as the rollup tier): foreachBatch is
-at-least-once; ``merge_batch`` skips a batch whose complete snapshot
-already exists, and a replayed/crashed batch recomputes from versions
-strictly older than it — same inputs, same output, no double count and
-no read-own-output.
-
-Append + compact commit protocol (r13, guide §6). The full-snapshot
-protocol above rewrites every touched bucket's FULL merged state per
-micro-batch — commit I/O ∝ |touched-bucket state|, while only the
-delta is new. A store constructed with a declared merge kind switches
-to an append protocol whose commit I/O ∝ |delta|:
-
-- ``merge_batch`` writes the RAW delta as an immutable, bucketed
-  ``d{batch_id}/`` directory (still ``_SUCCESS``-gated) — no pre-state
-  read, no merge execution, no tombstones at commit time;
+- ``merge_batch`` writes the RAW delta as ``d{batch_id}`` — no
+  pre-state read, commit I/O ∝ |delta|. Every ``compact_every`` pending
+  deltas the commit instead writes a full ``v{batch_id}`` base snapshot
+  (tombstones included) over the batch's touched buckets AND every
+  bucket with a pending delta, which bounds the fold depth and lets
+  retention drop shadowed versions.
 - ``read`` resolves per bucket the newest complete base snapshot and
-  reduces it together with EVERY newer complete delta in ONE pass:
-  all pending delta directories are one multi-path scan, unioned with
-  the base and reduced once — one aggregate exchange per read,
-  whatever the fold depth. The pass runs lazily inside the consumer's
-  own job;
-- every ``compact_every`` pending deltas, the next commit writes a
-  full ``v{batch_id}`` snapshot instead (tombstones included) — the
-  same single pass over the base, the pending deltas and the batch's
-  own delta — covering the batch's touched buckets AND every bucket
-  with a pending delta, which bounds the fold depth and keeps
-  retention working.
+  reduces it together with EVERY newer complete delta in ONE pass — one
+  aggregate exchange per read, whatever the fold depth, run lazily
+  inside the consumer's own job.
 
-The two merge kinds, and the contract each one's single pass relies on:
+A store declares exactly one merge kind; its single pass relies on the
+kind's contract:
 
 - **associative reduce** (``merge_fn=``): a pure ``(prev_or_None,
   delta) -> merged`` with ``merge_fn(a, b) == reduce(a ∪ b)`` per key —
@@ -82,22 +43,25 @@ The two merge kinds, and the contract each one's single pass relies on:
   then drops clear markers — rows whose ``clear_if_null`` column is
   NULL, which a delta writes for a key whose state became empty.
 
-The compaction coverage rule is load-bearing: because a snapshot
-always folds in EVERY bucket that has any pending delta, a delta
-version is either newer than the newest base snapshot (fold it for
-all its buckets) or fully shadowed by one (skip it for all of them) —
-``read`` can use one global version cutoff instead of per-bucket
-delta resolution. Crash/replay semantics are unchanged: delta dirs
-are immutable and ``_SUCCESS``-gated, an incomplete ``d{batch}`` is
-invisible to the census and rewritten by the replay, and a replayed
-batch reading ``before_batch`` folds exactly the pre-batch versions.
+The compaction coverage rule is load-bearing: because a snapshot always
+folds in EVERY bucket that has any pending delta, a delta version is
+either newer than the newest base snapshot (fold it for all its
+buckets) or fully shadowed by one (skip it for all of them) — ``read``
+uses one global version cutoff instead of per-bucket delta resolution.
 
-Store manifest: the first append-protocol commit writes
-``{path}/_store.json`` — merge kind, ``key_cols``, ``num_buckets`` and
-the kind's parameters (e.g. the kmv ``k``). Every ``read`` and
-``merge_batch`` compares it with the opening store's configuration and
-raises on a mismatch, so a reader built with the wrong ``k`` or bucket
-count fails instead of silently folding differently from the writer.
+Exactly-once contract: foreachBatch is at-least-once. ``merge_batch``
+skips a batch whose ``d{id}`` or ``v{id}`` is complete; an incomplete
+directory is invisible to the census and rewritten by the replay; and a
+replayed batch reading ``before_batch`` folds exactly the pre-batch
+versions. Retention is per bucket, so no bucket's only or
+replay-needed copy is ever pruned.
+
+Store manifest: the first commit writes ``_store.json`` — merge kind,
+``key_cols``, ``num_buckets`` and the kind's parameters (e.g. the kmv
+``k``). Every ``read`` and ``merge_batch`` compares it with the opening
+store's configuration and raises on a mismatch, so a reader built with
+the wrong ``k`` or bucket count fails instead of silently folding
+differently from the writer.
 """
 
 from __future__ import annotations
@@ -108,10 +72,17 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.streaming.rollup import _fs_and_path
-
 _BUCKET_SEED = 42
 _MANIFEST = "_store.json"
+
+
+def _fs_and_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path, JVM) for ``path`` — the same listing
+    code addresses local paths and object stores."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, hpath, jvm
 
 
 def _path_int(pattern: str):
@@ -169,7 +140,7 @@ def pairwise(merge, *args):
 
 class BucketedVersionedState:
     """Keyed micro-batch state partitioned into hash buckets and
-    persisted as immutable per-batch versioned snapshots."""
+    persisted as immutable per-batch deltas and compacted snapshots."""
 
     def __init__(
         self,
@@ -189,26 +160,23 @@ class BucketedVersionedState:
             raise ValueError("keep_versions must be >= 1")
         if compact_every < 1:
             raise ValueError("compact_every must be >= 1")
-        if merge_fn is not None and replace:
-            raise ValueError("a store is either merge_fn (reduce) or replace")
+        if (merge_fn is not None) == replace:
+            raise ValueError(
+                "a store declares one kind: merge_fn= (reduce) or replace=True"
+            )
         if clear_if_null is not None and not replace:
             raise ValueError("clear_if_null needs replace=True")
         self.path = path
         self.key_cols = list(key_cols)
         self.num_buckets = num_buckets
         self.keep_versions = keep_versions
-        # a declared merge kind → append + compact protocol (see the
-        # module docstring); the writer and every reader of this path
-        # must declare the same kind — the manifest enforces it
+        # the writer and every reader of this path must declare the
+        # same kind — the manifest enforces it
         self.merge_fn = merge_fn
         self.replace = replace
         self.clear_if_null = clear_if_null
         self.params = dict(params or {})
         self.compact_every = compact_every
-
-    @property
-    def _append(self) -> bool:
-        return self.merge_fn is not None or self.replace
 
     # -- bucket assignment (deterministic across sessions: xxhash64
     # with a fixed seed, the same family the batch stores use) --------
@@ -425,11 +393,11 @@ class BucketedVersionedState:
         compacting ``merge_batch`` commits) are filtered out here, so
         callers only ever see live state rows.
 
-        With a declared merge kind (append protocol) the result is ONE
-        reduce over the newest base snapshots and every newer complete
-        delta — ``merge_fn(base, ⋃ deltas)`` for the associative kind,
-        newest-version-per-key minus clear markers for the replace
-        kind (module docstring) — so the read plan holds one aggregate
+        The result is ONE reduce over the newest base snapshots and
+        every newer complete delta — ``merge_fn(base, ⋃ deltas)`` for
+        the associative kind, newest-version-per-key minus clear
+        markers for the replace kind (module docstring) — so the read
+        plan holds one aggregate
         exchange whatever the fold depth, and runs lazily inside the
         consumer's own jobs. The one global cutoff (deltas newer than
         the newest base anywhere) is exact because compaction always
@@ -439,8 +407,6 @@ class BucketedVersionedState:
         base = self._read_base(
             spark, self._base_paths(bases, before_batch, buckets)
         )
-        if not self._append:
-            return base
         self._sync_manifest(spark, create=False)
         pending = self._pending(bases, deltas, before_batch)
         return self._fold(spark, base, [
@@ -470,53 +436,61 @@ class BucketedVersionedState:
         self,
         delta: DataFrame,
         batch_id: int,
-        merge_fn=None,
         touched: set[int] | None = None,
-        materialize: bool = True,
     ) -> None:
-        """Fold ``delta`` into the state. Idempotent: a complete
-        ``v{batch_id}`` (or ``d{batch_id}``) short-circuits.
+        """Commit ``delta`` as batch ``batch_id``. Idempotent: a complete
+        ``d{batch_id}`` (or ``v{batch_id}``) short-circuits.
 
-        Legacy protocol (no declared merge kind): read the touched
-        buckets' pre-batch state, ``merge_fn(prev_or_None, delta) ->
-        DataFrame`` (full post-merge state for those buckets), write
-        them as version ``v{batch_id}``, prune shadowed versions.
-
-        Append protocol (a declared merge kind):
-        write the RAW delta as bucketed ``d{batch_id}`` — one job, no
-        pre-state read, commit I/O ∝ |delta|; ``read`` folds. Every
-        ``compact_every`` pending deltas the commit compacts instead:
-        a full ``v{batch_id}`` snapshot over the touched buckets plus
-        every pending-delta bucket (the coverage invariant ``read``'s
-        global cutoff relies on)."""
+        Writes the RAW delta as bucketed ``d{batch_id}`` — one job, no
+        pre-state read, commit I/O ∝ |delta|; ``read`` folds. Once
+        ``compact_every`` deltas are pending the commit compacts
+        instead: a full ``v{batch_id}`` snapshot over the touched
+        buckets plus every pending-delta bucket (the coverage invariant
+        ``read``'s global cutoff relies on). ``touched``, when the
+        caller knows it, spares the touched-bucket collect."""
         spark = delta.sparkSession
-        if self._append:
-            self._sync_manifest(spark, create=True)
+        self._sync_manifest(spark, create=True)
         if self.is_batch_complete(spark, batch_id):
             return
-        if self._append:
-            self._merge_batch_append(
-                delta, batch_id, touched, materialize
+        bases, deltas = self._census(spark)
+        pending = self._pending(bases, deltas, batch_id)
+        if len(pending) < self.compact_every:
+            if touched is not None and not touched:
+                return
+            (
+                delta.withColumn("_pt", self.bucket_expr())
+                .repartition(F.col("_pt"))
+                .write.partitionBy("_pt")
+                .mode("overwrite")
+                .parquet(f"{self.path}/d{batch_id}")
             )
+            self._prune(spark, batch_id)
             return
-        if merge_fn is None:
-            raise TypeError(
-                "merge_batch needs a merge_fn (argument or constructor)"
-            )
+        # compaction commit. Coverage MUST include every pending-delta
+        # bucket, not just the batch's touched buckets — read()'s
+        # global delta cutoff is only correct because a snapshot never
+        # leaves a pending delta partially shadowed.
         if touched is None:
-            # lazy checkpoint: the touched-bucket collect below is
-            # the first action, so ONE job materializes the delta AND
-            # fetches its bucket ids, and the version write re-reads the
-            # blocks instead of re-running the delta plan. Callers whose
-            # delta is a cheap projection of a checkpointed frame opt out
-            # (``materialize=False``: st16 measured 42→46 jobs without).
-            if materialize:
-                delta = delta.localCheckpoint(eager=False)
+            # lazy checkpoint: the touched-bucket collect is the first
+            # action, so ONE job materializes the delta AND fetches its
+            # bucket ids, and the snapshot write re-reads the blocks
+            # instead of re-running the delta plan
+            delta = delta.localCheckpoint(eager=False)
             touched = self.touched_buckets(delta)
-        if not touched:
+        cover = set(touched)
+        for v in pending:
+            cover.update(deltas[v])
+        if not cover:
             return
-        prev = self.read(spark, before_batch=batch_id, buckets=touched)
-        self._write_snapshot(spark, merge_fn(prev, delta), touched, batch_id)
+        base = self._read_base(
+            spark, self._base_paths(bases, batch_id, cover)
+        )
+        # the pending deltas hold no bucket outside ``cover``
+        merged = self._fold(
+            spark, base, [v for v in pending if deltas[v]], None,
+            (batch_id, delta),
+        )
+        self._write_snapshot(spark, merged, cover, batch_id)
         self._prune(spark, batch_id)
 
     def _write_snapshot(
@@ -567,55 +541,6 @@ class BucketedVersionedState:
             .mode("overwrite")
             .parquet(f"{self.path}/v{batch_id}")
         )
-
-    def _merge_batch_append(
-        self,
-        delta: DataFrame,
-        batch_id: int,
-        touched: set[int] | None,
-        materialize: bool,
-    ) -> None:
-        """The append-protocol commit: write the raw delta as
-        ``d{batch_id}``, or — once ``compact_every`` deltas are pending
-        — fold everything into a full ``v{batch_id}`` snapshot."""
-        spark = delta.sparkSession
-        bases, deltas = self._census(spark)
-        pending = self._pending(bases, deltas, batch_id)
-        if len(pending) < self.compact_every:
-            if touched is not None and not touched:
-                return
-            (
-                delta.withColumn("_pt", self.bucket_expr())
-                .repartition(F.col("_pt"))
-                .write.partitionBy("_pt")
-                .mode("overwrite")
-                .parquet(f"{self.path}/d{batch_id}")
-            )
-            self._prune(spark, batch_id)
-            return
-        # compaction commit. Coverage MUST include every pending-delta
-        # bucket, not just the batch's touched buckets — read()'s
-        # global delta cutoff is only correct because a snapshot never
-        # leaves a pending delta partially shadowed.
-        if touched is None:
-            if materialize:
-                delta = delta.localCheckpoint(eager=False)
-            touched = self.touched_buckets(delta)
-        cover = set(touched)
-        for v in pending:
-            cover.update(deltas[v])
-        if not cover:
-            return
-        base = self._read_base(
-            spark, self._base_paths(bases, batch_id, cover)
-        )
-        # the pending deltas hold no bucket outside ``cover``
-        merged = self._fold(
-            spark, base, [v for v in pending if deltas[v]], None,
-            (batch_id, delta),
-        )
-        self._write_snapshot(spark, merged, cover, batch_id)
-        self._prune(spark, batch_id)
 
     def _prune(self, spark: SparkSession, batch_id: int) -> None:
         """Delete complete versions older than ``batch_id`` that are

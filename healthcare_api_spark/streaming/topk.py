@@ -3,18 +3,12 @@ with top-k reads (SURVEY.md §2.9 composed with the §2.10 heavy-hitter
 operator).
 
 Per micro-batch: tokenize ONLY the batch, aggregate its counts, and
-add-merge into the state. Since r8 the state is a
-``BucketedVersionedState`` keyed by token (VERDICT r7 #3): counts live
-in hash-of-token buckets and each batch rewrites only the buckets its
-batch-vocabulary touches, as an immutable ``_SUCCESS``-gated
-``v{batch_id}`` snapshot — replay-idempotent (a committed batch is
-skipped; a partial one recomputes from the pre-batch versions) and
-crash-safe (prior versions are never mutated). Note the natural-
-language caveat: common tokens hash everywhere, so a big batch touches
-most buckets — the bound is real but the win over full rewrite grows
-as batches get small relative to the accumulated vocabulary, exactly
-the steady-state regime. State size is the vocabulary, not the stream;
-the top-k read is an O(k) TakeOrdered over it.
+commit them as a delta to a ``BucketedVersionedState`` keyed by token
+(VERDICT r7 #3) whose reduce sums counts — replay-idempotent (a
+committed batch is skipped; a crashed one is rewritten by its replay)
+and crash-safe (prior versions are never mutated). State size is the
+vocabulary, not the stream; the top-k read is an O(k) TakeOrdered over
+it.
 """
 
 from __future__ import annotations
@@ -75,8 +69,8 @@ def read_top_tokens(
     k: int = 20,
     num_state_buckets: int = 16,
 ) -> DataFrame:
-    """Current top-k heavy hitters from the newest complete per-bucket
-    snapshots (deterministic tie-break: cnt desc, token asc)."""
+    """Current top-k heavy hitters from the folded token-count state
+    (deterministic tie-break: cnt desc, token asc)."""
     counts = _store(state_path, num_state_buckets).read(spark)
     if counts is None:
         return spark.createDataFrame([], "tok string, cnt bigint")

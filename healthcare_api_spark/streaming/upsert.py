@@ -8,10 +8,12 @@ aggregation over the driver's ``events`` table shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from healthcare_api_spark.operators.relational import agg_state, merge_agg_state
 from healthcare_api_spark.sources.store import ResourceStore, upsert_frames
+from healthcare_api_spark.streaming.state import BucketedVersionedState, pairwise
 
 
 def streaming_upsert(
@@ -108,6 +110,16 @@ def sessionize(
     )
 
 
+def _agg_store(
+    state_dir: str, key_cols: list[str], specs: dict[str, str | list[str]]
+) -> BucketedVersionedState:
+    return BucketedVersionedState(
+        state_dir,
+        key_cols=key_cols,
+        merge_fn=pairwise(merge_agg_state, key_cols, specs),
+    )
+
+
 def streaming_agg_maintenance(
     stream_df: DataFrame,
     state_dir: str,
@@ -116,33 +128,36 @@ def streaming_agg_maintenance(
     checkpoint: str | None = None,
 ):
     """Streaming materialized-aggregate maintenance: each micro-batch is
-    reduced to its mergeable partials (relational.agg_state) and merged
-    into the parquet state at ``state_dir`` via merge_agg_state — the
-    streaming twin of the a12 batch path, and the foreachBatch
-    alternative to an unbounded `complete`-mode aggregation (whose
-    in-memory state a 100 TB key space would blow past; here state
-    lives columnar on disk and each merge touches |state|+|delta| rows).
+    reduced to its mergeable partials (relational.agg_state) and
+    committed to a ``BucketedVersionedState`` at ``state_dir`` whose
+    associative reduce is merge_agg_state — the streaming twin of the
+    a12 batch path, and the foreachBatch alternative to an unbounded
+    `complete`-mode aggregation (whose in-memory state a 100 TB key
+    space would blow past; here state lives columnar on disk and each
+    commit writes only the batch's partials).
 
-    The read→merge→overwrite cycle pins the previous state with
-    ``localCheckpoint(eager=True)`` before the directory it came from is
-    overwritten (the repo-wide read-own-input rule). Returns the
-    StreamingQuery; the maintained view is ``spark.read.parquet(state_dir)``.
+    A commit never reads the state it extends, and replaying a
+    committed micro-batch is a no-op, so the maintained view never
+    double counts. Returns the StreamingQuery; the maintained view is
+    ``read_agg_state(spark, state_dir, key_cols, specs)``.
     """
-    from healthcare_api_spark.operators.relational import agg_state, merge_agg_state
+    store = _agg_store(state_dir, key_cols, specs)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = agg_state(batch_df, key_cols, specs)
-        try:
-            prev = spark.read.parquet(state_dir).localCheckpoint(eager=True)
-        except Exception as e:  # first batch: no state yet
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            prev = None
-        merged = delta if prev is None else merge_agg_state(prev, delta, key_cols, specs)
-        merged.write.mode("overwrite").parquet(state_dir)
+        store.merge_batch(agg_state(batch_df, key_cols, specs), batch_id)
 
     writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
+
+
+def read_agg_state(
+    spark: SparkSession,
+    state_dir: str,
+    key_cols: list[str],
+    specs: dict[str, str | list[str]],
+) -> DataFrame | None:
+    """The aggregate state ``streaming_agg_maintenance`` maintains at
+    ``state_dir`` (None before the first commit)."""
+    return _agg_store(state_dir, key_cols, specs).read(spark)

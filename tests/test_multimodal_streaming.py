@@ -709,16 +709,6 @@ def test_tumbling_window_streaming_with_watermark(spark, tmp_path):
         q.stop()
 
 
-def test_stateful_v2_gated_without_protobuf(spark):
-    from healthcare_api_spark.streaming import stateful_v2
-
-    stream = spark.readStream.format("rate").load()
-    if stateful_v2.tws_available():
-        pytest.skip("protobuf present: the gate does not apply here")
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        stateful_v2.running_stats(stream, "value", "value")
-
-
 def test_streaming_upsert_foreachbatch(spark, tmp_path):
     """readStream over an NDJSON directory → merge-by-id into the store
     (the --enable-update-create semantics, README.md:29)."""

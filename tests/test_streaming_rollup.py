@@ -182,15 +182,17 @@ def test_rollup_batch_replay_is_idempotent(spark, tmp_path):
     # the prior complete snapshot — converges, no double count
     import os
 
-    os.remove(os.path.join(tier_path, "v1", "_SUCCESS"))
+    os.remove(os.path.join(tier_path, "d1", "_SUCCESS"))
     assert _tier_dict(spark, tier_path) == {"2024-01-01 10:00:00": (2, 4.0)}
     apply_rollup_batch(b1, 1, tier_path, "ts", "v", "hour")
     assert _tier_dict(spark, tier_path) == expect
 
 
 def test_rollup_tier_read_failure_not_swallowed(spark, tmp_path):
-    """A corrupt prior snapshot must raise, never silently reset the
-    tier to one batch's totals (ADVICE r2: bare-except data-loss)."""
+    """A corrupt committed version must raise, never silently reset the
+    tier to one batch's totals (ADVICE r2: bare-except data-loss). An
+    append commit reads no history, so the corruption surfaces on the
+    read and on the compaction that would fold it."""
     import os
 
     import pytest
@@ -200,17 +202,25 @@ def test_rollup_tier_read_failure_not_swallowed(spark, tmp_path):
         [("2024-01-01 10:05:00", 1.0)], ["ts", "v"]
     ).withColumn("ts", F.to_timestamp("ts"))
     apply_rollup_batch(b0, 0, tier_path, "ts", "v", "hour")
-    # corrupt the committed snapshot's parquet files in place
-    vdir = os.path.join(tier_path, "v0")
-    for f in os.listdir(vdir):
-        if f.endswith(".parquet"):
-            with open(os.path.join(vdir, f), "wb") as fh:
-                fh.write(b"not a parquet file")
+    # corrupt the committed delta's parquet files in place
+    for dirpath, _dirs, files in os.walk(os.path.join(tier_path, "d0")):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(dirpath, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+    for i in range(1, 8):  # appends: the 8th pending delta compacts
+        apply_rollup_batch(b0, i, tier_path, "ts", "v", "hour")
     with pytest.raises(Exception):
-        apply_rollup_batch(b0, 1, tier_path, "ts", "v", "hour")
-    # the failed batch must NOT have committed a snapshot that would
-    # replace accumulated history with just its own rows
-    assert not os.path.exists(os.path.join(tier_path, "v1", "_SUCCESS"))
+        read_tier(spark, tier_path).collect()
+    with pytest.raises(Exception):
+        apply_rollup_batch(b0, 8, tier_path, "ts", "v", "hour")
+    # no snapshot that excludes the corrupt version was committed
+    assert not [
+        n for n in os.listdir(tier_path)
+        if n.startswith("v") and os.path.exists(
+            os.path.join(tier_path, n, "_SUCCESS")
+        )
+    ]
 
 
 def test_stream_static_enrich_broadcast_across_batches(spark, tmp_path):
@@ -349,7 +359,10 @@ def test_streaming_agg_maintenance_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from healthcare_api_spark.operators.relational import agg_state
-    from healthcare_api_spark.streaming.upsert import streaming_agg_maintenance
+    from healthcare_api_spark.streaming.upsert import (
+        read_agg_state,
+        streaming_agg_maintenance,
+    )
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
@@ -367,7 +380,63 @@ def test_streaming_agg_maintenance_matches_batch(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(map(tuple, spark.read.parquet(state).collect()))
+    got = sorted(map(tuple, read_agg_state(spark, state, ["k"], specs).collect()))
+    want = sorted(
+        map(
+            tuple,
+            agg_state(
+                spark.createDataFrame(rows1 + rows2, schema), ["k"], specs
+            ).collect(),
+        )
+    )
+    assert got == want
+
+
+def test_streaming_agg_maintenance_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: with the checkpoint's last commit
+    entry gone, the restarted query replays batch 1 — the maintained
+    state must still equal one agg_state over all rows, not count
+    batch 1 twice."""
+    import os
+
+    from healthcare_api_spark.operators.relational import agg_state
+    from healthcare_api_spark.streaming.upsert import (
+        read_agg_state,
+        streaming_agg_maintenance,
+    )
+
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    schema = "k int, v double"
+    specs = {"v": ["sum", "count", "max"]}
+    rows1 = [(k % 5, float(k)) for k in range(40)]
+    rows2 = [(k % 5, float(k)) for k in range(40, 100)]
+
+    def run(*appends):
+        q = streaming_agg_maintenance(
+            spark.readStream.schema(schema).parquet(src), state, ["k"],
+            specs, checkpoint=ckpt,
+        )
+        try:
+            for rows in appends:
+                if rows:
+                    spark.createDataFrame(rows, schema).write.mode(
+                        "append"
+                    ).parquet(src)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+    spark.createDataFrame(rows1, schema).write.mode("append").parquet(src)
+    run(None, rows2)
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last == 1
+    for name in (str(last), f".{last}.crc"):
+        if (commits / name).exists():
+            (commits / name).unlink()
+    run(None)  # the restart replays batch 1
+
+    got = sorted(map(tuple, read_agg_state(spark, state, ["k"], specs).collect()))
     want = sorted(
         map(
             tuple,

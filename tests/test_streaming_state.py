@@ -29,56 +29,63 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "k string, cnt bigint")
 
 
-def _pt_dirs(path, batch_id):
-    vdir = f"{path}/v{batch_id}"
+def _pt_dirs(path, version):
     return sorted(
-        d for d in os.listdir(vdir) if d.startswith("_pt=")
+        d for d in os.listdir(f"{path}/{version}") if d.startswith("_pt=")
+    )
+
+
+def _counts_store(path, num_buckets=4, **kw):
+    return BucketedVersionedState(
+        path, ["k"], num_buckets=num_buckets, merge_fn=_merge_counts, **kw
     )
 
 
 def test_rewrite_bounded_by_touched_buckets(spark, tmp_path):
-    """THE r7 verdict test: a batch touching one key must rewrite one
+    """THE r7 verdict test: a batch touching one key must write one
     bucket directory — not |state|. A wide first batch seeds many
-    buckets; the narrow second batch's version directory contains
-    exactly the touched bucket."""
+    buckets; a narrow delta holds exactly the touched bucket, and a
+    compaction covers only the touched and pending-delta buckets."""
     path = str(tmp_path / "state")
-    store = BucketedVersionedState(path, ["k"], num_buckets=8)
+    # compact_every=1: deltas and compactions alternate
+    store = _counts_store(path, num_buckets=8, compact_every=1)
     wide = _mk(spark, [(f"key{i}", 1) for i in range(64)])
-    store.merge_batch(wide, 0, _merge_counts)
-    assert len(_pt_dirs(path, 0)) > 1  # the seed really spans buckets
+    store.merge_batch(wide, 0)
+    assert len(_pt_dirs(path, "d0")) > 1  # the seed really spans buckets
 
     narrow = _mk(spark, [("key0", 5)])
-    touched = store.touched_buckets(narrow)
+    touched = [f"_pt={b}" for b in store.touched_buckets(narrow)]
     assert len(touched) == 1
-    store.merge_batch(narrow, 1, _merge_counts)
-    assert _pt_dirs(path, 1) == [f"_pt={next(iter(touched))}"]
+    store.merge_batch(narrow, 1)  # compacts d0's buckets into v1
+    store.merge_batch(narrow, 2)
+    assert _pt_dirs(path, "d2") == touched
+    store.merge_batch(narrow, 3)  # compacts: only d2's bucket is pending
+    assert _pt_dirs(path, "v3") == touched
 
-    # the read still sees the FULL state: key0 merged, others from v0
+    # the read still sees the FULL state: key0 merged, others from v1
     got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
-    assert got["key0"] == 6 and got["key1"] == 1 and len(got) == 64
+    assert got["key0"] == 16 and got["key1"] == 1 and len(got) == 64
 
 
 def test_replay_skips_and_reads_pre_batch(spark, tmp_path):
-    """foreachBatch is at-least-once: a replayed batch whose snapshot
-    committed is a no-op, and state-as-of-before-the-batch is exactly
-    the pre-batch snapshot (never the batch's own output)."""
+    """foreachBatch is at-least-once: a replayed batch whose compaction
+    snapshot committed is a no-op, and state-as-of-before-the-batch is
+    exactly the pre-batch state (never the batch's own output)."""
     path = str(tmp_path / "state")
-    store = BucketedVersionedState(path, ["k"], num_buckets=4)
-    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0, _merge_counts)
-    store.merge_batch(_mk(spark, [("a", 10)]), 1, _merge_counts)
+    store = _counts_store(path, compact_every=1)
+    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0)
+    store.merge_batch(_mk(spark, [("a", 10)]), 1)  # compacts into v1
     after = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
     assert after == {"a": 11, "b": 2}
 
     # replay batch 1: complete snapshot exists → skipped, nothing moves
-    mtimes = {
-        v: os.path.getmtime(f"{path}/v{v}") for v in (0, 1)
-    }
-    store.merge_batch(_mk(spark, [("a", 10)]), 1, _merge_counts)
+    mtimes = {v: os.path.getmtime(f"{path}/{v}") for v in ("d0", "v1")}
+    store.merge_batch(_mk(spark, [("a", 10)]), 1)
     assert {r["k"]: r["cnt"] for r in store.read(spark).collect()} == after
-    assert all(os.path.getmtime(f"{path}/v{v}") == mtimes[v] for v in (0, 1))
+    assert all(os.path.getmtime(f"{path}/{v}") == t for v, t in mtimes.items())
 
     # a replayed batch recomputing its outputs reads the PRE-batch
-    # state, not its own: as-of-before-1 is the v0 snapshot
+    # state, not its own: as-of-before-1 is the d0 delta
     pre = {
         r["k"]: r["cnt"]
         for r in store.read(spark, before_batch=1).collect()
@@ -87,15 +94,16 @@ def test_replay_skips_and_reads_pre_batch(spark, tmp_path):
 
 
 def test_partial_version_ignored_and_prior_state_survives(spark, tmp_path):
-    """A crash mid-write leaves a version without _SUCCESS: readers
+    """A crash mid-compaction leaves a v{N} without _SUCCESS: readers
     must ignore it and the previous state must be fully intact (the
     old in-place overwrite deleted the only copy first)."""
     path = str(tmp_path / "state")
-    store = BucketedVersionedState(path, ["k"], num_buckets=4)
-    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0, _merge_counts)
+    store = _counts_store(path, compact_every=1)
+    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0)
 
     # simulate a crashed v1: parquet files present, no _SUCCESS
     _mk(spark, [("a", 999)]).withColumn("_pt", store.bucket_expr()) \
+        .withColumn("_tomb", F.lit(False)) \
         .write.partitionBy("_pt").parquet(f"{path}/v1")
     os.remove(f"{path}/v1/_SUCCESS")
 
@@ -103,33 +111,35 @@ def test_partial_version_ignored_and_prior_state_survives(spark, tmp_path):
     assert got == {"a": 1, "b": 2}
     # the recovery path (merge_batch for batch 1 again) overwrites the
     # partial dir and commits cleanly
-    store.merge_batch(_mk(spark, [("a", 999)]), 1, _merge_counts)
+    store.merge_batch(_mk(spark, [("a", 999)]), 1)
+    assert os.path.exists(f"{path}/v1/_SUCCESS")
     got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
     assert got == {"a": 1000, "b": 2}
 
 
 def test_per_bucket_retention_never_drops_last_copies(spark, tmp_path):
-    """Pruning is per BUCKET: an old version survives while any of its
-    buckets lacks keep_versions newer copies; once every bucket is
-    covered it is deleted."""
+    """Pruning is per BUCKET: an old base survives while any of its
+    buckets lacks keep_versions newer copies — a base holding a
+    bucket's only copy is never deleted; once every bucket is covered
+    it is."""
     path = str(tmp_path / "state")
-    store = BucketedVersionedState(path, ["k"], num_buckets=4, keep_versions=2)
+    store = _counts_store(path, keep_versions=2, compact_every=1)
     # key "a" and key "b" land in different buckets for nb=4 (verified
-    # below); batches 1..3 touch only "a"
-    store.merge_batch(_mk(spark, [("a", 1), ("b", 1)]), 0, _merge_counts)
+    # below); batches 1..7 touch only "a"
+    store.merge_batch(_mk(spark, [("a", 1), ("b", 1)]), 0)
     ba = next(iter(store.touched_buckets(_mk(spark, [("a", 0)]))))
     bb = next(iter(store.touched_buckets(_mk(spark, [("b", 0)]))))
     assert ba != bb
-    for i in (1, 2, 3):
-        store.merge_batch(_mk(spark, [("a", 1)]), i, _merge_counts)
-    live = sorted(store.complete_versions(spark))
-    # v0 must SURVIVE: it holds bucket bb's only copy
-    assert 0 in live
-    # bucket ba has copies in v0..v3 → at most keep_versions=2 newer
-    # copies retained beyond the newest; v1 is shadowed and pruned
-    assert 1 not in live
+    for i in range(1, 8):  # odd batches compact: v1 {ba, bb}, v3..v7 {ba}
+        store.merge_batch(_mk(spark, [("a", 1)]), i)
+    names = os.listdir(path)
+    # v1 must SURVIVE: it holds bucket bb's only copy
+    assert "v1" in names
+    assert _pt_dirs(path, "v1") == sorted([f"_pt={ba}", f"_pt={bb}"])
+    # bucket ba's v3 copy has keep_versions=2 newer ones (v5, v7): pruned
+    assert "v3" not in names and "v5" in names
     got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
-    assert got == {"a": 4, "b": 1}
+    assert got == {"a": 8, "b": 1}
 
 
 def test_neardup_admit_batch_replay_idempotent(spark, tmp_path):
@@ -305,7 +315,7 @@ def test_streaming_cms_replay_does_not_double_count(spark, tmp_path):
     """Cell-sum is NOT idempotent, so replay safety rests on the
     versioned store: re-running a committed batch id must leave the
     state unchanged (short-circuit on the complete version)."""
-    from healthcare_api_spark.operators.sketches import cms_build, cms_merge
+    from healthcare_api_spark.operators.sketches import cms_build
     from healthcare_api_spark.streaming.sketches import _cms_store
 
     store = _cms_store(str(tmp_path / "s"), 4)
@@ -313,12 +323,9 @@ def test_streaming_cms_replay_does_not_double_count(spark, tmp_path):
         spark.createDataFrame([("a",), ("b",)], ["key"]), "key", 2, 32
     )
 
-    def merge(prev, d):
-        return d if prev is None else cms_merge(prev, d)
-
-    store.merge_batch(d1, 0, merge)
+    store.merge_batch(d1, 0)
     before = {(r["r"], r["bucket"], r["n"]) for r in store.read(spark).collect()}
-    store.merge_batch(d1, 0, merge)  # replay
+    store.merge_batch(d1, 0)  # replay
     after = {(r["r"], r["bucket"], r["n"]) for r in store.read(spark).collect()}
     assert before == after
 
@@ -503,35 +510,39 @@ def test_streaming_cep_pending_survives_early_continuations(spark, tmp_path):
 
 
 def test_emptied_bucket_tombstone_no_resurface(spark, tmp_path):
-    """ADVICE r9 (store half): when a merge empties a touched bucket,
-    the new version must still SHADOW the old copy — an empty
-    partitionBy write materializes no ``_pt=`` dir, so without the
-    tombstone marker the census would keep resolving the bucket to the
-    older version and its stale rows would resurface."""
+    """ADVICE r9 (store half): when a compaction empties a covered
+    bucket, the new snapshot must still SHADOW the bucket's older base
+    copy — an empty partitionBy write materializes no ``_pt=`` dir, so
+    without the tombstone marker the census would keep resolving the
+    bucket to the older base and its stale rows would resurface."""
+    path = str(tmp_path / "st")
     store = BucketedVersionedState(
-        str(tmp_path / "st"), key_cols=["k"], num_buckets=4
+        path, key_cols=["k"], num_buckets=4, replace=True,
+        clear_if_null="cnt", compact_every=1,
     )
-    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0, _merge_counts)
-    assert sorted(
-        (r["k"], r["cnt"]) for r in store.read(spark).collect()
-    ) == [("a", 1), ("b", 2)]
-
-    def _delete_a(prev, delta):
-        # post-merge state for a's bucket: nothing (the key is removed)
-        kept = prev.join(delta.select("k"), "k", "left_anti")
-        return kept
-
-    # delta names key "a" -> its bucket is touched; merge removes it.
-    # If b shares a's bucket the bucket still has b; read must show
-    # exactly {b} either way, never a resurrected "a".
-    store.merge_batch(_mk(spark, [("a", 0)]), 1, _delete_a)
+    ba = next(iter(store.touched_buckets(_mk(spark, [("a", 0)]))))
+    bb = next(iter(store.touched_buckets(_mk(spark, [("b", 0)]))))
+    assert ba != bb
+    store.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0)
+    store.merge_batch(_mk(spark, [("b", 3)]), 1)  # v1 holds a's bucket
+    store.merge_batch(_mk(spark, [("b", 4)]), 2)
+    # clear "a" (cnt NULL marker): its bucket is empty in the v3
+    # compaction
+    clear_a = spark.createDataFrame([("a", None)], "k string, cnt bigint")
+    store.merge_batch(clear_a, 3)
+    assert f"_pt={ba}" in _pt_dirs(path, "v3")  # the tombstone's dir
     got = sorted((r["k"], r["cnt"]) for r in store.read(spark).collect())
-    assert got == [("b", 2)]
-    # replay of batch 1 is still a no-op
-    store.merge_batch(_mk(spark, [("a", 0)]), 1, _delete_a)
+    assert got == [("b", 4)]
+    pre = sorted(
+        (r["k"], r["cnt"])
+        for r in store.read(spark, before_batch=3).collect()
+    )
+    assert pre == [("a", 1), ("b", 4)]
+    # replay of batch 3 is still a no-op
+    store.merge_batch(clear_a, 3)
     assert sorted(
         (r["k"], r["cnt"]) for r in store.read(spark).collect()
-    ) == [("b", 2)]
+    ) == [("b", 4)]
 
 
 def test_streaming_cep_completed_pending_does_not_readvance(spark, tmp_path):
@@ -1070,19 +1081,16 @@ def test_streaming_touch_wm_late_conversion_between_touches(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# r13: the append + compact commit protocol (constructor merge_fn) —
-# commit I/O ∝ |delta|, read-time fold, periodic compaction, and the
-# same crash/replay/retention contract as the full-snapshot protocol.
+# r13: the append + compact commit protocol — commit I/O ∝ |delta|,
+# read-time fold, periodic compaction, and the crash/replay/retention
+# contract across deltas and compactions.
 # ---------------------------------------------------------------------
 
 
-def _append_store(tmp_path, spark=None, compact_every=8, keep_versions=2):
-    return BucketedVersionedState(
+def _append_store(tmp_path, compact_every=8, keep_versions=2):
+    return _counts_store(
         str(tmp_path / "astate"),
-        key_cols=["k"],
-        num_buckets=4,
         keep_versions=keep_versions,
-        merge_fn=_merge_counts,
         compact_every=compact_every,
     )
 
@@ -1229,31 +1237,6 @@ def test_append_replace_merge_clears_keys_via_markers(spark, tmp_path):
     assert sorted(
         n for n in os.listdir(store.path) if n.startswith("v")
     ) == ["v2"]
-
-
-def test_append_store_reads_legacy_snapshot_dirs(spark, tmp_path):
-    """Migration compatibility: a state dir whose history was written
-    by the full-snapshot protocol (v{batch} dirs) keeps reading
-    correctly when later batches append deltas — bases resolve
-    newest-wins per bucket, deltas newer than the newest base fold on
-    top."""
-    path = str(tmp_path / "mig")
-    legacy = BucketedVersionedState(path, ["k"], num_buckets=4)
-    legacy.merge_batch(_mk(spark, [("a", 1), ("b", 2)]), 0, _merge_counts)
-    legacy.merge_batch(_mk(spark, [("a", 3)]), 1, _merge_counts)
-    store = BucketedVersionedState(
-        path, ["k"], num_buckets=4, merge_fn=_merge_counts
-    )
-    # replay of a legacy-committed batch short-circuits in append mode
-    store.merge_batch(_mk(spark, [("a", 3)]), 1)
-    store.merge_batch(_mk(spark, [("b", 10), ("c", 5)]), 2)
-    assert sorted(os.listdir(path))[-1] == "v1" or "d2" in os.listdir(path)
-    got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
-    assert got == {"a": 4, "b": 12, "c": 5}
-    pre = {
-        r["k"]: r["cnt"] for r in store.read(spark, before_batch=2).collect()
-    }
-    assert pre == {"a": 4, "b": 2}
 
 
 # ---------------------------------------------------------------------
@@ -1431,3 +1414,5 @@ def test_store_manifest_rejects_mismatched_reader(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="kind"):
         replace.merge_batch(kmv_build(df, ["g"], "u", 8), 1)
+    with pytest.raises(ValueError, match="one kind"):
+        BucketedVersionedState(f"{root}/kmv", ["g"], num_buckets=4)

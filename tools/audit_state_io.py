@@ -7,8 +7,10 @@ timings imply but never measured.
 Runs each pipeline's real 2-micro-batch loop at the given SF with
 cleanup disabled, then walks the state root:
 
-- ``paths|state/v{N}/``   — the state store's per-batch version
-  (touched buckets' FULL post-merge copies + tombstones),
+- ``paths|state/d{N}/``   — the state store's per-batch delta
+  (the batch's raw rows, bucketed),
+- ``paths|state/v{N}/``   — a compaction snapshot, written every
+  ``compact_every`` deltas (covered buckets' full state + tombstones),
 - ``results/batch={N}/``  — the append-only emission (st13-15).
 
 Usage: python tools/audit_state_io.py [sf_dir]
