@@ -20,10 +20,10 @@ Cross-engine determinism rules used throughout:
 # query -> def line -> primary module (273 gates; regenerate: python tools/gen_toc.py)
 #   [a]
 #     a10_histogram                      L527    operators/relational
-#     a11_psi_drift                      L5932   operators/analytics
-#     a12_incremental_agg                L3439   operators/relational
-#     a13_equi_depth_hist                L3714   operators
-#     a14_co_occurrence                  L4031   operators/analytics
+#     a11_psi_drift                      L5778   operators/analytics
+#     a12_incremental_agg                L3285   operators/relational
+#     a13_equi_depth_hist                L3560   operators
+#     a14_co_occurrence                  L3877   operators/analytics
 #     a1_group_collect                   L421    (inline DataFrame ops)
 #     a2_distinct_set                    L416    operators/relational
 #     a3_count_accurate                  L406    operators/relational
@@ -34,36 +34,36 @@ Cross-engine determinism rules used throughout:
 #     a8_exact_percentiles               L476    (inline DataFrame ops)
 #     a9_pivot                           L466    operators/relational
 #   [d]
-#     d10_quality_canonical              L6050   operators/dedup
-#     d11_fuzzy_join                     L5986   operators/dedup
-#     d12_sorted_neighborhood            L3536   operators/dedup
-#     d13_passjoin                       L3742   operators/dedup
-#     d14_semdedup                       L3812   operators/dedup
-#     d15_incremental_cc                 L3838   operators/dedup
-#     d16_sparse_cosine                  L4122   operators/dedup
-#     d17_sentence_dedup                 L4141   operators/dedup
-#     d18_prefix_jaccard                 L5072   operators/dedup
-#     d19_paragraph_dedup                L6817   operators/dedup
-#     d1_dedup_exact                     L2256   operators/dedup
-#     d20_cdc_chunks                     L7260   operators/dedup
-#     d21_containment                    L5092   functions/text
-#     d2_dedup_minhash                   L2265   operators/dedup
-#     d3_simhash                         L2271   operators/dedup
-#     d4_ngram_jaccard                   L2277   operators/dedup
-#     d5_embed_neardup                   L2308   operators/dedup
-#     d6_neardup_clusters                L2283   operators/dedup
-#     d7_decontaminate                   L2596   operators/curation
-#     d8_boilerplate_lines               L2697   operators/curation
+#     d10_quality_canonical              L5896   operators/dedup
+#     d11_fuzzy_join                     L5832   operators/dedup
+#     d12_sorted_neighborhood            L3382   operators/dedup
+#     d13_passjoin                       L3588   operators/dedup
+#     d14_semdedup                       L3658   operators/dedup
+#     d15_incremental_cc                 L3684   operators/dedup
+#     d16_sparse_cosine                  L3968   operators/dedup
+#     d17_sentence_dedup                 L3987   operators/dedup
+#     d18_prefix_jaccard                 L4918   operators/dedup
+#     d19_paragraph_dedup                L6663   operators/dedup
+#     d1_dedup_exact                     L2102   operators/dedup
+#     d20_cdc_chunks                     L7084   operators/dedup
+#     d21_containment                    L4938   functions/text
+#     d2_dedup_minhash                   L2111   operators/dedup
+#     d3_simhash                         L2117   operators/dedup
+#     d4_ngram_jaccard                   L2123   operators/dedup
+#     d5_embed_neardup                   L2154   operators/dedup
+#     d6_neardup_clusters                L2129   operators/dedup
+#     d7_decontaminate                   L2442   operators/curation
+#     d8_boilerplate_lines               L2543   operators/curation
 #     d9_exact_substring                 L1265   operators/dedup
 #   [ds]
-#     ds1_stratified_sample              L2612   operators/curation
-#     ds2_pack_sequences                 L2645   operators/curation
-#     ds3_exact_k_sample                 L2622   operators/curation
-#     ds4_assign_splits                  L2635   operators/curation
-#     ds5_pack_global                    L2714   operators/curation
-#     ds6_weighted_sample                L6040   operators/curation
-#     ds7_interleave_sources             L3428   operators/curation
-#     ds8_token_mixture                  L4871   operators/curation
+#     ds1_stratified_sample              L2458   operators/curation
+#     ds2_pack_sequences                 L2491   operators/curation
+#     ds3_exact_k_sample                 L2468   operators/curation
+#     ds4_assign_splits                  L2481   operators/curation
+#     ds5_pack_global                    L2560   operators/curation
+#     ds6_weighted_sample                L5886   operators/curation
+#     ds7_interleave_sources             L3274   operators/curation
+#     ds8_token_mixture                  L4717   operators/curation
 #   [f]
 #     f10_f12_cast_append                L815    (inline DataFrame ops)
 #     f1_f2_string_clean                 L730    (inline DataFrame ops)
@@ -74,34 +74,34 @@ Cross-engine determinism rules used throughout:
 #     f8_json_extract                    L783    (inline DataFrame ops)
 #     f9_f11_struct_build                L792    (inline DataFrame ops)
 #   [fs]
-#     fs10_text_bm25                     L5779   (inline DataFrame ops)
-#     fs11_repeat_and                    L5430   (inline DataFrame ops)
-#     fs12_text_phrase                   L4401   (inline DataFrame ops)
-#     fs13_quantity_search               L3121   (inline DataFrame ops)
-#     fs14_composite_search              L3235   (inline DataFrame ops)
-#     fs15_uri_and_subsumption           L3169   (inline DataFrame ops)
-#     fs1_search_token                   L3104   (inline DataFrame ops)
-#     fs2_search_range                   L3112   (inline DataFrame ops)
-#     fs3_search_count                   L5797   (inline DataFrame ops)
-#     fs4_search_sort_page               L5803   (inline DataFrame ops)
-#     fs5_search_text                    L6315   (inline DataFrame ops)
-#     fs6_page_non_unique                L5814   (inline DataFrame ops)
-#     fs7_nested_has                     L6301   (inline DataFrame ops)
-#     fs8_chained_sort                   L6021   (inline DataFrame ops)
-#     fs9_filter_grammar                 L5760   (inline DataFrame ops)
+#     fs10_text_bm25                     L5625   (inline DataFrame ops)
+#     fs11_repeat_and                    L5276   (inline DataFrame ops)
+#     fs12_text_phrase                   L4247   (inline DataFrame ops)
+#     fs13_quantity_search               L2967   (inline DataFrame ops)
+#     fs14_composite_search              L3081   (inline DataFrame ops)
+#     fs15_uri_and_subsumption           L3015   (inline DataFrame ops)
+#     fs1_search_token                   L2950   (inline DataFrame ops)
+#     fs2_search_range                   L2958   (inline DataFrame ops)
+#     fs3_search_count                   L5643   (inline DataFrame ops)
+#     fs4_search_sort_page               L5649   (inline DataFrame ops)
+#     fs5_search_text                    L6161   (inline DataFrame ops)
+#     fs6_page_non_unique                L5660   (inline DataFrame ops)
+#     fs7_nested_has                     L6147   (inline DataFrame ops)
+#     fs8_chained_sort                   L5867   (inline DataFrame ops)
+#     fs9_filter_grammar                 L5606   (inline DataFrame ops)
 #   [g]
-#     g10_bfs_hops                       L6576   operators/graph
-#     g11_stress_centrality              L6599   operators/graph
-#     g12_sssp_weighted                  L6623   operators/graph
-#     g1_pagerank                        L3696   operators
-#     g2_triangle_count                  L5494   operators
-#     g3_kcore                           L5504   operators
-#     g4_label_propagation               L5478   operators
-#     g5_connected_components            L6326   operators/graph
-#     g6_adamic_adar                     L6345   operators/graph
-#     g7_personalized_pagerank           L6738   operators/graph
-#     g8_modularity                      L6532   operators/graph
-#     g9_hits                            L6553   operators/graph
+#     g10_bfs_hops                       L6422   operators/graph
+#     g11_stress_centrality              L6445   operators/graph
+#     g12_sssp_weighted                  L6469   operators/graph
+#     g1_pagerank                        L3542   operators
+#     g2_triangle_count                  L5340   operators
+#     g3_kcore                           L5350   operators
+#     g4_label_propagation               L5324   operators
+#     g5_connected_components            L6172   operators/graph
+#     g6_adamic_adar                     L6191   operators/graph
+#     g7_personalized_pagerank           L6584   operators/graph
+#     g8_modularity                      L6378   operators/graph
+#     g9_hits                            L6399   operators/graph
 #   [j]
 #     j1_broadcast_join                  L841    operators/relational
 #     j2_docs_by_group                   L868    operators/assay
@@ -112,38 +112,38 @@ Cross-engine determinism rules used throughout:
 #   [k]
 #     k1_sketch_distinct                 L1273   (inline DataFrame ops)
 #     k2_sketch_quantiles                L1284   (inline DataFrame ops)
-#     k3_cms_heavy_hitters               L3387   operators/sketches
-#     k4_kmv_distinct                    L3864   operators/sketches
-#     k5_sample_quantiles                L5728   operators/sketches
-#     k6_sketch_rollup                   L4429   operators/sketches
-#     k7_kmv_set_ops                     L3882   operators/sketches
-#     k8_hll_distinct                    L3898   operators/sketches
-#     k9_bloom_filter                    L6833   operators/sketches
+#     k3_cms_heavy_hitters               L3233   operators/sketches
+#     k4_kmv_distinct                    L3710   operators/sketches
+#     k5_sample_quantiles                L5574   operators/sketches
+#     k6_sketch_rollup                   L4275   operators/sketches
+#     k7_kmv_set_ops                     L3728   operators/sketches
+#     k8_hll_distinct                    L3744   operators/sketches
+#     k9_bloom_filter                    L6679   operators/sketches
 #   [l]
 #     l1_zorder_key                      L490    operators/layout
 #     l2_zorder_ranked                   L505    operators/layout
-#     l3_zorder3                         L5915   operators/layout
-#     l4_hilbert_key                     L3581   operators/layout
+#     l3_zorder3                         L5761   operators/layout
+#     l4_hilbert_key                     L3427   operators/layout
 #   [m]
-#     m10_gif_frames                     L3915   operators/multimodal
-#     m11_scene_cuts                     L5258   operators/multimodal
-#     m12_image_ahash                    L4469   operators/multimodal
-#     m13_image_neardup                  L4508   (inline DataFrame ops)
-#     m14_image_hamming_pairs            L4530   operators/dedup
-#     m15_image_hash_retrieval           L4596   operators/dedup
-#     m16_audio_vad_windows              L4648   operators/multimodal
-#     m17_image_patches                  L2786   operators/multimodal
-#     m18_keyframes                      L6669   operators/multimodal
-#     m19_patch_vote_neardup             L2827   operators/multimodal
-#     m1_attachment_meta                 L2728   (inline DataFrame ops)
-#     m2_image_decode                    L2741   operators/multimodal
-#     m3_audio_features                  L2880   operators/multimodal
-#     m4_video_frames                    L2929   operators/multimodal
-#     m5_gif_decode                      L3042   operators/multimodal
-#     m6_jpeg_decode                     L6153   operators/multimodal
-#     m7_progressive_jpeg                L6211   operators/multimodal
-#     m8_adam7_png                       L3284   operators/multimodal
-#     m9_palette_png                     L2986   operators/multimodal
+#     m10_gif_frames                     L3761   operators/multimodal
+#     m11_scene_cuts                     L5104   operators/multimodal
+#     m12_image_ahash                    L4315   operators/multimodal
+#     m13_image_neardup                  L4354   (inline DataFrame ops)
+#     m14_image_hamming_pairs            L4376   operators/dedup
+#     m15_image_hash_retrieval           L4442   operators/dedup
+#     m16_audio_vad_windows              L4494   operators/multimodal
+#     m17_image_patches                  L2632   operators/multimodal
+#     m18_keyframes                      L6515   operators/multimodal
+#     m19_patch_vote_neardup             L2673   operators/multimodal
+#     m1_attachment_meta                 L2574   (inline DataFrame ops)
+#     m2_image_decode                    L2587   operators/multimodal
+#     m3_audio_features                  L2726   operators/multimodal
+#     m4_video_frames                    L2775   operators/multimodal
+#     m5_gif_decode                      L2888   operators/multimodal
+#     m6_jpeg_decode                     L5999   operators/multimodal
+#     m7_progressive_jpeg                L6057   operators/multimodal
+#     m8_adam7_png                       L3130   operators/multimodal
+#     m9_palette_png                     L2832   operators/multimodal
 #   [p]
 #     p10_array_rename                   L661    (inline DataFrame ops)
 #     p11_rename_flat                    L683    (inline DataFrame ops)
@@ -159,114 +159,114 @@ Cross-engine determinism rules used throughout:
 #     q5_local_supplier                  L1391   (inline DataFrame ops)
 #     q6_forecast_revenue                L1415   (inline DataFrame ops)
 #   [s]
-#     s10_orc_roundtrip                  L6112   (inline DataFrame ops)
-#     s11_csv_roundtrip                  L5840   sources/ndjson
-#     s12_snapshot_diff                  L5946   sources/store
-#     s13_scd2_history                   L3338   operators/temporal
+#     s10_orc_roundtrip                  L5958   (inline DataFrame ops)
+#     s11_csv_roundtrip                  L5686   sources/ndjson
+#     s12_snapshot_diff                  L5792   sources/store
+#     s13_scd2_history                   L3184   operators/temporal
 #     s14_soft_delete                    L1453   sources/store
 #     s15_time_travel                    L1496   sources/store
 #     s1_s4_ndjson_roundtrip             L605    sources/ndjson
 #     s8_upsert_lastwin                  L1442   operators/relational
 #     s9_bucketed_upsert                 L1551   sources/store
 #   [st]
-#     st10_streaming_hll                 L7323   operators/sketches
-#     st11_streaming_ewma                L2117   streaming/smoothing
-#     st12_streaming_cep                 L2064   streaming/cep
-#     st13_streaming_attribution         L1773   streaming/attribution
-#     st14_streaming_multitouch          L1820   streaming/multitouch
-#     st15_streaming_multitouch_wm       L1862   streaming/multitouch_wm
-#     st16_streaming_flows_wm            L1913   streaming/flows_wm
-#     st17_streaming_markov              L1965   streaming/markov
-#     st18_streaming_attribution_wm      L2013   streaming/attribution_wm
-#     st1_tumbling_window                L2232   (inline DataFrame ops)
-#     st2_sessionize                     L2243   (inline DataFrame ops)
-#     st3_stream_agg_maintenance         L1593   streaming/upsert
-#     st4_stream_stream_join             L2177   streaming/joins
-#     st5_streaming_neardup              L1640   streaming/neardup
-#     st6_streaming_kmv                  L1683   operators/sketches
-#     st7_streaming_session_flows        L1731   streaming/flows
-#     st8_streaming_bloom                L6911   operators/sketches
-#     st9_streaming_cms                  L7002   operators/sketches
+#     st10_streaming_hll                 L7147   operators/sketches
+#     st11_streaming_ewma                L1980   streaming/smoothing
+#     st12_streaming_cep                 L1941   streaming/cep
+#     st13_streaming_attribution         L1742   streaming/attribution
+#     st14_streaming_multitouch          L1773   streaming/multitouch
+#     st15_streaming_multitouch_wm       L1801   streaming/multitouch_wm
+#     st16_streaming_flows_wm            L1838   streaming/flows_wm
+#     st17_streaming_markov              L1874   streaming/markov
+#     st18_streaming_attribution_wm      L1906   streaming/attribution_wm
+#     st1_tumbling_window                L2078   (inline DataFrame ops)
+#     st2_sessionize                     L2089   (inline DataFrame ops)
+#     st3_stream_agg_maintenance         L1615   streaming/upsert
+#     st4_stream_stream_join             L2022   streaming/joins
+#     st5_streaming_neardup              L1648   streaming/neardup
+#     st6_streaming_kmv                  L1677   operators/sketches
+#     st7_streaming_session_flows        L1714   streaming/flows
+#     st8_streaming_bloom                L6757   operators/sketches
+#     st9_streaming_cms                  L6839   operators/sketches
 #   [t]
-#     t10_tfidf                          L2547   operators/textops
-#     t11_unigram_logprob                L2553   operators/textops
-#     t12_compression_ratio              L2560   operators/textops
-#     t13_chunk_tokens                   L6135   operators/textops
-#     t14_bpe_pairs                      L6144   operators/textops
-#     t15_fold_accents                   L5887   functions/text
-#     t16_inverted_index                 L3364   operators/textops
-#     t17_bigram_logprob                 L3420   operators/textops
-#     t18_phrase_search                  L5406   operators/textops
-#     t19_proximity_rank                 L4167   operators/textops
-#     t1_lang_id                         L2507   operators/textops
-#     t20_quality_logistic               L5357   operators/textops
-#     t21_zipf_fit                       L4988   operators/textops
-#     t22_repetition_filter              L4915   operators/textops
-#     t23_bpe_train                      L4934   operators/textops
-#     t24_perplexity_buckets             L4977   operators/textops
-#     t25_substring_search               L6983   operators/textops
-#     t26_gopher_rules                   L7090   operators/textops
-#     t27_bpe_encode                     L7156   operators/textops
-#     t28_multi_substring                L7193   operators/textops
-#     t29_char_entropy                   L7245   operators/textops
-#     t2_quality_score                   L2512   operators/textops
-#     t30_hashed_classifier              L7301   operators/textops
-#     t31_ngram_novelty                  L7229   operators/textops
-#     t32_readability                    L7214   operators/textops
-#     t33_rake_keywords                  L6515   operators/textops
-#     t34_blocklist_screen               L6363   operators/curation
+#     t10_tfidf                          L2393   operators/textops
+#     t11_unigram_logprob                L2399   operators/textops
+#     t12_compression_ratio              L2406   operators/textops
+#     t13_chunk_tokens                   L5981   operators/textops
+#     t14_bpe_pairs                      L5990   operators/textops
+#     t15_fold_accents                   L5733   functions/text
+#     t16_inverted_index                 L3210   operators/textops
+#     t17_bigram_logprob                 L3266   operators/textops
+#     t18_phrase_search                  L5252   operators/textops
+#     t19_proximity_rank                 L4013   operators/textops
+#     t1_lang_id                         L2353   operators/textops
+#     t20_quality_logistic               L5203   operators/textops
+#     t21_zipf_fit                       L4834   operators/textops
+#     t22_repetition_filter              L4761   operators/textops
+#     t23_bpe_train                      L4780   operators/textops
+#     t24_perplexity_buckets             L4823   operators/textops
+#     t25_substring_search               L6820   operators/textops
+#     t26_gopher_rules                   L6914   operators/textops
+#     t27_bpe_encode                     L6980   operators/textops
+#     t28_multi_substring                L7017   operators/textops
+#     t29_char_entropy                   L7069   operators/textops
+#     t2_quality_score                   L2358   operators/textops
+#     t30_hashed_classifier              L7125   operators/textops
+#     t31_ngram_novelty                  L7053   operators/textops
+#     t32_readability                    L7038   operators/textops
+#     t33_rake_keywords                  L6361   operators/textops
+#     t34_blocklist_screen               L6209   operators/curation
 #     t35_vocab_gini                     L987    operators/textops
-#     t3_token_counts                    L2517   operators/textops
-#     t4_fingerprints                    L2522   operators/textops
-#     t5_corpus_stats                    L2527   operators/textops
-#     t6_repetition                      L2588   operators/curation
-#     t7_redact_pii                      L2673   operators/curation
-#     t8_quality_gate                    L2653   operators/curation
-#     t9_top_tokens                      L2541   operators/textops
+#     t3_token_counts                    L2363   operators/textops
+#     t4_fingerprints                    L2368   operators/textops
+#     t5_corpus_stats                    L2373   operators/textops
+#     t6_repetition                      L2434   operators/curation
+#     t7_redact_pii                      L2519   operators/curation
+#     t8_quality_gate                    L2499   operators/curation
+#     t9_top_tokens                      L2387   operators/textops
 #   [u]
-#     u10_leakage_safe_splits            L7498   operators/graph
-#     u11_dedup_eval                     L7459   operators/dedup
-#     u12_lsh_eval                       L6716   operators/dedup
-#     u13_entity_resolution              L6390   operators/dedup
-#     u14_dataloader_pipeline            L6449   operators/curation
-#     u15_kcenter_coreset                L4769   operators/similarity
-#     u16_temperature_mixture            L4892   operators/curation
-#     u1_canonical_urls                  L2568   operators/curation
-#     u2_domain_stats                    L3661   operators/curation
-#     u3_url_dedup_groups                L4094   operators/curation
-#     u4_domain_quota                    L3676   operators/textops
-#     u6_winsorize                       L5120   operators/curation
-#     u7_winsorize_pct                   L5139   operators
-#     u8_importance_weights              L7138   operators/curation
-#     u9_curation_pipeline               L7398   operators/textops
+#     u10_leakage_safe_splits            L7309   operators/graph
+#     u11_dedup_eval                     L7270   operators/dedup
+#     u12_lsh_eval                       L6562   operators/dedup
+#     u13_entity_resolution              L6236   operators/dedup
+#     u14_dataloader_pipeline            L6295   operators/curation
+#     u15_kcenter_coreset                L4615   operators/similarity
+#     u16_temperature_mixture            L4738   operators/curation
+#     u1_canonical_urls                  L2414   operators/curation
+#     u2_domain_stats                    L3507   operators/curation
+#     u3_url_dedup_groups                L3940   operators/curation
+#     u4_domain_quota                    L3522   operators/textops
+#     u6_winsorize                       L4966   operators/curation
+#     u7_winsorize_pct                   L4985   operators
+#     u8_importance_weights              L6962   operators/curation
+#     u9_curation_pipeline               L7209   operators/textops
 #   [v]
-#     v10_prefix_rerank                  L4705   operators/similarity
-#     v11_ann_recall                     L5158   operators/similarity
-#     v12_ivf_pruned                     L2433   operators/similarity
-#     v13_lsh_pruned                     L2341   operators/similarity
-#     v14_rank_metrics                   L7068   operators/similarity
-#     v15_kmeans_stats                   L7176   operators/similarity
-#     v16_ivfpq_topk                     L7282   operators/similarity
-#     v17_filtered_ann                   L7370   operators/similarity
-#     v18_mmr_topk                       L4722   operators/similarity
-#     v19_binary_ann                     L4788   operators/similarity
-#     v1_ann_topk                        L2322   operators/similarity
-#     v20_rag_pipeline                   L4849   operators/similarity
-#     v21_l2_range_join                  L4741   operators/similarity
-#     v22_ivf_batch_probe                L2458   operators/similarity
-#     v2_ann_lsh                         L2329   operators/similarity
-#     v3_ivf_topk                        L2390   operators/similarity
-#     v4_pca_project                     L2487   operators/similarity
-#     v5_knn_join                        L5975   operators/similarity
-#     v6_sq8_topk                        L3571   operators/similarity
-#     v7_pq_topk                         L4014   operators/similarity
-#     v8_pooled_embeddings               L5378   operators/similarity
-#     v9_hybrid_rrf                      L4804   operators/similarity
+#     v10_prefix_rerank                  L4551   operators/similarity
+#     v11_ann_recall                     L5004   operators/similarity
+#     v12_ivf_pruned                     L2279   operators/similarity
+#     v13_lsh_pruned                     L2187   operators/similarity
+#     v14_rank_metrics                   L6892   operators/similarity
+#     v15_kmeans_stats                   L7000   operators/similarity
+#     v16_ivfpq_topk                     L7106   operators/similarity
+#     v17_filtered_ann                   L7181   operators/similarity
+#     v18_mmr_topk                       L4568   operators/similarity
+#     v19_binary_ann                     L4634   operators/similarity
+#     v1_ann_topk                        L2168   operators/similarity
+#     v20_rag_pipeline                   L4695   operators/similarity
+#     v21_l2_range_join                  L4587   operators/similarity
+#     v22_ivf_batch_probe                L2304   operators/similarity
+#     v2_ann_lsh                         L2175   operators/similarity
+#     v3_ivf_topk                        L2236   operators/similarity
+#     v4_pca_project                     L2333   operators/similarity
+#     v5_knn_join                        L5821   operators/similarity
+#     v6_sq8_topk                        L3417   operators/similarity
+#     v7_pq_topk                         L3860   operators/similarity
+#     v8_pooled_embeddings               L5224   operators/similarity
+#     v9_hybrid_rrf                      L4650   operators/similarity
 #   [w]
-#     w10_rolling_distinct               L4053   (inline DataFrame ops)
-#     w11_rolling_quantiles              L5301   operators
-#     w12_sessionize                     L5056   operators/analytics
-#     w13_session_flows                  L5177   operators/analytics
+#     w10_rolling_distinct               L3899   (inline DataFrame ops)
+#     w11_rolling_quantiles              L5147   operators
+#     w12_sessionize                     L4902   operators/analytics
+#     w13_session_flows                  L5023   operators/analytics
 #     w14_sequence_match                 L1179   operators/analytics
 #     w15_touch_attribution              L1002   operators/analytics
 #     w16_touch_lag                      L1019   operators/analytics
@@ -282,34 +282,34 @@ Cross-engine determinism rules used throughout:
 #     w3_rank_topn_per_group             L1318   (inline DataFrame ops)
 #     w5_funnel                          L975    operators/analytics
 #     w6_cohort_retention                L1206   operators/analytics
-#     w7_hopping_window                  L6066   streaming/upsert
-#     w8_time_weighted_avg               L3724   operators
-#     w9_ohlc_bars                       L3973   operators/similarity
+#     w7_hopping_window                  L5912   streaming/upsert
+#     w8_time_weighted_avg               L3570   operators
+#     w9_ohlc_bars                       L3819   operators/similarity
 #   [x]
-#     x10_rolling_median                 L3641   operators
-#     x11_ewma                           L5523   operators
-#     x12_cusum_changepoint              L5219   operators
-#     x13_matrix_profile                 L4996   operators
-#     x14_sax_symbols                    L5193   operators/temporal
-#     x15_sax_motifs                     L5029   operators/temporal
-#     x16_sax_similarity                 L6884   operators/temporal
-#     x17_holt_linear                    L5546   operators/temporal
-#     x18_acf                            L3596   operators/temporal
-#     x19_holt_winters                   L5575   operators/temporal
+#     x10_rolling_median                 L3487   operators
+#     x11_ewma                           L5369   operators
+#     x12_cusum_changepoint              L5065   operators
+#     x13_matrix_profile                 L4842   operators
+#     x14_sax_symbols                    L5039   operators/temporal
+#     x15_sax_motifs                     L4875   operators/temporal
+#     x16_sax_similarity                 L6730   operators/temporal
+#     x17_holt_linear                    L5392   operators/temporal
+#     x18_acf                            L3442   operators/temporal
+#     x19_holt_winters                   L5421   operators/temporal
 #     x1_asof_join                       L912    operators/temporal
-#     x21_dtw_band                       L5608   operators/temporal
-#     x22_binseg_changepoints            L5644   operators/temporal
-#     x23_forecast_mase                  L5672   operators/temporal
-#     x24_series_features                L5702   operators/temporal
-#     x25_strength_features              L3467   operators/temporal
+#     x21_dtw_band                       L5454   operators/temporal
+#     x22_binseg_changepoints            L5490   operators/temporal
+#     x23_forecast_mase                  L5518   operators/temporal
+#     x24_series_features                L5548   operators/temporal
+#     x25_strength_features              L3313   operators/temporal
 #     x2_interval_join                   L929    operators/temporal
 #     x3_hierarchical_rollup             L952    operators/rollup
 #     x4_gapfill                         L1221   operators/temporal
 #     x5_mad_anomalies                   L1252   operators/temporal
-#     x6_ltob_downsample                 L5869   operators/temporal
-#     x7_lttb_downsample                 L6084   operators/temporal
-#     x8_seasonal_decompose              L3499   operators
-#     x9_series_correlation              L3620   operators
+#     x6_ltob_downsample                 L5715   operators/temporal
+#     x7_lttb_downsample                 L5930   operators/temporal
+#     x8_seasonal_decompose              L3345   operators
+#     x9_series_correlation              L3466   operators
 # === end TOC ===
 
 from __future__ import annotations
@@ -1590,6 +1590,28 @@ def q_s9_bucketed_upsert(spark, sf_dir):
     return out
 
 
+def _two_batch_stream(spark, prefix, part1, part2, start, read):
+    """The st* lifecycle: ``part1`` lands in a parquet source dir and
+    ``start(stream, state, ckpt)`` starts the streaming query over it;
+    one micro-batch runs, ``part2`` is appended and a second runs; then
+    ``read(state)`` is materialized before the temp root is removed."""
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
+    try:
+        part1.write.mode("append").parquet(src)
+        q = start(spark.readStream.schema(part1.schema).parquet(src), state, ckpt)
+        q.processAllAvailable()
+        part2.write.mode("append").parquet(src)
+        q.processAllAvailable()
+        q.stop()
+        return read(state).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def q_st3_stream_agg_maintenance(spark, sf_dir):
     """A REAL Structured-Streaming run inside the correctness gate: the
     events table is re-written as two micro-batch files, streamed with
@@ -1597,9 +1619,6 @@ def q_st3_stream_agg_maintenance(spark, sf_dir):
     merge_agg_state), and the FINAL STATE is the result — hash-checked
     against a full batch recompute in SQL. Proves the streaming MV
     path end-to-end, not just its batch twin."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.upsert import (
         read_agg_state,
         streaming_agg_maintenance,
@@ -1609,32 +1628,21 @@ def q_st3_stream_agg_maintenance(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", F.col("value").cast("double").alias("value")
     )
-    root = tempfile.mkdtemp(prefix="st3_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, event_id long, value double"
-        ).parquet(src)
-        specs = {"value": ["sum", "count"], "event_id": "max"}
-        q = streaming_agg_maintenance(stream, state, ["user_id"], specs, checkpoint=ckpt)
-        q.processAllAvailable()
-        ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            read_agg_state(spark, state, ["user_id"], specs)
-            .select(
-                "user_id",
-                F.round("value_sum", 4).alias("value_sum"),
-                "value_count",
-                "event_id_max",
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    specs = {"value": ["sum", "count"], "event_id": "max"}
+    return _two_batch_stream(
+        spark, "st3_",
+        ev.filter(F.col("event_id") % 2 == 0),
+        ev.filter(F.col("event_id") % 2 == 1),
+        lambda stream, state, ckpt: streaming_agg_maintenance(
+            stream, state, ["user_id"], specs, checkpoint=ckpt
+        ),
+        lambda state: read_agg_state(spark, state, ["user_id"], specs).select(
+            "user_id",
+            F.round("value_sum", 4).alias("value_sum"),
+            "value_count",
+            "event_id_max",
+        ),
+    )
 
 
 def q_st5_streaming_neardup(spark, sf_dir):
@@ -1648,36 +1656,22 @@ def q_st5_streaming_neardup(spark, sf_dir):
     oracle recomputes the verdicts as one window over an explicit batch
     column — lexicographic (batch, id) bucket ownership — proving the
     incremental state machinery equals the batch semantics."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.neardup import streaming_neardup
 
     _tune(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="st5_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        docs.write.mode("append").parquet(src)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = streaming_neardup(
+    return _two_batch_stream(
+        spark, "st5_",
+        docs,
+        docs.select((F.col("doc_id") + 100001).alias("doc_id"), "text"),
+        lambda stream, state, ckpt: streaming_neardup(
             stream, state, "doc_id", "text",
             num_hashes=4, rows_per_band=2, checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        docs.select(
-            (F.col("doc_id") + 100001).alias("doc_id"), "text"
-        ).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            spark.read.parquet(f"{state}/verdicts")
-            .select("doc_id", "admitted")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: spark.read.parquet(f"{state}/verdicts").select(
+            "doc_id", "admitted"
+        ),
+    )
 
 
 def q_st6_streaming_kmv(spark, sf_dir):
@@ -1690,9 +1684,6 @@ def q_st6_streaming_kmv(spark, sf_dir):
     REAL 2-batch streaming run hash-checks against the plain k4
     oracle, proving the cross-batch fold exact (the st5/st6 contract:
     streaming machinery equals batch semantics)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.operators.sketches import kmv_distinct
     from healthcare_api_spark.streaming.sketches import (
         read_kmv_state,
@@ -1701,31 +1692,23 @@ def q_st6_streaming_kmv(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id", "ts")
-    root = tempfile.mkdtemp(prefix="st6_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).drop("ts").write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "event_type string, user_id long"
-        ).parquet(src)
-        q = streaming_kmv(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st6_",
+        ev.filter(cutoff).drop("ts"),
+        ev.filter(~cutoff).drop("ts"),
+        lambda stream, state, ckpt: streaming_kmv(
             stream, state, ["event_type"], "user_id", k=64, checkpoint=ckpt
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).drop("ts").write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        est = kmv_distinct(read_kmv_state(spark, state, ["event_type"]), k=64)
-        out = est.select(
+        ),
+        lambda state: kmv_distinct(
+            read_kmv_state(spark, state, ["event_type"]), k=64
+        ).select(
             "event_type",
             "n_seen",
             "est_distinct",
             F.array_join(F.col("kmv"), ",").alias("kmv_str"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+    )
 
 
 def q_st7_streaming_session_flows(spark, sf_dir):
@@ -1738,9 +1721,6 @@ def q_st7_streaming_session_flows(spark, sf_dir):
     once, and the final matrix must EQUAL the batch w13 computation —
     this gate hash-checks the streaming run against the w13 oracle
     VERBATIM (the st5/st6 contract on a third operator family)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.flows import (
         read_session_flows,
         streaming_session_flows,
@@ -1748,26 +1728,15 @@ def q_st7_streaming_session_flows(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    root = tempfile.mkdtemp(prefix="st7_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_session_flows(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st7_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_session_flows(
             stream, state, "user_id", "ts", "event_type",
             gap_minutes=30, checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = read_session_flows(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_session_flows(spark, state),
+    )
 
 
 def q_st13_streaming_attribution(spark, sf_dir):
@@ -1781,9 +1750,6 @@ def q_st13_streaming_attribution(spark, sf_dir):
     hash-checks the live run against the w15 oracle VERBATIM (the
     st5-st12 streaming-equals-batch contract extended to the
     attribution family)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.attribution import (
         read_touch_attribution,
         streaming_touch_attribution,
@@ -1793,28 +1759,15 @@ def q_st13_streaming_attribution(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="st13_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string, value double"
-        ).parquet(src)
-        q = streaming_touch_attribution(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st13_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_touch_attribution(
             stream, state, "user_id", "ts", "event_type", "purchase",
             value_col="value", checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = read_touch_attribution(spark, state).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_touch_attribution(spark, state),
+    )
 
 
 def q_st14_streaming_multitouch(spark, sf_dir):
@@ -1827,9 +1780,6 @@ def q_st14_streaming_multitouch(spark, sf_dir):
     VERBATIM). Hash-checks against the w17 oracle — the 14th
     streaming-equals-batch family, and the first carrying LIST-valued
     state (st13's struct extremes suffice for first/last only)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.multitouch import (
         read_multitouch,
         streaming_multitouch,
@@ -1837,26 +1787,15 @@ def q_st14_streaming_multitouch(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    root = tempfile.mkdtemp(prefix="st14_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_multitouch(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st14_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_multitouch(
             stream, state, "user_id", "ts", "event_type", "purchase",
             halflife="1 hour", checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = read_multitouch(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_multitouch(spark, state),
+    )
 
 
 def q_st15_streaming_multitouch_wm(spark, sf_dir):
@@ -1874,9 +1813,6 @@ def q_st15_streaming_multitouch_wm(spark, sf_dir):
     aggregates) and runs w17's attribution over the survivors + the
     two audit rows — lateness handling is hash-verified, not
     asserted."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.multitouch_wm import (
         read_multitouch_wm,
         streaming_multitouch_wm,
@@ -1886,28 +1822,17 @@ def q_st15_streaming_multitouch_wm(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="st15_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        on_time = F.col("event_id") % 3 != 0
-        ev.filter(on_time).drop("event_id").write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_multitouch_wm(
+    on_time = F.col("event_id") % 3 != 0
+    return _two_batch_stream(
+        spark, "st15_",
+        ev.filter(on_time).drop("event_id"),
+        ev.filter(~on_time).drop("event_id"),
+        lambda stream, state, ckpt: streaming_multitouch_wm(
             stream, state, "user_id", "ts", "event_type", "purchase",
             halflife="1 hour", lateness="15 days", checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~on_time).drop("event_id").write.mode("append").parquet(
-            src
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = read_multitouch_wm(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_multitouch_wm(spark, state),
+    )
 
 
 def q_st16_streaming_flows_wm(spark, sf_dir):
@@ -1924,9 +1849,6 @@ def q_st16_streaming_flows_wm(spark, sf_dir):
     '(dropped, late)' audit row. The oracle restates the drop rule in
     SQL and runs w13 over the survivors
     (streaming/flows_wm.py)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.flows_wm import (
         read_session_flows_wm,
         streaming_session_flows_wm,
@@ -1936,30 +1858,17 @@ def q_st16_streaming_flows_wm(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="st16_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        on_time = F.col("event_id") % 3 != 0
-        ev.filter(on_time).drop("event_id").write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_session_flows_wm(
+    on_time = F.col("event_id") % 3 != 0
+    return _two_batch_stream(
+        spark, "st16_",
+        ev.filter(on_time).drop("event_id"),
+        ev.filter(~on_time).drop("event_id"),
+        lambda stream, state, ckpt: streaming_session_flows_wm(
             stream, state, "user_id", "ts", "event_type",
             gap_minutes=30, lateness="15 days", checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~on_time).drop("event_id").write.mode("append").parquet(
-            src
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = read_session_flows_wm(spark, state).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_session_flows_wm(spark, state),
+    )
 
 
 def q_st17_streaming_markov(spark, sf_dir):
@@ -1976,9 +1885,6 @@ def q_st17_streaming_markov(spark, sf_dir):
     oracle exactly: the 15th streaming-equals-batch family, and the
     first whose per-batch maintainer is PURE DataFrame (one window
     lag — no applyInPandas anywhere)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.markov import (
         read_markov_attribution,
         streaming_markov_attribution,
@@ -1986,28 +1892,15 @@ def q_st17_streaming_markov(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    root = tempfile.mkdtemp(prefix="st17_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_markov_attribution(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st17_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_markov_attribution(
             stream, state, "user_id", "ts", "event_type", "purchase",
             checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = read_markov_attribution(
-            spark, state, "purchase", iters=8
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_markov_attribution(spark, state, "purchase", iters=8),
+    )
 
 
 def q_st18_streaming_attribution_wm(spark, sf_dir):
@@ -2023,9 +1916,6 @@ def q_st18_streaming_attribution_wm(spark, sf_dir):
     watermarked st* family that is PURE DataFrame end to end). The
     oracle restates the rule in SQL and runs w15 over the
     survivors + the audit rows."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.attribution_wm import (
         read_touch_attribution_wm,
         streaming_touch_attribution_wm,
@@ -2035,30 +1925,17 @@ def q_st18_streaming_attribution_wm(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="st18_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        on_time = F.col("event_id") % 3 != 0
-        ev.filter(on_time).drop("event_id").write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string, value double"
-        ).parquet(src)
-        q = streaming_touch_attribution_wm(
+    on_time = F.col("event_id") % 3 != 0
+    return _two_batch_stream(
+        spark, "st18_",
+        ev.filter(on_time).drop("event_id"),
+        ev.filter(~on_time).drop("event_id"),
+        lambda stream, state, ckpt: streaming_touch_attribution_wm(
             stream, state, "user_id", "ts", "event_type", "purchase",
             lateness="15 days", value_col="value", checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~on_time).drop("event_id").write.mode("append").parquet(
-            src
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = read_touch_attribution_wm(spark, state).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_touch_attribution_wm(spark, state),
+    )
 
 
 def q_st12_streaming_cep(spark, sf_dir):
@@ -2073,9 +1950,6 @@ def q_st12_streaming_cep(spark, sf_dir):
     hash-checks the live run against the w14 oracle VERBATIM (the
     st5/st6/st7 contract on a seventh operator family: stateful
     multi-stage matching)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.cep import (
         read_sequence_matches,
         streaming_sequence_match,
@@ -2083,24 +1957,15 @@ def q_st12_streaming_cep(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    root = tempfile.mkdtemp(prefix="st12_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, event_type string"
-        ).parquet(src)
-        q = streaming_sequence_match(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st12_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_sequence_match(
             stream, state, "user_id", "ts", "event_type",
             ["signup", "click", "purchase"],
             within_us=172800 * 1_000_000, checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = read_sequence_matches(
+        ),
+        lambda state: read_sequence_matches(
             spark, state, "user_id", n_stages=3
         ).select(
             "user_id",
@@ -2108,10 +1973,8 @@ def q_st12_streaming_cep(spark, sf_dir):
             F.date_format("ts_2", "yyyy-MM-dd HH:mm:ss").alias("ts_2"),
             F.date_format("ts_3", "yyyy-MM-dd HH:mm:ss").alias("ts_3"),
             "span_us",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+    )
 
 
 def q_st11_streaming_ewma(spark, sf_dir):
@@ -2125,9 +1988,6 @@ def q_st11_streaming_ewma(spark, sf_dir):
     this extends the streaming-equals-batch contract to a SEQUENTIAL
     recursion family, and the gate hash-checks the live run against
     the x11 oracle VERBATIM."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.streaming.smoothing import (
         read_ewma,
         streaming_ewma,
@@ -2135,43 +1995,28 @@ def q_st11_streaming_ewma(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
-    root = tempfile.mkdtemp(prefix="st11_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
 
     def _hourly(df):
         return df.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
         ).agg(F.round(F.sum("value"), 6).alias("v"))
 
-    try:
-        cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        ev.filter(cutoff).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "event_type string, ts timestamp, value double"
-        ).parquet(src)
-        q = streaming_ewma(
+    cutoff = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
+    return _two_batch_stream(
+        spark, "st11_", ev.filter(cutoff), ev.filter(~cutoff),
+        lambda stream, state, ckpt: streaming_ewma(
             stream, state, "event_type", "bucket", "v", alpha=0.3,
             prepare=_hourly, checkpoint=ckpt,
-        )
-        q.processAllAvailable()
-        ev.filter(~cutoff).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            read_ewma(spark, state)
-            .select(
-                F.col("k").alias("event_type"),
-                F.date_format(
-                    F.timestamp_micros(F.col("us")), "yyyy-MM-dd HH:mm:ss"
-                ).alias("bucket"),
-                F.col("x").alias("v"),
-                F.round("ewma", 6).alias("ewma"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        ),
+        lambda state: read_ewma(spark, state).select(
+            F.col("k").alias("event_type"),
+            F.date_format(
+                F.timestamp_micros(F.col("us")), "yyyy-MM-dd HH:mm:ss"
+            ).alias("bucket"),
+            F.col("x").alias("v"),
+            F.round("ewma", 6).alias("ewma"),
+        ),
+    )
 
 
 def q_st4_stream_stream_join(spark, sf_dir):
@@ -2183,6 +2028,7 @@ def q_st4_stream_stream_join(spark, sf_dir):
     equivalent batch join in SQL (inner stream-stream joins emit every
     match; watermarks bound state, not the final row set). Oracle
     queued for r5."""
+    # own body, not _two_batch_stream: two sources and a file sink
     import shutil
     import tempfile
 
@@ -6919,9 +6765,6 @@ def q_st8_streaming_bloom(spark, sf_dir):
     (state digest + full-probe FP accounting) and the k9 oracle
     verifies it VERBATIM (the st5/st6/st7 contract: streaming
     machinery equals batch semantics)."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.operators import sketches
     from healthcare_api_spark.streaming.sketches import (
         read_bloom_state,
@@ -6933,21 +6776,15 @@ def q_st8_streaming_bloom(spark, sf_dir):
     members = cust.filter(F.col("c_acctbal") < 0).select(
         F.col("c_custkey").alias("k")
     )
-    root = tempfile.mkdtemp(prefix="st8_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        members.filter(F.col("k") % 2 == 0).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("k long").parquet(src)
-        q = streaming_bloom(
+    bloom = _two_batch_stream(
+        spark, "st8_",
+        members.filter(F.col("k") % 2 == 0),
+        members.filter(F.col("k") % 2 == 1),
+        lambda stream, state, ckpt: streaming_bloom(
             stream, state, "k", m_bits=4096, k_hashes=4, checkpoint=ckpt
-        )
-        q.processAllAvailable()
-        members.filter(F.col("k") % 2 == 1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        bloom = read_bloom_state(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda state: read_bloom_state(spark, state),
+    )
     probes = cust.select(F.col("c_custkey").alias("k"))
     probed = sketches.bloom_probe(bloom, probes, "k", m_bits=4096, k_hashes=4)
     truth = members.distinct().withColumn("_mem", F.lit(1))
@@ -7013,9 +6850,6 @@ def q_st9_streaming_cms(spark, sf_dir):
     KMV/Bloom, cell-sum is NOT replay-idempotent — safety rests on the
     versioned store's pre-batch-snapshot merge, which is exactly what
     this gate proves end-to-end."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.functions.text import tokens
     from healthcare_api_spark.operators import sketches
     from healthcare_api_spark.streaming.sketches import (
@@ -7033,25 +6867,15 @@ def q_st9_streaming_cms(spark, sf_dir):
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
-    root = tempfile.mkdtemp(prefix="st9_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        toks.filter(F.col("doc_id") % 2 == 0).select("tok").write.mode(
-            "append"
-        ).parquet(src)
-        stream = spark.readStream.schema("tok string").parquet(src)
-        q = streaming_cms(
+    sketch = _two_batch_stream(
+        spark, "st9_",
+        toks.filter(F.col("doc_id") % 2 == 0).select("tok"),
+        toks.filter(F.col("doc_id") % 2 == 1).select("tok"),
+        lambda stream, state, ckpt: streaming_cms(
             stream, state, "tok", depth=depth, width=width, checkpoint=ckpt
-        )
-        q.processAllAvailable()
-        toks.filter(F.col("doc_id") % 2 == 1).select("tok").write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        sketch = read_cms_state(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda state: read_cms_state(spark, state),
+    )
     total = sketch.filter(F.col("r") == 0).agg(
         F.sum("n").cast("bigint").alias("total")
     )
@@ -7334,9 +7158,6 @@ def q_st10_streaming_hll(spark, sf_dir):
     machinery equals batch semantics). This completes the mergeable-
     sketch maintenance matrix: KMV (bottom-k), Bloom (bit-OR), CMS
     (cell-sum), HLL (register-max) over the same crash-safe store."""
-    import shutil
-    import tempfile
-
     from healthcare_api_spark.operators import sketches
     from healthcare_api_spark.streaming.sketches import (
         read_hll_state,
@@ -7345,25 +7166,15 @@ def q_st10_streaming_hll(spark, sf_dir):
 
     _tune(spark)
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
-    root = tempfile.mkdtemp(prefix="st10_")
-    src, state, ckpt = f"{root}/src", f"{root}/state", f"{root}/ckpt"
-    try:
-        ev.filter(F.col("user_id") % 2 == 0).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "event_type string, user_id long"
-        ).parquet(src)
-        q = streaming_hll(
+    regs = _two_batch_stream(
+        spark, "st10_",
+        ev.filter(F.col("user_id") % 2 == 0),
+        ev.filter(F.col("user_id") % 2 == 1),
+        lambda stream, state, ckpt: streaming_hll(
             stream, state, ["event_type"], "user_id", p=9, checkpoint=ckpt
-        )
-        q.processAllAvailable()
-        ev.filter(F.col("user_id") % 2 == 1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        regs = read_hll_state(spark, state, ["event_type"]).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda state: read_hll_state(spark, state, ["event_type"]),
+    )
     return sketches.hll_distinct(regs, ["event_type"], p=9)
 
 

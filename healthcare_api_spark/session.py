@@ -18,8 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "healthcare-api-spark",
@@ -37,38 +35,19 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # permissive semantics (OOB array index → null, lenient casts) to
         # match the reference's dict-access behavior and SQL oracles
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r13 (guide §2.1), measured and kept at Spark's defaults with
-        # env overrides. parallelismFirst=false + a bytes-based
-        # advisory size was measured this round (VERDICT r12 #5): it
-        # moved the inverse-scaling group's 8c/32c ratios toward 1
-        # (m12 0.40→0.92, v16 0.48→1.00) and cut the join/agg-shuffle
-        # gates, but it coalesces the explode-heavy class — small
-        # shuffle BYTES, large downstream CPU (a14 +96%, d18 +86%,
-        # u12 +66%, t33 +48%, d4 +51% medians at sf0.1) — because one
-        # global bytes knob cannot see post-shuffle compute density.
-        # parallelismFirst=true already coalesces sub-minPartitionSize
-        # shuffles data-driven-ly while preserving parallelism above
-        # it, so the DEFAULT stays Spark's; deployments whose mix is
-        # scan/join-dominated can flip the env knobs (advisory toward
-        # the guide-§9 256m class). Full evidence: OPTIMIZATION_r13.md
-        # §2 and artifacts/r13/time_aqe_* / time_iso18_* pairs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get(
-                "SPARK_GRAFT_ADVISORY_PARTITION_BYTES",
-                str(64 * 1024 * 1024),
-            ),
-        )
+        # Spark's defaults, kept after measurement: a bytes-based advisory
+        # size with parallelismFirst=false sped up the scan/join gates
+        # but coalesced the explode-heavy class (small shuffle bytes,
+        # large downstream CPU) by +48..96%. Deployments with another
+        # mix override them through extra_conf. OPTIMIZATION_r13.md §2.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

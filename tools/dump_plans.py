@@ -3,14 +3,24 @@ queries at sf0.01 — reviewable evidence of pushdown/broadcast/shuffle
 shape without running anything.
 
 Usage: python tools/dump_plans.py
+       python tools/dump_plans.py --out DIR --tag TAG query [query ...]
+
+The second form writes one query's plan to DIR/<query>_<tag>.txt
+(before/after evidence, at $SPARK_GRAFT_SF_DIR or sf0.01). Streaming
+lifecycle gates (st*) run their micro-batches inside the gate function,
+so their dumped plan covers only the read side.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers import the package too; they inherit the JVM's environment
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 import __spark_entry__ as entrymod
 from healthcare_api_spark import get_spark
@@ -155,10 +165,33 @@ QUERIES = [
 ]
 
 
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", help="write DIR/<query>_<tag>.txt instead of PLANS.md")
+    ap.add_argument("--tag", help="file-name tag for --out, e.g. before/after")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if bool(args.out) != bool(args.tag) or bool(args.out) != bool(args.queries):
+        ap.error("--out, --tag and queries go together")
     sf_dir = "/root/testdata/sf0.01"
     spark = get_spark("plans")
     qs = entrymod.queries()
+    if args.out:
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", sf_dir)
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.queries:
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f:
+                f.write(f"# {name} ({args.tag}) — sf_dir={sf_dir}\n\n")
+                f.write(_plan(qs[name](spark, sf_dir)) + "\n")
+            print(f"wrote {path}")
+        return
     out = [
         "# PLANS — formatted physical plans of headline queries (sf0.01)",
         "",
@@ -169,10 +202,7 @@ def main() -> None:
         "",
     ]
     for name in QUERIES:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _plan(qs[name](spark, sf_dir))
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
