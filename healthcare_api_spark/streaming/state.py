@@ -10,21 +10,29 @@ never reads its own output.
 
 Layout::
 
-    {path}/d{batch_id}/_pt={bucket}/part-*.parquet   raw batch delta
+    {path}/d{batch_id}/part-*.parquet                raw batch delta, rows
+                                                     sorted by a ``_pt``
+                                                     bucket column
     {path}/v{batch_id}/_pt={bucket}/part-*.parquet   compacted snapshot
     {path}/{d,v}{batch_id}/_SUCCESS                  completeness marker
     {path}/_store.json                               the store manifest
 
 - ``merge_batch`` writes the RAW delta as ``d{batch_id}`` — no
-  pre-state read, commit I/O ∝ |delta|. Every ``compact_every`` pending
-  deltas the commit instead writes a full ``v{batch_id}`` base snapshot
-  (tombstones included) over the batch's touched buckets AND every
-  bucket with a pending delta, which bounds the fold depth and lets
-  retention drop shadowed versions.
+  pre-state read, commit I/O ∝ |delta|, as few files as the delta plan
+  has partitions (a directory per bucket made every commit's cost its
+  file count). Every ``compact_every`` pending deltas the commit
+  instead writes a full ``v{batch_id}`` base snapshot (tombstones
+  included) over the batch's touched buckets AND every bucket with a
+  pending delta, which bounds the fold depth and lets retention drop
+  shadowed versions.
 - ``read`` resolves per bucket the newest complete base snapshot and
   reduces it together with EVERY newer complete delta in ONE pass — one
   aggregate exchange per read, whatever the fold depth, run lazily
-  inside the consumer's own job.
+  inside the consumer's own job. A bucket restriction is a ``_pt IN``
+  filter on the delta scan, which Parquet pushes down to row groups.
+- Building either plan submits no Spark job: the census is two glob
+  listings, and the row schema comes from the manifest, not from
+  Parquet footers.
 
 A store declares exactly one merge kind; its single pass relies on the
 kind's contract:
@@ -57,38 +65,59 @@ versions. Retention is per bucket, so no bucket's only or
 replay-needed copy is ever pruned.
 
 Store manifest: the first commit writes ``_store.json`` — merge kind,
-``key_cols``, ``num_buckets`` and the kind's parameters (e.g. the kmv
-``k``). Every ``read`` and ``merge_batch`` compares it with the opening
-store's configuration and raises on a mismatch, so a reader built with
-the wrong ``k`` or bucket count fails instead of silently folding
-differently from the writer.
+``key_cols``, ``num_buckets``, the kind's parameters (e.g. the kmv
+``k``) and the delta's row schema. Every ``read`` and ``merge_batch``
+compares it with the opening store's configuration and raises on a
+mismatch, so a reader built with the wrong ``k`` or bucket count fails
+instead of silently folding differently from the writer. Reads apply
+the recorded schema to every delta and snapshot, so a commit whose
+delta or merged snapshot has other columns or types raises too.
+
+The store's own jobs carry a ``spark.job.description`` of ``state
+{path} d{batch_id}|v{batch_id} <phase>`` (the delta write, the
+compaction's cover collect, the snapshot write).
 """
 
 from __future__ import annotations
 
 import json
+import re
+from contextlib import contextmanager
 from functools import reduce
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
 _BUCKET_SEED = 42
 _MANIFEST = "_store.json"
+# the census's two glob listings, matched against the ``{a,b}`` string
+# of their paths
+_COMPLETE = re.compile(r"/([dv])(\d+)/_SUCCESS(?=,|\}$)")
+_SNAPSHOT_BUCKET = re.compile(r"/v(\d+)/_pt=(\d+)(?=,|\}$)")
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path, JVM) for ``path`` — the same listing
-    code addresses local paths and object stores."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """A JVM class by its full name: ``jvm.a.b.C`` would cost one py4j
+    round trip per name segment."""
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
 
 
-def _path_int(pattern: str):
-    """The integer ``pattern`` captures from each row's file path."""
-    return F.regexp_extract(F.col("_metadata.file_path"), pattern, 1).cast(
-        "long"
+def _filesystem(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of ``path``, the Path class) — the same
+    listing code addresses local paths and object stores."""
+    hpath_cls = _jclass(spark, "org.apache.hadoop.fs.Path")
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return hpath_cls(path).getFileSystem(conf), hpath_cls
+
+
+def _glob(spark: SparkSession, fs, hpath_cls, pattern: str) -> str:
+    """The paths matching ``pattern`` as one ``{a,b}`` string — the
+    listing and the conversion are one py4j call each."""
+    stats = fs.globStatus(hpath_cls(pattern))
+    return _jclass(spark, "org.apache.commons.lang3.ArrayUtils").toString(
+        _jclass(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(stats)
     )
 
 
@@ -189,47 +218,28 @@ class BucketedVersionedState:
     # -- directory census (driver-side NAMES only, never data) --------
     def _census(
         self, spark: SparkSession
-    ) -> tuple[dict[int, list[int]], dict[int, list[int]]]:
-        """(base snapshots: bucket -> ascending batch_ids of complete
-        ``v{id}`` versions containing it, deltas: batch_id -> sorted
-        buckets present in the complete ``d{id}`` directory)."""
-        fs, root, jvm = _fs_and_path(spark, self.path)
+    ) -> tuple[dict[int, list[int]], set[int], set[int]]:
+        """(bases: bucket -> ascending batch_ids of the complete
+        ``v{id}`` snapshots holding it, the complete snapshot ids, the
+        complete delta ids) — two glob listings, whatever the number of
+        versions and buckets."""
+        fs, hpath_cls = _filesystem(spark, self.path)
+        complete = {
+            (kind, int(v))
+            for kind, v in _COMPLETE.findall(
+                _glob(spark, fs, hpath_cls, f"{self.path}/[dv]*/_SUCCESS")
+            )
+        }
         bases: dict[int, list[int]] = {}
-        deltas: dict[int, list[int]] = {}
-        if not fs.exists(root):
-            return bases, deltas
-        for vstat in fs.listStatus(root):
-            name = vstat.getPath().getName()
-            kind = name[0]
-            if kind not in ("v", "d"):
-                continue
-            try:
-                vid = int(name[1:])
-            except ValueError:
-                continue
-            if not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(vstat.getPath(), "_SUCCESS")
-            ):
-                continue
-            bs = [
-                int(bstat.getPath().getName()[4:])
-                for bstat in fs.listStatus(vstat.getPath())
-                if bstat.getPath().getName().startswith("_pt=")
-            ]
-            if kind == "v":
-                for b in bs:
-                    bases.setdefault(b, []).append(vid)
-            else:
-                deltas[vid] = sorted(bs)
+        for v, b in _SNAPSHOT_BUCKET.findall(
+            _glob(spark, fs, hpath_cls, f"{self.path}/v*/_pt=*")
+        ):
+            if ("v", int(v)) in complete:
+                bases.setdefault(int(b), []).append(int(v))
         for versions in bases.values():
             versions.sort()
-        return bases, deltas
-
-    def complete_versions(self, spark: SparkSession) -> list[int]:
-        bases, deltas = self._census(spark)
-        out = {v for vs in bases.values() for v in vs}
-        out.update(deltas)
-        return sorted(out)
+        snapshots = {v for kind, v in complete if kind == "v"}
+        return bases, snapshots, {v for kind, v in complete if kind == "d"}
 
     # -- the store manifest -------------------------------------------
     def _manifest(self) -> dict:
@@ -241,21 +251,26 @@ class BucketedVersionedState:
             "params": self.params,
         }
 
-    def _sync_manifest(self, spark: SparkSession, create: bool) -> None:
+    def _sync_manifest(
+        self, spark: SparkSession, schema: StructType | None = None
+    ) -> StructType | None:
         """Raise when ``_store.json`` disagrees with this store's
-        configuration; with ``create`` (a commit), write it when it
-        does not exist yet."""
-        fs, _, jvm = _fs_and_path(spark, self.path)
-        mpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{_MANIFEST}")
+        configuration, else return the delta row schema it records
+        (None before the first commit). A commit passes its delta's
+        ``schema``, which the first one records with the
+        configuration."""
+        fs, hpath_cls = _filesystem(spark, self.path)
+        mpath = hpath_cls(f"{self.path}/{_MANIFEST}")
         mine = self._manifest()
         if not fs.exists(mpath):
-            if create:
+            if schema is not None:
                 out = fs.create(mpath, True)
                 try:
-                    out.write(bytearray(json.dumps(mine).encode()))
+                    doc = {**mine, "schema": json.loads(schema.json())}
+                    out.write(bytearray(json.dumps(doc).encode()))
                 finally:
                     out.close()
-            return
+            return schema
         stream = fs.open(mpath)
         try:
             theirs = json.loads(bytes(stream.readAllBytes()).decode())
@@ -269,6 +284,7 @@ class BucketedVersionedState:
                 + "; opened with "
                 + ", ".join(f"{k}={mine[k]!r}" for k in diff)
             )
+        return StructType.fromJson(theirs["schema"])
 
     # -- reads --------------------------------------------------------
     def _base_paths(
@@ -290,30 +306,44 @@ class BucketedVersionedState:
                 paths.append(f"{self.path}/v{eligible[-1]}/_pt={b}")
         return sorted(paths)
 
-    def _read_base(self, spark: SparkSession, paths: list[str]):
+    def _read_base(
+        self, spark: SparkSession, schema: StructType, paths: list[str]
+    ):
         # every snapshot carries ``_tomb`` (the emptied-bucket markers
         # ``_write_snapshot`` adds); deltas never do
         if not paths:
             return None
-        df = spark.read.parquet(*paths)
+        df = spark.read.schema(
+            StructType([*schema.fields, StructField("_tomb", BooleanType())])
+        ).parquet(*paths)
         return df.filter(~F.col("_tomb")).drop("_tomb")
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        schema: StructType,
+        versions: list[int],
+        buckets: set[int] | None = None,
+    ) -> DataFrame:
+        """The ``d{v}`` deltas of ``versions`` in one scan, ``_pt``
+        column included; ``buckets`` restricts it by a predicate
+        Parquet pushes down (row groups skip by their ``_pt`` range)."""
+        df = spark.read.schema(
+            StructType([*schema.fields, StructField("_pt", IntegerType())])
+        ).parquet(*[f"{self.path}/d{v}" for v in versions])
+        if buckets is None:
+            return df
+        return df.filter(F.col("_pt").isin(*buckets))
 
     @staticmethod
     def _pending(
-        bases: dict[int, list[int]],
-        deltas: dict[int, list[int]],
-        before_batch: int | None,
+        snapshots: set[int], deltas: set[int], before_batch: int | None
     ) -> list[int]:
         """Complete deltas newer than the newest eligible base ANYWHERE
         (older ones are fully shadowed for every bucket by the
         coverage invariant), ascending."""
         base_max = max(
-            (
-                v
-                for vs in bases.values()
-                for v in vs
-                if before_batch is None or v < before_batch
-            ),
+            (v for v in snapshots if before_batch is None or v < before_batch),
             default=-1,
         )
         return sorted(
@@ -325,6 +355,7 @@ class BucketedVersionedState:
     def _fold(
         self,
         spark: SparkSession,
+        schema: StructType,
         base: DataFrame | None,
         versions: list[int],
         buckets: set[int] | None,
@@ -336,24 +367,18 @@ class BucketedVersionedState:
         if not versions and batch is None:
             return base
 
-        def scan(vs, schema=None):
-            # one scan over the version ROOTS: a path per bucket dir
-            # would pass Spark's 32-path threshold and list them in a
-            # distributed job; the bucket restriction filters on the
-            # file path instead, which prunes files at planning time
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            df = reader.option("recursiveFileLookup", "true").parquet(
-                *[f"{self.path}/d{v}" for v in vs]
-            )
-            if buckets is None:
-                return df
-            return df.filter(_path_int(r"/_pt=(\d+)/").isin(*buckets))
+        def scan(vs, tag=False):
+            df = self._scan(spark, schema, vs, buckets)
+            if tag:  # the replace kind's version: the ``d{v}`` path part
+                path = F.col("_metadata.file_path")
+                v = F.regexp_extract(path, r"/d(\d+)/[^/]*$", 1).cast("long")
+                df = df.withColumn("_v", v)
+            return df.drop("_pt")
 
         if self.replace:
             parts = [] if base is None else [base.withColumn("_v", F.lit(-1))]
             if versions:
-                vtag = _path_int(r"/d(\d+)/_pt=")
-                parts.append(scan(versions).withColumn("_v", vtag))
+                parts.append(scan(versions, tag=True))
             if batch is not None:
                 parts.append(batch[1].withColumn("_v", F.lit(batch[0])))
             u = reduce(DataFrame.unionByName, parts)
@@ -366,14 +391,10 @@ class BucketedVersionedState:
             if self.clear_if_null is not None:
                 u = u.filter(F.col(self.clear_if_null).isNotNull())
             return u
-        schema = None
         if base is None and versions:
-            first = scan(versions[:1])
-            base = self.merge_fn(None, first)
-            # every delta is the same writer's frame: skip re-inferring
-            # the schema (a footer-reading job) for the rest
-            schema, versions = first.schema, versions[1:]
-        rest = [scan(versions, schema)] if versions else []
+            base = self.merge_fn(None, scan(versions[:1]))
+            versions = versions[1:]
+        rest = [scan(versions)] if versions else []
         if batch is not None:
             rest.append(batch[1])
         if not rest:
@@ -397,27 +418,26 @@ class BucketedVersionedState:
         every newer complete delta — ``merge_fn(base, ⋃ deltas)`` for
         the associative kind, newest-version-per-key minus clear
         markers for the replace kind (module docstring) — so the read
-        plan holds one aggregate
-        exchange whatever the fold depth, and runs lazily inside the
-        consumer's own jobs. The one global cutoff (deltas newer than
-        the newest base anywhere) is exact because compaction always
-        covers every pending-delta bucket. Raises when the store's
-        manifest disagrees with this store's configuration."""
-        bases, deltas = self._census(spark)
+        plan holds one aggregate exchange whatever the fold depth, and
+        runs lazily inside the consumer's own jobs; building it runs
+        none. The one global cutoff (deltas newer than the newest base
+        anywhere) is exact because compaction always covers every
+        pending-delta bucket. Raises when the store's manifest
+        disagrees with this store's configuration."""
+        schema = self._sync_manifest(spark)
+        if schema is None or (buckets is not None and not buckets):
+            return None
+        bases, snapshots, deltas = self._census(spark)
         base = self._read_base(
-            spark, self._base_paths(bases, before_batch, buckets)
+            spark, schema, self._base_paths(bases, before_batch, buckets)
         )
-        self._sync_manifest(spark, create=False)
-        pending = self._pending(bases, deltas, before_batch)
-        return self._fold(spark, base, [
-            v for v in pending  # an empty delta has no files to scan
-            if deltas[v] and (buckets is None or not buckets.isdisjoint(deltas[v]))
-        ], buckets)
+        pending = self._pending(snapshots, deltas, before_batch)
+        return self._fold(spark, schema, base, pending, buckets)
 
     # -- the per-batch merge ------------------------------------------
     def touched_buckets(self, delta: DataFrame) -> set[int]:
         """Distinct bucket ids of the delta's keys — a bounded fetch
-        (≤ num_buckets values), the store's only collect."""
+        (≤ num_buckets values)."""
         return {
             r[0]
             for r in delta.select(self.bucket_expr().alias("_pt"))
@@ -425,12 +445,32 @@ class BucketedVersionedState:
             .collect()
         }
 
-    def is_batch_complete(self, spark: SparkSession, batch_id: int) -> bool:
-        fs, _, jvm = _fs_and_path(spark, self.path)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        return fs.exists(
-            hpath(f"{self.path}/v{batch_id}/_SUCCESS")
-        ) or fs.exists(hpath(f"{self.path}/d{batch_id}/_SUCCESS"))
+    @contextmanager
+    def _described(self, spark: SparkSession, what: str):
+        """Name the jobs run inside as ``state {path} {what}`` in
+        Spark's status store (a thread-local property, so the two
+        stores ``flows_batch`` commits at once keep their own)."""
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"state {self.path} {what}")
+        try:
+            yield
+        finally:
+            sc.setJobDescription(prev)
+
+    def _check_rows(self, schema: StructType, rows: DataFrame, what: str):
+        """Raise unless ``rows`` has the manifest's row schema (names
+        and types; nullability aside): reads apply that schema to
+        every delta and snapshot."""
+        def shape(s):
+            return {f.name: f.dataType.simpleString() for f in s.fields}
+
+        if shape(rows.schema) != shape(schema):
+            raise ValueError(
+                f"state store {self.path}: {what} rows "
+                f"{rows.schema.simpleString()} differ from the recorded "
+                f"{schema.simpleString()}"
+            )
 
     def merge_batch(
         self,
@@ -441,57 +481,71 @@ class BucketedVersionedState:
         """Commit ``delta`` as batch ``batch_id``. Idempotent: a complete
         ``d{batch_id}`` (or ``v{batch_id}``) short-circuits.
 
-        Writes the RAW delta as bucketed ``d{batch_id}`` — one job, no
-        pre-state read, commit I/O ∝ |delta|; ``read`` folds. Once
-        ``compact_every`` deltas are pending the commit compacts
-        instead: a full ``v{batch_id}`` snapshot over the touched
-        buckets plus every pending-delta bucket (the coverage invariant
-        ``read``'s global cutoff relies on). ``touched``, when the
-        caller knows it, spares the touched-bucket collect."""
+        Writes the RAW delta as ``d{batch_id}``, its rows sorted by
+        bucket — one job, no exchange, no pre-state read, commit I/O ∝
+        |delta|; ``read`` folds. Once ``compact_every`` deltas are
+        pending the commit compacts instead: a full ``v{batch_id}``
+        snapshot over the touched buckets plus every pending-delta
+        bucket (the coverage invariant ``read``'s global cutoff relies
+        on). ``touched``, when the caller knows it, spares computing
+        the batch's buckets. The commit lists the store once: the
+        completeness check and the retention pass use the same
+        census."""
         spark = delta.sparkSession
-        self._sync_manifest(spark, create=True)
-        if self.is_batch_complete(spark, batch_id):
+        schema = self._sync_manifest(spark, delta.schema)
+        self._check_rows(schema, delta, f"batch {batch_id} delta")
+        bases, snapshots, deltas = self._census(spark)
+        if batch_id in snapshots or batch_id in deltas:
             return
-        bases, deltas = self._census(spark)
-        pending = self._pending(bases, deltas, batch_id)
+        pending = self._pending(snapshots, deltas, batch_id)
         if len(pending) < self.compact_every:
             if touched is not None and not touched:
                 return
-            (
-                delta.withColumn("_pt", self.bucket_expr())
-                .repartition(F.col("_pt"))
-                .write.partitionBy("_pt")
-                .mode("overwrite")
-                .parquet(f"{self.path}/d{batch_id}")
-            )
-            self._prune(spark, batch_id)
+            with self._described(spark, f"d{batch_id} write"):
+                (
+                    delta.withColumn("_pt", self.bucket_expr())
+                    .sortWithinPartitions("_pt")
+                    .write.mode("overwrite")
+                    .parquet(f"{self.path}/d{batch_id}")
+                )
+            deltas.add(batch_id)
+            self._prune(spark, batch_id, bases, snapshots, deltas)
             return
         # compaction commit. Coverage MUST include every pending-delta
         # bucket, not just the batch's touched buckets — read()'s
         # global delta cutoff is only correct because a snapshot never
-        # leaves a pending delta partially shadowed.
+        # leaves a pending delta partially shadowed. One collect fetches
+        # the pending deltas' buckets and, unless the caller passed
+        # them, the batch's own.
+        ids = self._scan(spark, schema, pending).select("_pt")
         if touched is None:
-            # lazy checkpoint: the touched-bucket collect is the first
-            # action, so ONE job materializes the delta AND fetches its
-            # bucket ids, and the snapshot write re-reads the blocks
-            # instead of re-running the delta plan
+            # lazy checkpoint: the collect is the first action, so ONE
+            # job materializes the delta AND fetches its bucket ids, and
+            # the snapshot write re-reads the blocks instead of
+            # re-running the delta plan
             delta = delta.localCheckpoint(eager=False)
-            touched = self.touched_buckets(delta)
-        cover = set(touched)
-        for v in pending:
-            cover.update(deltas[v])
+            ids = ids.unionByName(
+                delta.select(self.bucket_expr().alias("_pt"))
+            )
+        with self._described(spark, f"v{batch_id} cover"):
+            cover = {r[0] for r in ids.distinct().collect()}
+        cover.update(touched or ())
         if not cover:
             return
         base = self._read_base(
-            spark, self._base_paths(bases, batch_id, cover)
+            spark, schema, self._base_paths(bases, batch_id, cover)
         )
         # the pending deltas hold no bucket outside ``cover``
         merged = self._fold(
-            spark, base, [v for v in pending if deltas[v]], None,
-            (batch_id, delta),
+            spark, schema, base, pending, None, (batch_id, delta)
         )
-        self._write_snapshot(spark, merged, cover, batch_id)
-        self._prune(spark, batch_id)
+        self._check_rows(schema, merged, f"v{batch_id} snapshot")
+        with self._described(spark, f"v{batch_id} write"):
+            self._write_snapshot(spark, merged, cover, batch_id)
+        snapshots.add(batch_id)
+        for b in cover:
+            bases.setdefault(b, []).append(batch_id)
+        self._prune(spark, batch_id, bases, snapshots, deltas)
 
     def _write_snapshot(
         self,
@@ -542,9 +596,17 @@ class BucketedVersionedState:
             .parquet(f"{self.path}/v{batch_id}")
         )
 
-    def _prune(self, spark: SparkSession, batch_id: int) -> None:
+    def _prune(
+        self,
+        spark: SparkSession,
+        batch_id: int,
+        bases: dict[int, list[int]],
+        snapshots: set[int],
+        deltas: set[int],
+    ) -> None:
         """Delete complete versions older than ``batch_id`` that are
-        fully shadowed, with a ``keep_versions`` replay margin:
+        fully shadowed, with a ``keep_versions`` replay margin, judged
+        on the commit's census plus the version it just wrote:
 
         - a base snapshot, when every bucket in it has ``keep_versions``
           newer complete BASE copies (per-bucket retention — no
@@ -553,27 +615,22 @@ class BucketedVersionedState:
           exist (any base newer than a delta shadows it for every one
           of its buckets, by the compaction coverage invariant).
         """
-        bases, deltas = self._census(spark)
-        base_versions = sorted({v for vs in bases.values() for v in vs})
-        fs, _, jvm = _fs_and_path(spark, self.path)
-        for v in base_versions:
-            if v >= batch_id:
-                continue
-            if all(
+        doomed = [
+            f"v{v}"
+            for v in sorted(snapshots)
+            if v < batch_id
+            and all(
                 sum(1 for x in vs if x > v) >= self.keep_versions
                 for vs in bases.values()
                 if v in vs
-            ):
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{self.path}/v{v}"), True
-                )
-        for v in sorted(deltas):
-            if v >= batch_id:
-                continue
-            if (
-                sum(1 for s in base_versions if s > v)
-                >= self.keep_versions
-            ):
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{self.path}/d{v}"), True
-                )
+            )
+        ] + [
+            f"d{v}"
+            for v in sorted(deltas)
+            if v < batch_id
+            and sum(1 for s in snapshots if s > v) >= self.keep_versions
+        ]
+        if doomed:
+            fs, hpath_cls = _filesystem(spark, self.path)
+            for name in doomed:
+                fs.delete(hpath_cls(f"{self.path}/{name}"), True)

@@ -35,6 +35,17 @@ def _pt_dirs(path, version):
     )
 
 
+def _delta_buckets(spark, path, version):
+    """The distinct ``_pt`` bucket values of a delta's rows, ascending."""
+    return sorted(
+        r[0]
+        for r in spark.read.parquet(f"{path}/{version}")
+        .select("_pt")
+        .distinct()
+        .collect()
+    )
+
+
 def _counts_store(path, num_buckets=4, **kw):
     return BucketedVersionedState(
         path, ["k"], num_buckets=num_buckets, merge_fn=_merge_counts, **kw
@@ -43,7 +54,7 @@ def _counts_store(path, num_buckets=4, **kw):
 
 def test_rewrite_bounded_by_touched_buckets(spark, tmp_path):
     """THE r7 verdict test: a batch touching one key must write one
-    bucket directory — not |state|. A wide first batch seeds many
+    bucket's rows — not |state|. A wide first batch seeds many
     buckets; a narrow delta holds exactly the touched bucket, and a
     compaction covers only the touched and pending-delta buckets."""
     path = str(tmp_path / "state")
@@ -51,14 +62,14 @@ def test_rewrite_bounded_by_touched_buckets(spark, tmp_path):
     store = _counts_store(path, num_buckets=8, compact_every=1)
     wide = _mk(spark, [(f"key{i}", 1) for i in range(64)])
     store.merge_batch(wide, 0)
-    assert len(_pt_dirs(path, "d0")) > 1  # the seed really spans buckets
+    assert len(_delta_buckets(spark, path, "d0")) > 1  # really spans buckets
 
     narrow = _mk(spark, [("key0", 5)])
     touched = [f"_pt={b}" for b in store.touched_buckets(narrow)]
     assert len(touched) == 1
     store.merge_batch(narrow, 1)  # compacts d0's buckets into v1
     store.merge_batch(narrow, 2)
-    assert _pt_dirs(path, "d2") == touched
+    assert [f"_pt={b}" for b in _delta_buckets(spark, path, "d2")] == touched
     store.merge_batch(narrow, 3)  # compacts: only d2's bucket is pending
     assert _pt_dirs(path, "v3") == touched
 
@@ -1107,9 +1118,8 @@ def test_append_commits_write_deltas_and_read_folds(spark, tmp_path):
     names = sorted(os.listdir(path))
     assert [n for n in names if n.startswith("d")] == ["d0", "d1", "d2"]
     assert not [n for n in names if n.startswith("v")]
-    # the narrow batch's delta dir holds ONE bucket — commit ∝ delta
-    d1 = sorted(d for d in os.listdir(f"{path}/d1") if d.startswith("_pt="))
-    assert len(d1) == 1
+    # the narrow batch's delta holds ONE bucket — commit ∝ delta
+    assert len(_delta_buckets(spark, path, "d1")) == 1
     got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
     assert got["key0"] == 8 and got["key63"] == 8 and len(got) == 64
     # before_batch folds strictly-pre-batch deltas only (replay view)
@@ -1190,6 +1200,19 @@ def test_append_compaction_covers_pending_buckets(spark, tmp_path):
         for r in store.read(spark, before_batch=2).collect()
     }
     assert pre["key0"] == 6 and pre["key1"] == 1
+    # a compaction over the v2 base whose batch touches neither pending
+    # delta's bucket must still fold those buckets' base rows
+    store.merge_batch(_mk(spark, [("key1", 10)]), 4)
+    pending = store.touched_buckets(_mk(spark, [("key0", 0), ("key1", 0)]))
+    other = next(
+        f"key{i}" for i in range(2, 8)
+        if not store.touched_buckets(_mk(spark, [(f"key{i}", 0)])) & pending
+    )
+    store.merge_batch(_mk(spark, [(other, 100)]), 5)  # compacts
+    assert "v5" in os.listdir(path)
+    got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
+    assert got["key0"] == 7 and got["key1"] == 14 and got[other] == 101
+    assert len(got) == 8
 
 
 def test_append_retention_prunes_shadowed_deltas(spark, tmp_path):
@@ -1361,6 +1384,146 @@ def test_read_plan_has_one_exchange_at_any_fold_depth(spark, tmp_path):
         if depth in (1, 8):
             assert _final_plan_exchanges(store.read(spark)) == 1, depth
     assert depth == 8 and "v1" in os.listdir(path)
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("kind", ["reduce", "replace"])
+def test_read_plan_builds_without_a_job(spark, tmp_path, kind):
+    """Building a read over a base and two pending deltas submits no
+    Spark job: the census lists names, and the row schema comes from
+    the manifest instead of a Parquet footer-inference job."""
+    path = str(tmp_path / kind)
+    kinds = {
+        "reduce": {"merge_fn": _merge_counts},
+        "replace": {"replace": True, "clear_if_null": "cnt"},
+    }[kind]
+    seed = BucketedVersionedState(
+        path, ["k"], num_buckets=4, compact_every=1, **kinds
+    )
+    for i in range(2):  # batch 1 compacts into the v1 base
+        seed.merge_batch(_mk(spark, [(f"key{j}", i) for j in range(8)]), i)
+    store = BucketedVersionedState(path, ["k"], num_buckets=4, **kinds)
+    for i in (2, 3):
+        store.merge_batch(_mk(spark, [("key0", i), ("new", i)]), i)
+    assert {"v1", "d2", "d3"} <= set(os.listdir(path))
+    first = _next_job_id(spark)
+    full, part = store.read(spark), store.read(spark, buckets={0, 1})
+    assert _next_job_id(spark) == first
+    got = {r["k"]: r["cnt"] for r in full.collect()}
+    assert got["key0"] == (1 + 2 + 3 if kind == "reduce" else 3)
+    assert got["new"] == (2 + 3 if kind == "reduce" else 3)
+    assert _rows(part) == _rows(full.filter(store.bucket_expr().isin(0, 1)))
+
+
+def test_delta_commit_is_sorted_files_without_exchange(spark, tmp_path):
+    """A delta commit writes plain files sorted by a ``_pt`` column —
+    no ``_pt=`` directory per bucket and no shuffle — and its job is
+    described as the store's delta write."""
+    path = str(tmp_path / "state")
+    store = _counts_store(path, num_buckets=8)
+    delta = _mk(spark, [(f"key{i}", i) for i in range(64)])
+    store.merge_batch(delta, 0)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    write = (  # the commit's last SQL execution
+        spark._jsparkSession.sharedState().statusStore().executionsList().last()
+    )
+    assert write.description() == f"state {path} d0 write"
+    plan = write.physicalPlanDescription()
+    assert "Exchange" not in plan and re.search(r"\bSort \(\d+\)", plan)
+
+    assert not [n for n in os.listdir(f"{path}/d0") if n.startswith("_pt=")]
+    files = [n for n in os.listdir(f"{path}/d0") if n.endswith(".parquet")]
+    assert 1 <= len(files) <= delta.rdd.getNumPartitions()
+    for name in files:  # each file's rows ascend by bucket
+        pts = [r[0] for r in spark.read.parquet(f"{path}/d0/{name}")
+               .select("_pt").collect()]
+        assert pts == sorted(pts)
+    assert len(_delta_buckets(spark, path, "d0")) > 1
+
+
+def test_commit_rejects_rows_of_another_schema(spark, tmp_path):
+    """Reads apply the manifest's row schema to every delta and
+    snapshot, so a delta or a merged snapshot with other columns or
+    types raises at commit instead of writing rows a read would drop
+    or fail on."""
+    store = _counts_store(str(tmp_path / "state"))
+    store.merge_batch(_mk(spark, [("a", 1)]), 0)
+    for other in (
+        spark.createDataFrame([("a", 1)], "k string, cnt int"),
+        _mk(spark, [("a", 1)]).withColumn("x", F.lit(1)),
+    ):
+        with pytest.raises(ValueError, match="differ from the recorded"):
+            store.merge_batch(other, 1)
+    assert {r["k"]: r["cnt"] for r in store.read(spark).collect()} == {"a": 1}
+
+    def _to_double(prev, d):
+        merged = _merge_counts(prev, d)
+        return merged.withColumn("cnt", F.col("cnt").cast("double"))
+
+    widening = BucketedVersionedState(
+        str(tmp_path / "widening"), ["k"], num_buckets=4,
+        merge_fn=_to_double, compact_every=1,
+    )
+    widening.merge_batch(_mk(spark, [("a", 1)]), 0)
+    with pytest.raises(ValueError, match="v1 snapshot"):
+        widening.merge_batch(_mk(spark, [("a", 1)]), 1)
+
+
+def _walk_census(path):
+    """The census by a plain directory walk: (bucket -> ascending
+    complete snapshot ids holding it, complete snapshot ids, complete
+    delta ids)."""
+    bases, snapshots, deltas = {}, set(), set()
+    for dirpath, dirnames, filenames in os.walk(path):
+        parts = os.path.relpath(dirpath, path).split(os.sep)
+        m = re.fullmatch(r"([dv])(\d+)", parts[0])
+        if not m or not os.path.exists(f"{path}/{parts[0]}/_SUCCESS"):
+            continue
+        version = int(m.group(2))
+        if len(parts) == 1:
+            (snapshots if m.group(1) == "v" else deltas).add(version)
+        elif len(parts) == 2 and m.group(1) == "v":
+            b = re.fullmatch(r"_pt=(\d+)", parts[1])
+            if b:
+                bases.setdefault(int(b.group(1)), []).append(version)
+    return {b: sorted(vs) for b, vs in bases.items()}, snapshots, deltas
+
+
+def test_census_equals_directory_walk(spark, tmp_path):
+    """The two-glob census agrees with a directory walk over complete
+    and incomplete versions, an empty delta, a compaction, and stray
+    entries that are no version."""
+    path = str(tmp_path / "state")
+    store = _counts_store(path, num_buckets=4, compact_every=3)
+    store.merge_batch(_mk(spark, [(f"key{i}", 1) for i in range(8)]), 0)
+    store.merge_batch(_mk(spark, []), 1)  # an empty delta
+    store.merge_batch(_mk(spark, [("key0", 2)]), 2)
+    store.merge_batch(_mk(spark, [("key1", 3)]), 3)  # compacts into v3
+    store.merge_batch(_mk(spark, [("key2", 4)]), 4)
+    assert {"d0", "d1", "d2", "v3", "d4"} <= set(os.listdir(path))
+    # incomplete versions: a crashed compaction and a crashed delta
+    _mk(spark, [("a", 9)]).withColumn("_pt", store.bucket_expr()).withColumn(
+        "_tomb", F.lit(False)
+    ).write.partitionBy("_pt").parquet(f"{path}/v5")
+    os.remove(f"{path}/v5/_SUCCESS")
+    _mk(spark, [("a", 9)]).write.parquet(f"{path}/d6")
+    os.remove(f"{path}/d6/_SUCCESS")
+    # stray entries: no version id, and a writer's scratch directory
+    for stray in ("dfoo", "vbar/_pt=1", "_temporary/0/_pt=2", "d4/_temporary/0"):
+        os.makedirs(f"{path}/{stray}")
+    for marker in ("dfoo/_SUCCESS", "vbar/_SUCCESS", "_temporary/_SUCCESS"):
+        open(f"{path}/{marker}", "w").close()
+
+    bases, snapshots, deltas = store._census(spark)
+    assert (bases, snapshots, deltas) == _walk_census(path)
+    assert snapshots == {3} and deltas == {0, 1, 2, 4}
+    assert set(bases) == set(_delta_buckets(spark, path, "d0"))
+    got = {r["k"]: r["cnt"] for r in store.read(spark).collect()}
+    assert got["key0"] == 3 and got["key1"] == 4 and got["key2"] == 5
+    assert len(got) == 8
 
 
 def test_session_flows_read_plan_exchanges(spark, tmp_path):

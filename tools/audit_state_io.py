@@ -8,9 +8,11 @@ Runs each pipeline's real 2-micro-batch loop at the given SF with
 cleanup disabled, then walks the state root:
 
 - ``paths|state/d{N}/``   — the state store's per-batch delta
-  (the batch's raw rows, bucketed),
+  (the batch's raw rows as ``part-*.parquet`` files with a ``_pt``
+  bucket column, sorted by it),
 - ``paths|state/v{N}/``   — a compaction snapshot, written every
-  ``compact_every`` deltas (covered buckets' full state + tombstones),
+  ``compact_every`` deltas (covered buckets' full state + tombstones,
+  one ``_pt={bucket}/`` directory each),
 - ``results/batch={N}/``  — the append-only emission (st13-15).
 
 Usage: python tools/audit_state_io.py [sf_dir]
