@@ -738,9 +738,9 @@ def q_f1_f2_string_clean(spark, sf_dir):
 
 
 def q_f7_uuid5(spark, sf_dir):
-    """F7: byte-exact RFC-4122 v5 ids (assay.py:100). No SQL oracle —
-    v5 is sha1-based and DuckDB 1.0.0 has no sha1() (verified: Catalog
-    Error; only md5/sha256) — rows-only; byte-exactness is pinned
+    """F7: byte-exact RFC-4122 v5 ids (assay.py:100), pure-JVM sha1, no
+    Python worker. No SQL oracle — DuckDB 1.0.0 has no sha1() (verified:
+    Catalog Error; only md5/sha256) — rows-only; byte-exactness is pinned
     against Python's uuid in tests/test_assay.py and
     test_properties.py, and the md5-based twin f7b_uuid3 hash-verifies
     the identical version/variant bit surgery cross-engine."""
@@ -763,7 +763,7 @@ def q_f7b_uuid3(spark, sf_dir):
     The namespace is an ASCII-byte UUID because DuckDB's md5 only
     accepts VARCHAR (the DNS namespace contains non-UTF8 bytes);
     CPython-parity for BOTH namespaces is pinned in
-    tests/test_functions.py. Pure-JVM: md5/substring/conv inside
+    tests/test_properties.py. Pure-JVM: md5/substring/conv inside
     whole-stage codegen, no Python UDF — map-only at any scale."""
     import uuid as _uuid
 

@@ -2,64 +2,63 @@
 
 The reference derives stable Assay ids with
 ``uuid.uuid5(uuid.NAMESPACE_DNS, doc_id + '-assay')`` (assay.py:100).
-RFC-4122 v5 is SHA-1 of namespace||name with version/variant bits — the
-bit-twiddling isn't expressible as a single built-in, so byte-exact
-reproduction uses a vectorized pandas_udf (Arrow-batched; the only
-Python in this module). For pipelines that just need *a* stable id,
-``stable_id`` is the pure-JVM path.
+RFC-4122 v5 is SHA-1 of namespace||utf8(name) with the version and
+variant bits forced; v3 is the same with MD5. Both are built here from
+built-in hash/substring/conv expressions, so the byte-exact ids stay
+inside whole-stage codegen with no Python worker. For pipelines that
+just need *a* stable id, ``stable_id`` skips the RFC-4122 bit surgery.
 """
 
 from __future__ import annotations
 
 import uuid
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
-# StringType() (not a DDL string) so the decorator needs no active session
-@pandas_udf(StringType())
-def uuid5_udf(name: pd.Series) -> pd.Series:
-    """Byte-exact ``uuid.uuid5(NAMESPACE_DNS, name)`` — vectorized."""
-    ns = uuid.NAMESPACE_DNS
-    return name.map(lambda s: str(uuid.uuid5(ns, s)) if s is not None else None)
+def _name_uuid(digest, name: Column, namespace: uuid.UUID, version: str) -> Column:
+    """RFC-4122 name-based UUID string: ``digest``(namespace bytes ||
+    utf8(name)) as hex, the version nibble (hex char 13) forced to
+    ``version`` and the variant's top two bits (hex char 17 →
+    (n & 0x3) | 0x8) forced to 10. NULL for a NULL name."""
+    h = digest(F.concat(F.lit(namespace.bytes), F.encode(name, "UTF-8")))
+    variant_nibble = F.conv(F.substring(h, 17, 1), 16, 10).cast("int")
+    return F.when(
+        name.isNotNull(),
+        F.concat_ws(
+            "-",
+            F.substring(h, 1, 8),
+            F.substring(h, 9, 4),
+            F.concat(F.lit(version), F.substring(h, 14, 3)),
+            F.concat(
+                # (n & 0x3) | 0x8 cycles with period 4 over the nibble value
+                F.substring(F.lit("89ab89ab89ab89ab"), variant_nibble + 1, 1),
+                F.substring(h, 18, 3),
+            ),
+            F.substring(h, 21, 12),
+        ),
+    )
 
 
 def uuid5_dns(name: Column) -> Column:
-    """Column wrapper for the byte-exact path (assay.py:100 parity)."""
-    return uuid5_udf(name)
+    """Byte-exact ``uuid.uuid5(NAMESPACE_DNS, name)`` (assay.py:100
+    parity). Pinned against CPython in tests/test_properties.py,
+    multi-byte UTF-8 and the empty string included. DuckDB 1.0 has no
+    sha1, so the f7 gate is rows-only and its md5 twin ``uuid3_ns``
+    hash-verifies the bit surgery."""
+    return _name_uuid(F.sha1, name, uuid.NAMESPACE_DNS, "5")
 
 
 def uuid3_ns(name: Column, namespace: uuid.UUID = uuid.NAMESPACE_DNS) -> Column:
-    """RFC-4122 v3 (md5-based) UUID — pure JVM, byte-exact vs CPython.
+    """RFC-4122 v3 (md5-based) UUID — byte-exact vs CPython.
 
-    v3 is md5(namespace_bytes || utf8(name)) with the version nibble
-    forced to 3 (hex char 13) and the variant's top two bits forced to
-    10 (hex char 17 → (n & 0x3) | 0x8). All of that is expressible with
-    built-in md5/substring/conv, so unlike the sha1-based v5 twin
-    (``uuid5_dns``, pandas_udf — DuckDB 1.0 has no sha1 either) this
-    path stays inside whole-stage codegen AND is cross-engine
-    hash-verifiable. Byte-exactness vs ``uuid.uuid3`` is pinned in
-    tests/test_properties.py for both NAMESPACE_DNS and ASCII
-    namespaces.
+    The md5 twin of ``uuid5_dns`` and, unlike it, cross-engine
+    hash-verifiable (DuckDB has md5 but no sha1). Byte-exactness vs
+    ``uuid.uuid3`` is pinned in tests/test_properties.py for both
+    NAMESPACE_DNS and ASCII namespaces.
     """
-    h = F.md5(F.concat(F.lit(namespace.bytes), F.encode(name, "UTF-8")))
-    variant_nibble = F.conv(F.substring(h, 17, 1), 16, 10).cast("int")
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.concat(F.lit("3"), F.substring(h, 14, 3)),
-        F.concat(
-            # (n & 0x3) | 0x8 cycles with period 4 over the nibble value
-            F.substring(F.lit("89ab89ab89ab89ab"), variant_nibble + 1, 1),
-            F.substring(h, 18, 3),
-        ),
-        F.substring(h, 21, 12),
-    )
+    return _name_uuid(F.md5, name, namespace, "3")
 
 
 def stable_id(name: Column) -> Column:

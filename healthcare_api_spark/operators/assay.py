@@ -12,10 +12,15 @@ derivations:
     groups' groups anti-joined to assayed ids (J4)
 
 Scale notes: Specimen and Group are dimension-sized (17k / 16 rows at
-reference scale) → broadcast; DocumentReference is the fact side and
-never shuffles except the per-group aggregation, which is bounded by
-group count. The reference's last-wins patient pick (assay.py:63-69,
-nondeterministic under parallelism) is pinned with max_by(pos).
+reference scale). The group keys (≤ one row per group) are built once
+and shared by all three outputs; Specimen (id, patient) and the group
+keys are the only broadcast sides. Each output scans DocumentReference
+at most once: a document binds to its specimen assay row-locally, by
+probing the broadcast Specimen with its own subject reference, never by
+joining the document table back to itself on id. The only shuffle is
+the per-group aggregation, bounded by group count. The reference's
+last-wins patient pick (assay.py:63-69, nondeterministic under
+parallelism) is pinned with max_by(pos).
 """
 
 from __future__ import annotations
@@ -67,6 +72,12 @@ def _assay_struct(assay_id: Column, patient_ref: Column, specimen_refs: Column) 
     )
 
 
+def _specimen_patients(specimens: DataFrame) -> DataFrame:
+    return specimens.select(
+        F.col("id").alias("spec_id"), F.col("subject.reference").alias("spec_patient")
+    )
+
+
 def group_assay_keys(groups: DataFrame, specimens: DataFrame) -> DataFrame:
     """Pass-1 key derivation (assay.py:58-75).
 
@@ -83,11 +94,10 @@ def group_assay_keys(groups: DataFrame, specimens: DataFrame) -> DataFrame:
         F.posexplode("member").alias("pos", "m"),
     ).filter(is_ref_to(F.col("m.entity.reference"), "Specimen"))
 
-    spec = specimens.select(
-        F.col("id").alias("spec_id"), F.col("subject.reference").alias("spec_patient")
-    )
     probed = members.join(
-        F.broadcast(spec), ref_id(F.col("m.entity.reference")) == F.col("spec_id"), "left"
+        F.broadcast(_specimen_patients(specimens)),
+        ref_id(F.col("m.entity.reference")) == F.col("spec_id"),
+        "left",
     )
     agg = probed.groupBy("group_id").agg(
         # ordered refs: every Specimen member ref, found or not (assay.py:67)
@@ -103,24 +113,40 @@ def group_assay_keys(groups: DataFrame, specimens: DataFrame) -> DataFrame:
     return agg.filter(F.col("patient_ref").isNotNull() & (F.size("specimen_refs") > 0))
 
 
+def _bind_specimens(docs: DataFrame, specimens: DataFrame) -> DataFrame:
+    """``docs`` plus (spec_id, spec_patient) of the Specimen each
+    document's subject names (assay.py:92-96); both null when the
+    subject is no Specimen ref or names no Specimen row. Row-local: a
+    left join against the broadcast Specimen, one output row per
+    matching Specimen row."""
+    subject = F.col("subject.reference")
+    return docs.join(
+        F.broadcast(_specimen_patients(specimens)),
+        is_ref_to(subject, "Specimen") & (ref_id(subject) == F.col("spec_id")),
+        "left",
+    )
+
+
+def _specimen_assay_id() -> Column:
+    """The pass-2 assay id of a document row (assay.py:100)."""
+    return uuid5_dns(F.concat(F.col("id"), F.lit("-assay")))
+
+
 def specimen_doc_keys(docs: DataFrame, specimens: DataFrame) -> DataFrame:
     """Pass-2 key derivation (assay.py:92-103): docs whose subject is a
     Specimen get a singleton assay with deterministic uuid5 id.
 
     Returns (doc_id, assay_id, patient_ref, specimen_refs).
     """
-    sdocs = docs.filter(is_ref_to(F.col("subject.reference"), "Specimen")).select(
-        F.col("id").alias("doc_id"), F.col("subject.reference").alias("spec_ref")
-    )
-    spec = specimens.select(
-        F.col("id").alias("spec_id"), F.col("subject.reference").alias("patient_ref")
-    )
-    joined = sdocs.join(F.broadcast(spec), ref_id(F.col("spec_ref")) == F.col("spec_id"), "inner")
-    return joined.select(
-        "doc_id",
-        uuid5_dns(F.concat(F.col("doc_id"), F.lit("-assay"))).alias("assay_id"),
-        "patient_ref",
-        F.array(F.col("spec_ref")).alias("specimen_refs"),
+    return (
+        _bind_specimens(docs, specimens)
+        .filter(F.col("spec_id").isNotNull())
+        .select(
+            F.col("id").alias("doc_id"),
+            _specimen_assay_id().alias("assay_id"),
+            F.col("spec_patient").alias("patient_ref"),
+            F.array(F.col("subject.reference")).alias("specimen_refs"),
+        )
     )
 
 
@@ -200,7 +226,8 @@ def derive_assays(docs: DataFrame, groups: DataFrame, specimens: DataFrame) -> A
     - ``documents``: all docs, those bound to an assay rewritten
     - ``groups``: input groups minus assayed ones (J4 anti-join)
     """
-    gkeys = group_assay_keys(groups, specimens)  # (group_id, patient_ref, specimen_refs)
+    # dimension-sized and read by all three outputs: computed once
+    gkeys = group_assay_keys(groups, specimens).localCheckpoint(eager=True)
     skeys = specimen_doc_keys(docs, specimens)  # (doc_id, assay_id, patient_ref, specimen_refs)
 
     pass1 = gkeys.select(
@@ -212,32 +239,34 @@ def derive_assays(docs: DataFrame, groups: DataFrame, specimens: DataFrame) -> A
     assays = pass1.unionByName(pass2).select("a.*")
 
     # Doc → its assay binding: group-docs via subject ref id (assay.py:47,80),
-    # specimen-docs via pass-2 keys. DELIBERATELY type-blind on the group
-    # side: the reference buckets ALL docs by the bare id after '/' —
-    # `doc['subject']['reference'].split('/')[1]` (assay.py:47-50) — so a
-    # doc whose subject id collides with an assayed group id is rewritten
-    # there too; reproduced bug-for-bug. Coalesce prefers the group
-    # binding like the reference (group pass rewrites first).
+    # specimen-docs via their own subject's Specimen row. DELIBERATELY
+    # type-blind on the group side: the reference buckets ALL docs by the
+    # bare id after '/' — `doc['subject']['reference'].split('/')[1]`
+    # (assay.py:47-50) — so a doc whose subject id collides with an
+    # assayed group id is rewritten there too; reproduced bug-for-bug.
+    # Coalesce prefers the group binding like the reference (group pass
+    # rewrites first).
     g_binding = gkeys.select(
         F.col("group_id").alias("g_key"),
         F.col("group_id").alias("g_assay_id"),
         F.col("patient_ref").alias("g_patient"),
     )
-    s_binding = skeys.select(
-        F.col("doc_id").alias("s_key"),
-        F.col("assay_id").alias("s_assay_id"),
-        F.col("patient_ref").alias("s_patient"),
-    )
     docs_b = (
-        docs.join(
+        _bind_specimens(docs, specimens)
+        .join(
             F.broadcast(g_binding),
             ref_id(F.col("subject.reference")) == F.col("g_key"),
             "left",
         )
-        .join(F.broadcast(s_binding), F.col("id") == F.col("s_key"), "left")
-        .withColumn("assay_id", F.coalesce(F.col("g_assay_id"), F.col("s_assay_id")))
-        .withColumn("patient_ref", F.coalesce(F.col("g_patient"), F.col("s_patient")))
-        .drop("g_key", "g_assay_id", "g_patient", "s_key", "s_assay_id", "s_patient")
+        .withColumn(
+            "assay_id",
+            F.coalesce(
+                F.col("g_assay_id"),
+                F.when(F.col("spec_id").isNotNull(), _specimen_assay_id()),
+            ),
+        )
+        .withColumn("patient_ref", F.coalesce(F.col("g_patient"), F.col("spec_patient")))
+        .drop("g_key", "g_assay_id", "g_patient", "spec_id", "spec_patient")
     )
     documents = _rewrite_doc_columns(docs_b)
 

@@ -8,7 +8,7 @@ shuffle join, does partial aggregation, and prunes scans.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -23,12 +23,6 @@ def accurate_count(df: DataFrame) -> DataFrame:
 def counts_by(df: DataFrame, *cols: str) -> DataFrame:
     """A4: per-type resource counts (graph-view node labels)."""
     return df.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def collect_group(df: DataFrame, key: str, value: Column, alias: str = "members") -> DataFrame:
-    """A1: bucket rows by key (assay.py:45-50) with deterministic element
-    order (sorted) so downstream consumers are reproducible."""
-    return df.groupBy(key).agg(F.sort_array(F.collect_list(value)).alias(alias))
 
 
 def distinct_set(df: DataFrame, *cols: str) -> DataFrame:

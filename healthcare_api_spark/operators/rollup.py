@@ -15,20 +15,12 @@ Druid / Mesa-style systems do.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _TRUNC = {"minute": "minute", "hour": "hour", "day": "day", "week": "week",
           "month": "month", "year": "year"}
 _ORDER = ["minute", "hour", "day", "week", "month", "year"]
-
-
-@dataclass
-class RollupTier:
-    level: str
-    df: DataFrame
 
 
 def _merged_partials():

@@ -37,35 +37,3 @@ def observe_assay_documents(documents: DataFrame) -> tuple[DataFrame, Observatio
             ),
         },
     )
-
-
-def observe_assays(assays: DataFrame) -> tuple[DataFrame, Observation]:
-    """Every assay must have a Patient subject and ≥1 specimen
-    (assay.py:72-73,184,190)."""
-    return observed(
-        assays,
-        "assays",
-        {
-            "n_assays": F.count(F.lit(1)),
-            "n_invalid": F.sum(
-                (
-                    ~F.col("subject.reference").startswith("Patient/")
-                    | (F.size("specimen") == 0)
-                ).cast("long")
-            ),
-        },
-    )
-
-
-def observe_mime(documents: DataFrame) -> tuple[DataFrame, Observation]:
-    """No null/vcard contentType on the primary attachment
-    (assay.py:136-139)."""
-    ct = F.col("content").getItem(0).getField("attachment").getField("contentType")
-    return observed(
-        documents,
-        "mime",
-        {
-            "n_null_mime": F.sum(ct.isNull().cast("long")),
-            "n_vcard": F.sum(F.coalesce(ct.contains("vcard"), F.lit(False)).cast("long")),
-        },
-    )

@@ -8,8 +8,8 @@ that matter at 100 TB and are harmless at test scale:
   and dynamic broadcast conversion (SURVEY.md §4).
 - nested schema pruning: FHIR structs are wide; reading only the touched
   nested fields is the columnar win (SURVEY.md §4 "column pruning").
-- Arrow: vectorized transfer for the few pandas_udf paths (uuid5,
-  validation, multimodal decode).
+- Arrow: vectorized transfer for the pandas_udf / mapInPandas paths
+  (multimodal decode, similarity, the grouped streaming operators).
 """
 
 from __future__ import annotations
@@ -69,6 +69,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_WAREHOUSE", "/tmp/spark-warehouse"))
         .config("spark.ui.enabled", "false")
+        # off: with it on, every Column method and F.col records its
+        # Python call site for error messages, about five py4j round
+        # trips each — thousands per plan build (e.g. derive_assays).
+        # PySpark caches the flag once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -47,9 +47,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Lazily bind each table; Catalyst prunes columns/filters per query."""
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all tables as temp views for spark.sql() queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -2,24 +2,17 @@
 
 The reference pydantic-validates every row against FHIR R4B
 (transform.py:132-144) with one waived error (attachment.size int64 vs
-unsignedInt, transform.py:139-141). Two native paths:
-
-1. ``structural_checks`` — pure-expression checks covering the Google
-   validator error catalog transcribed at README-transform.md:9-31
-   (required fields, enum membership, dropped-field absence). Zero
-   Python in the row path.
-2. ``validate_with_fhir_resources`` — the byte-faithful pydantic path as
-   Arrow-batched mapInPandas, gated behind an import-try since
-   ``fhir.resources`` isn't in this environment.
+unsignedInt, transform.py:139-141). Here ``structural_checks`` covers
+the Google validator error catalog transcribed at README-transform.md:9-31
+(required fields, enum membership, dropped-field absence) with pure
+expressions: zero Python in the row path.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StructType
 
 GROUP_TYPE_CODES = {"person", "animal", "practitioner", "device", "medication", "substance"}
 ENCOUNTER_STATUSES = {
@@ -101,54 +94,3 @@ def structural_checks(df: DataFrame, resource_type: str) -> DataFrame:
         )
     )
     return df.withColumn("errors", err_arr).withColumn("valid", F.size("errors") == 0)
-
-
-_VALIDATE_SCHEMA = StructType(
-    [
-        StructField("id", StringType()),
-        StructField("valid", BooleanType()),
-        StructField("errors", ArrayType(StringType())),
-    ]
-)
-
-
-def validate_with_fhir_resources(df: DataFrame, resource_type: str) -> DataFrame:
-    """Byte-faithful pydantic validation via mapInPandas (gated: raises a
-    clear error when ``fhir.resources`` is unavailable).
-
-    Reproduces the tolerated ``content.0.attachment.size`` diff
-    (transform.py:139-141).
-    """
-    try:
-        import fhir.resources.R4B  # noqa: F401
-    except ImportError as e:  # pragma: no cover - library absent here
-        raise NotImplementedError(
-            "fhir.resources is not installed in this environment; use "
-            "structural_checks() for the pure-Spark validation path"
-        ) from e
-
-    import json
-
-    json_df = df.select(F.col("id"), F.to_json(F.struct(*df.columns)).alias("_js"))
-
-    def _validate(batches: Iterator) -> Iterator:
-        import pandas as pd
-        from fhir.resources.R4B import get_fhir_model_class
-        from pydantic import ValidationError
-
-        klass = get_fhir_model_class(resource_type)
-        for pdf in batches:
-            ids, valids, errs = [], [], []
-            for rid, js in zip(pdf["id"], pdf["_js"]):
-                try:
-                    klass.model_validate(json.loads(js))
-                    ok, e = True, []
-                except ValidationError as ve:
-                    locs = [".".join(str(p) for p in err["loc"]) for err in ve.errors()]
-                    # transform.py:139-141 waiver
-                    real = [l for l in locs if l != "content.0.attachment.size"]
-                    ok, e = (len(real) == 0), real
-                ids.append(rid); valids.append(ok); errs.append(e)
-            yield pd.DataFrame({"id": ids, "valid": valids, "errors": errs})
-
-    return json_df.mapInPandas(_validate, _VALIDATE_SCHEMA)

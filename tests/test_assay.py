@@ -8,8 +8,16 @@ from __future__ import annotations
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
-from healthcare_api_spark.operators.assay import check_invariants, derive_assays
+from healthcare_api_spark.functions.refs import ref_id
+from healthcare_api_spark.operators.assay import (
+    _rewrite_doc_columns,
+    check_invariants,
+    derive_assays,
+    group_assay_keys,
+    specimen_doc_keys,
+)
 from healthcare_api_spark.schemas import SCHEMAS
 from healthcare_api_spark.sources.ndjson import read_ndjson
 
@@ -131,3 +139,134 @@ def test_invariants(result):
     assert inv["docs_with_non_patient_subject"] == 1
     assert inv["remaining_groups"] == 3
     assert inv["invalid_assays"] == 0
+
+
+# ------------------------------------------------- one-pass binding --
+
+
+def _read(spark, write_ndjson_file, docs, groups, specimens):
+    return (
+        read_ndjson(spark, write_ndjson_file(docs, "docs.ndjson"), SCHEMAS["DocumentReference"]),
+        read_ndjson(spark, write_ndjson_file(groups, "groups.ndjson"), SCHEMAS["Group"]),
+        read_ndjson(spark, write_ndjson_file(specimens, "spec.ndjson"), SCHEMAS["Specimen"]),
+    )
+
+
+def _scans_of(df, file_name: str) -> int:
+    """File-relation leaves of ``df``'s optimized plan that read ``file_name``."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRelation":
+            n += file_name in leaf.relation().location().rootPaths().toString()
+    return n
+
+
+def test_plan_scans_documents_once_and_runs_no_python(result):
+    assert _scans_of(result.documents, "docs.ndjson") == 1
+    for df in (result.documents, result.assays):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def _self_join_documents(docs, groups, specimens):
+    """The documents derivation as it bound specimen docs before: by
+    joining the documents back to their own specimen keys on doc id."""
+    gkeys = group_assay_keys(groups, specimens)
+    skeys = specimen_doc_keys(docs, specimens)
+    g_binding = gkeys.select(
+        F.col("group_id").alias("g_key"),
+        F.col("group_id").alias("g_assay_id"),
+        F.col("patient_ref").alias("g_patient"),
+    )
+    s_binding = skeys.select(
+        F.col("doc_id").alias("s_key"),
+        F.col("assay_id").alias("s_assay_id"),
+        F.col("patient_ref").alias("s_patient"),
+    )
+    docs_b = (
+        docs.join(
+            F.broadcast(g_binding), ref_id(F.col("subject.reference")) == F.col("g_key"), "left"
+        )
+        .join(F.broadcast(s_binding), F.col("id") == F.col("s_key"), "left")
+        .withColumn("assay_id", F.coalesce(F.col("g_assay_id"), F.col("s_assay_id")))
+        .withColumn("patient_ref", F.coalesce(F.col("g_patient"), F.col("s_patient")))
+        .drop("g_key", "g_assay_id", "g_patient", "s_key", "s_assay_id", "s_patient")
+    )
+    return _rewrite_doc_columns(docs_b)
+
+
+def _json_rows(df) -> list[str]:
+    return sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
+
+
+def _doc(doc_id, subject):
+    return {"resourceType": "DocumentReference", "id": doc_id, "version": "1",
+            "subject": {"reference": subject},
+            "content": [{"attachment": {"url": f"https://host/{doc_id}.csv", "title": doc_id}}]}
+
+
+EDGE_SPECIMENS = [
+    {"resourceType": "Specimen", "id": "s1", "subject": {"reference": "Patient/P1"}},
+    # duplicated Specimen id: each row binds (and duplicates) its documents
+    {"resourceType": "Specimen", "id": "s2", "subject": {"reference": "Patient/P2"}},
+    {"resourceType": "Specimen", "id": "s2", "subject": {"reference": "Patient/P2b"}},
+    # null subject: the document binds with a null patient
+    {"resourceType": "Specimen", "id": "s3"},
+    {"resourceType": "Specimen", "id": "s4", "subject": {"reference": "Patient/P4"}},
+    # a Specimen whose id is also an assayed group's id
+    {"resourceType": "Specimen", "id": "g1", "subject": {"reference": "Patient/P9"}},
+]
+EDGE_GROUPS = [
+    {"resourceType": "Group", "id": "g1", "member": [{"entity": {"reference": "Specimen/s1"}}]},
+    {"resourceType": "Group", "id": "g2", "member": [{"entity": {"reference": "Specimen/s4"}}]},
+]
+EDGE_DOCS = [
+    _doc("a", "Specimen/missing"),  # specimen missing → untouched
+    _doc("b", "Specimen/s3"),  # null-subject specimen
+    _doc("c", "Specimen/s2"),  # duplicated specimen id → two rows
+    _doc("d", "Specimen/g1"),  # id after '/' is an assayed group (and a Specimen)
+    _doc("e", "Specimen/g2"),  # id after '/' is an assayed group only
+    _doc("f", "Group/g1"),
+    _doc("h", "Patient/P1"),
+    _doc("i", "Specimen/s1"),
+]
+
+
+def test_binding_matches_id_self_join(spark, write_ndjson_file):
+    docs, groups, specimens = _read(
+        spark, write_ndjson_file, EDGE_DOCS, EDGE_GROUPS, EDGE_SPECIMENS
+    )
+    res = derive_assays(docs, groups, specimens)
+    got = _json_rows(res.documents)
+    assert got == _json_rows(_self_join_documents(docs, groups, specimens))
+
+    subjects = sorted(
+        (r["id"], r["s"])
+        for r in res.documents.select("id", F.col("subject.reference").alias("s")).collect()
+    )
+    assert subjects == [
+        ("a", "Specimen/missing"), ("b", None), ("c", "Patient/P2"), ("c", "Patient/P2b"),
+        ("d", "Patient/P1"), ("e", "Patient/P4"), ("f", "Patient/P1"), ("h", "Patient/P1"),
+        ("i", "Patient/P1"),
+    ]
+    # pass-2 assays come from the Specimen match, whatever the group binding
+    assay_ids = sorted(r["id"] for r in res.assays.collect())
+    uid = lambda d: str(uuid.uuid5(uuid.NAMESPACE_DNS, f"{d}-assay"))  # noqa: E731
+    assert assay_ids == sorted(["g1", "g2", uid("b"), uid("c"), uid("c"), uid("d"), uid("i")])
+
+
+def test_duplicated_doc_ids_bind_row_locally(spark, write_ndjson_file):
+    """Two document rows share an id: only the Specimen-subject row binds,
+    to its own specimen. (Joining documents to their specimen keys on id
+    rewrote the Patient-subject row too.)"""
+    dup = [_doc("x", "Specimen/s1"), _doc("x", "Patient/P7")]
+    docs, groups, specimens = _read(spark, write_ndjson_file, dup, EDGE_GROUPS, EDGE_SPECIMENS)
+    res = derive_assays(docs, groups, specimens)
+    rows = sorted(
+        (r["s"], r["n"]) for r in res.documents.select(
+            F.col("subject.reference").alias("s"), F.size(F.col("context.related")).alias("n")
+        ).collect()
+    )
+    assert rows == [("Patient/P1", 1), ("Patient/P7", -1)]

@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.functions.ids import uuid3_ns, uuid5_udf
+from healthcare_api_spark.functions.ids import uuid3_ns, uuid5_dns
 from healthcare_api_spark.functions.refs import make_ref, ref_id, ref_type
 from healthcare_api_spark.operators import dedup, textops
 from healthcare_api_spark.sources.store import upsert_frames
@@ -48,9 +48,29 @@ def test_ref_roundtrip_property(spark, id_list):
 @given(st.lists(ids, min_size=1, max_size=15, unique=True))
 def test_uuid5_byte_exact_property(spark, names):
     df = spark.createDataFrame([(n,) for n in names], ["n"])
-    out = {r["n"]: r["u"] for r in df.select("n", uuid5_udf(F.col("n")).alias("u")).collect()}
+    out = {r["n"]: r["u"] for r in df.select("n", uuid5_dns(F.col("n")).alias("u")).collect()}
     for n in names:
         assert out[n] == str(uuid.uuid5(uuid.NAMESPACE_DNS, n))
+
+
+def test_name_uuids_multibyte_empty_and_null(spark):
+    """What the properties' alphabet (≤ U+02FF) never draws: 3- and 4-byte
+    UTF-8 (CJK, emoji, a supplementary-plane CJK ideograph), the empty
+    string and NULL (→ NULL)."""
+    names = [
+        "样本-assay", "検体", "😀🧬-assay", "\U00020000", "", "a-\u00e9-\u4e2d-\U0001f600", None,
+    ]
+    df = spark.createDataFrame([(i, n) for i, n in enumerate(names)], "i int, n string")
+    out = {
+        r["i"]: (r["v5"], r["v3"])
+        for r in df.select(
+            "i", uuid5_dns(F.col("n")).alias("v5"), uuid3_ns(F.col("n")).alias("v3")
+        ).collect()
+    }
+    for i, n in enumerate(names):
+        ns = uuid.NAMESPACE_DNS
+        want = (None, None) if n is None else (str(uuid.uuid5(ns, n)), str(uuid.uuid3(ns, n)))
+        assert out[i] == want
 
 
 @_slow

@@ -2,12 +2,10 @@
 
 from __future__ import annotations
 
-import pytest
-
 from healthcare_api_spark.operators import transforms
 from healthcare_api_spark.schemas import SCHEMAS
 from healthcare_api_spark.sources.ndjson import read_ndjson
-from healthcare_api_spark.validate import structural_checks, validate_with_fhir_resources
+from healthcare_api_spark.validate import structural_checks
 
 
 def test_group_type_code_enforced(spark, write_ndjson_file):
@@ -55,9 +53,3 @@ def test_research_subject_status(spark, write_ndjson_file):
     assert not structural_checks(df, "ResearchSubject").collect()[0]["valid"]
     fixed = transforms.transform_research_subject(df)
     assert structural_checks(fixed, "ResearchSubject").collect()[0]["valid"]
-
-
-def test_pydantic_path_gated(spark):
-    df = spark.createDataFrame([("p1",)], ["id"])
-    with pytest.raises(NotImplementedError, match="fhir.resources"):
-        validate_with_fhir_resources(df, "Patient")
