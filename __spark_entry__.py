@@ -20,10 +20,10 @@ Cross-engine determinism rules used throughout:
 # query -> def line -> primary module (273 gates; regenerate: python tools/gen_toc.py)
 #   [a]
 #     a10_histogram                      L527    operators/relational
-#     a11_psi_drift                      L5778   operators/analytics
-#     a12_incremental_agg                L3285   operators/relational
-#     a13_equi_depth_hist                L3560   operators
-#     a14_co_occurrence                  L3877   operators/analytics
+#     a11_psi_drift                      L5777   operators/analytics
+#     a12_incremental_agg                L3284   operators/relational
+#     a13_equi_depth_hist                L3559   operators
+#     a14_co_occurrence                  L3876   operators/analytics
 #     a1_group_collect                   L421    (inline DataFrame ops)
 #     a2_distinct_set                    L416    operators/relational
 #     a3_count_accurate                  L406    operators/relational
@@ -34,36 +34,36 @@ Cross-engine determinism rules used throughout:
 #     a8_exact_percentiles               L476    (inline DataFrame ops)
 #     a9_pivot                           L466    operators/relational
 #   [d]
-#     d10_quality_canonical              L5896   operators/dedup
-#     d11_fuzzy_join                     L5832   operators/dedup
-#     d12_sorted_neighborhood            L3382   operators/dedup
-#     d13_passjoin                       L3588   operators/dedup
-#     d14_semdedup                       L3658   operators/dedup
-#     d15_incremental_cc                 L3684   operators/dedup
-#     d16_sparse_cosine                  L3968   operators/dedup
-#     d17_sentence_dedup                 L3987   operators/dedup
-#     d18_prefix_jaccard                 L4918   operators/dedup
-#     d19_paragraph_dedup                L6663   operators/dedup
-#     d1_dedup_exact                     L2102   operators/dedup
-#     d20_cdc_chunks                     L7084   operators/dedup
-#     d21_containment                    L4938   functions/text
-#     d2_dedup_minhash                   L2111   operators/dedup
-#     d3_simhash                         L2117   operators/dedup
-#     d4_ngram_jaccard                   L2123   operators/dedup
-#     d5_embed_neardup                   L2154   operators/dedup
-#     d6_neardup_clusters                L2129   operators/dedup
-#     d7_decontaminate                   L2442   operators/curation
-#     d8_boilerplate_lines               L2543   operators/curation
+#     d10_quality_canonical              L5895   operators/dedup
+#     d11_fuzzy_join                     L5831   operators/dedup
+#     d12_sorted_neighborhood            L3381   operators/dedup
+#     d13_passjoin                       L3587   operators/dedup
+#     d14_semdedup                       L3657   operators/dedup
+#     d15_incremental_cc                 L3683   operators/dedup
+#     d16_sparse_cosine                  L3967   operators/dedup
+#     d17_sentence_dedup                 L3986   operators/dedup
+#     d18_prefix_jaccard                 L4917   operators/dedup
+#     d19_paragraph_dedup                L6662   operators/dedup
+#     d1_dedup_exact                     L2101   operators/dedup
+#     d20_cdc_chunks                     L7083   operators/dedup
+#     d21_containment                    L4937   functions/text
+#     d2_dedup_minhash                   L2110   operators/dedup
+#     d3_simhash                         L2116   operators/dedup
+#     d4_ngram_jaccard                   L2122   operators/dedup
+#     d5_embed_neardup                   L2153   operators/dedup
+#     d6_neardup_clusters                L2128   operators/dedup
+#     d7_decontaminate                   L2441   operators/curation
+#     d8_boilerplate_lines               L2542   operators/curation
 #     d9_exact_substring                 L1265   operators/dedup
 #   [ds]
-#     ds1_stratified_sample              L2458   operators/curation
-#     ds2_pack_sequences                 L2491   operators/curation
-#     ds3_exact_k_sample                 L2468   operators/curation
-#     ds4_assign_splits                  L2481   operators/curation
-#     ds5_pack_global                    L2560   operators/curation
-#     ds6_weighted_sample                L5886   operators/curation
-#     ds7_interleave_sources             L3274   operators/curation
-#     ds8_token_mixture                  L4717   operators/curation
+#     ds1_stratified_sample              L2457   operators/curation
+#     ds2_pack_sequences                 L2490   operators/curation
+#     ds3_exact_k_sample                 L2467   operators/curation
+#     ds4_assign_splits                  L2480   operators/curation
+#     ds5_pack_global                    L2559   operators/curation
+#     ds6_weighted_sample                L5885   operators/curation
+#     ds7_interleave_sources             L3273   operators/curation
+#     ds8_token_mixture                  L4716   operators/curation
 #   [f]
 #     f10_f12_cast_append                L815    (inline DataFrame ops)
 #     f1_f2_string_clean                 L730    (inline DataFrame ops)
@@ -74,34 +74,34 @@ Cross-engine determinism rules used throughout:
 #     f8_json_extract                    L783    (inline DataFrame ops)
 #     f9_f11_struct_build                L792    (inline DataFrame ops)
 #   [fs]
-#     fs10_text_bm25                     L5625   (inline DataFrame ops)
-#     fs11_repeat_and                    L5276   (inline DataFrame ops)
-#     fs12_text_phrase                   L4247   (inline DataFrame ops)
-#     fs13_quantity_search               L2967   (inline DataFrame ops)
-#     fs14_composite_search              L3081   (inline DataFrame ops)
-#     fs15_uri_and_subsumption           L3015   (inline DataFrame ops)
-#     fs1_search_token                   L2950   (inline DataFrame ops)
-#     fs2_search_range                   L2958   (inline DataFrame ops)
-#     fs3_search_count                   L5643   (inline DataFrame ops)
-#     fs4_search_sort_page               L5649   (inline DataFrame ops)
-#     fs5_search_text                    L6161   (inline DataFrame ops)
-#     fs6_page_non_unique                L5660   (inline DataFrame ops)
-#     fs7_nested_has                     L6147   (inline DataFrame ops)
-#     fs8_chained_sort                   L5867   (inline DataFrame ops)
-#     fs9_filter_grammar                 L5606   (inline DataFrame ops)
+#     fs10_text_bm25                     L5624   (inline DataFrame ops)
+#     fs11_repeat_and                    L5275   (inline DataFrame ops)
+#     fs12_text_phrase                   L4246   (inline DataFrame ops)
+#     fs13_quantity_search               L2966   (inline DataFrame ops)
+#     fs14_composite_search              L3080   (inline DataFrame ops)
+#     fs15_uri_and_subsumption           L3014   (inline DataFrame ops)
+#     fs1_search_token                   L2949   (inline DataFrame ops)
+#     fs2_search_range                   L2957   (inline DataFrame ops)
+#     fs3_search_count                   L5642   (inline DataFrame ops)
+#     fs4_search_sort_page               L5648   (inline DataFrame ops)
+#     fs5_search_text                    L6160   (inline DataFrame ops)
+#     fs6_page_non_unique                L5659   (inline DataFrame ops)
+#     fs7_nested_has                     L6146   (inline DataFrame ops)
+#     fs8_chained_sort                   L5866   (inline DataFrame ops)
+#     fs9_filter_grammar                 L5605   (inline DataFrame ops)
 #   [g]
-#     g10_bfs_hops                       L6422   operators/graph
-#     g11_stress_centrality              L6445   operators/graph
-#     g12_sssp_weighted                  L6469   operators/graph
-#     g1_pagerank                        L3542   operators
-#     g2_triangle_count                  L5340   operators
-#     g3_kcore                           L5350   operators
-#     g4_label_propagation               L5324   operators
-#     g5_connected_components            L6172   operators/graph
-#     g6_adamic_adar                     L6191   operators/graph
-#     g7_personalized_pagerank           L6584   operators/graph
-#     g8_modularity                      L6378   operators/graph
-#     g9_hits                            L6399   operators/graph
+#     g10_bfs_hops                       L6421   operators/graph
+#     g11_stress_centrality              L6444   operators/graph
+#     g12_sssp_weighted                  L6468   operators/graph
+#     g1_pagerank                        L3541   operators
+#     g2_triangle_count                  L5339   operators
+#     g3_kcore                           L5349   operators
+#     g4_label_propagation               L5323   operators
+#     g5_connected_components            L6171   operators/graph
+#     g6_adamic_adar                     L6190   operators/graph
+#     g7_personalized_pagerank           L6583   operators/graph
+#     g8_modularity                      L6377   operators/graph
+#     g9_hits                            L6398   operators/graph
 #   [j]
 #     j1_broadcast_join                  L841    operators/relational
 #     j2_docs_by_group                   L868    operators/assay
@@ -112,38 +112,38 @@ Cross-engine determinism rules used throughout:
 #   [k]
 #     k1_sketch_distinct                 L1273   (inline DataFrame ops)
 #     k2_sketch_quantiles                L1284   (inline DataFrame ops)
-#     k3_cms_heavy_hitters               L3233   operators/sketches
-#     k4_kmv_distinct                    L3710   operators/sketches
-#     k5_sample_quantiles                L5574   operators/sketches
-#     k6_sketch_rollup                   L4275   operators/sketches
-#     k7_kmv_set_ops                     L3728   operators/sketches
-#     k8_hll_distinct                    L3744   operators/sketches
-#     k9_bloom_filter                    L6679   operators/sketches
+#     k3_cms_heavy_hitters               L3232   operators/sketches
+#     k4_kmv_distinct                    L3709   operators/sketches
+#     k5_sample_quantiles                L5573   operators/sketches
+#     k6_sketch_rollup                   L4274   operators/sketches
+#     k7_kmv_set_ops                     L3727   operators/sketches
+#     k8_hll_distinct                    L3743   operators/sketches
+#     k9_bloom_filter                    L6678   operators/sketches
 #   [l]
 #     l1_zorder_key                      L490    operators/layout
 #     l2_zorder_ranked                   L505    operators/layout
-#     l3_zorder3                         L5761   operators/layout
-#     l4_hilbert_key                     L3427   operators/layout
+#     l3_zorder3                         L5760   operators/layout
+#     l4_hilbert_key                     L3426   operators/layout
 #   [m]
-#     m10_gif_frames                     L3761   operators/multimodal
-#     m11_scene_cuts                     L5104   operators/multimodal
-#     m12_image_ahash                    L4315   operators/multimodal
-#     m13_image_neardup                  L4354   (inline DataFrame ops)
-#     m14_image_hamming_pairs            L4376   operators/dedup
-#     m15_image_hash_retrieval           L4442   operators/dedup
-#     m16_audio_vad_windows              L4494   operators/multimodal
-#     m17_image_patches                  L2632   operators/multimodal
-#     m18_keyframes                      L6515   operators/multimodal
-#     m19_patch_vote_neardup             L2673   operators/multimodal
-#     m1_attachment_meta                 L2574   (inline DataFrame ops)
-#     m2_image_decode                    L2587   operators/multimodal
-#     m3_audio_features                  L2726   operators/multimodal
-#     m4_video_frames                    L2775   operators/multimodal
-#     m5_gif_decode                      L2888   operators/multimodal
-#     m6_jpeg_decode                     L5999   operators/multimodal
-#     m7_progressive_jpeg                L6057   operators/multimodal
-#     m8_adam7_png                       L3130   operators/multimodal
-#     m9_palette_png                     L2832   operators/multimodal
+#     m10_gif_frames                     L3760   operators/multimodal
+#     m11_scene_cuts                     L5103   operators/multimodal
+#     m12_image_ahash                    L4314   operators/multimodal
+#     m13_image_neardup                  L4353   (inline DataFrame ops)
+#     m14_image_hamming_pairs            L4375   operators/dedup
+#     m15_image_hash_retrieval           L4441   operators/dedup
+#     m16_audio_vad_windows              L4493   operators/multimodal
+#     m17_image_patches                  L2631   operators/multimodal
+#     m18_keyframes                      L6514   operators/multimodal
+#     m19_patch_vote_neardup             L2672   operators/multimodal
+#     m1_attachment_meta                 L2573   (inline DataFrame ops)
+#     m2_image_decode                    L2586   operators/multimodal
+#     m3_audio_features                  L2725   operators/multimodal
+#     m4_video_frames                    L2774   operators/multimodal
+#     m5_gif_decode                      L2887   operators/multimodal
+#     m6_jpeg_decode                     L5998   operators/multimodal
+#     m7_progressive_jpeg                L6056   operators/multimodal
+#     m8_adam7_png                       L3129   operators/multimodal
+#     m9_palette_png                     L2831   operators/multimodal
 #   [p]
 #     p10_array_rename                   L661    (inline DataFrame ops)
 #     p11_rename_flat                    L683    (inline DataFrame ops)
@@ -159,114 +159,114 @@ Cross-engine determinism rules used throughout:
 #     q5_local_supplier                  L1391   (inline DataFrame ops)
 #     q6_forecast_revenue                L1415   (inline DataFrame ops)
 #   [s]
-#     s10_orc_roundtrip                  L5958   (inline DataFrame ops)
-#     s11_csv_roundtrip                  L5686   sources/ndjson
-#     s12_snapshot_diff                  L5792   sources/store
-#     s13_scd2_history                   L3184   operators/temporal
+#     s10_orc_roundtrip                  L5957   (inline DataFrame ops)
+#     s11_csv_roundtrip                  L5685   sources/ndjson
+#     s12_snapshot_diff                  L5791   sources/store
+#     s13_scd2_history                   L3183   operators/temporal
 #     s14_soft_delete                    L1453   sources/store
 #     s15_time_travel                    L1496   sources/store
 #     s1_s4_ndjson_roundtrip             L605    sources/ndjson
 #     s8_upsert_lastwin                  L1442   operators/relational
-#     s9_bucketed_upsert                 L1551   sources/store
+#     s9_bucketed_upsert                 L1550   sources/store
 #   [st]
-#     st10_streaming_hll                 L7147   operators/sketches
-#     st11_streaming_ewma                L1980   streaming/smoothing
-#     st12_streaming_cep                 L1941   streaming/cep
-#     st13_streaming_attribution         L1742   streaming/attribution
-#     st14_streaming_multitouch          L1773   streaming/multitouch
-#     st15_streaming_multitouch_wm       L1801   streaming/multitouch_wm
-#     st16_streaming_flows_wm            L1838   streaming/flows_wm
-#     st17_streaming_markov              L1874   streaming/markov
-#     st18_streaming_attribution_wm      L1906   streaming/attribution_wm
-#     st1_tumbling_window                L2078   (inline DataFrame ops)
-#     st2_sessionize                     L2089   (inline DataFrame ops)
-#     st3_stream_agg_maintenance         L1615   streaming/upsert
-#     st4_stream_stream_join             L2022   streaming/joins
-#     st5_streaming_neardup              L1648   streaming/neardup
-#     st6_streaming_kmv                  L1677   operators/sketches
-#     st7_streaming_session_flows        L1714   streaming/flows
-#     st8_streaming_bloom                L6757   operators/sketches
-#     st9_streaming_cms                  L6839   operators/sketches
+#     st10_streaming_hll                 L7146   operators/sketches
+#     st11_streaming_ewma                L1979   streaming/smoothing
+#     st12_streaming_cep                 L1940   streaming/cep
+#     st13_streaming_attribution         L1741   streaming/attribution
+#     st14_streaming_multitouch          L1772   streaming/multitouch
+#     st15_streaming_multitouch_wm       L1800   streaming/multitouch_wm
+#     st16_streaming_flows_wm            L1837   streaming/flows_wm
+#     st17_streaming_markov              L1873   streaming/markov
+#     st18_streaming_attribution_wm      L1905   streaming/attribution_wm
+#     st1_tumbling_window                L2077   (inline DataFrame ops)
+#     st2_sessionize                     L2088   (inline DataFrame ops)
+#     st3_stream_agg_maintenance         L1614   streaming/upsert
+#     st4_stream_stream_join             L2021   streaming/joins
+#     st5_streaming_neardup              L1647   streaming/neardup
+#     st6_streaming_kmv                  L1676   operators/sketches
+#     st7_streaming_session_flows        L1713   streaming/flows
+#     st8_streaming_bloom                L6756   operators/sketches
+#     st9_streaming_cms                  L6838   operators/sketches
 #   [t]
-#     t10_tfidf                          L2393   operators/textops
-#     t11_unigram_logprob                L2399   operators/textops
-#     t12_compression_ratio              L2406   operators/textops
-#     t13_chunk_tokens                   L5981   operators/textops
-#     t14_bpe_pairs                      L5990   operators/textops
-#     t15_fold_accents                   L5733   functions/text
-#     t16_inverted_index                 L3210   operators/textops
-#     t17_bigram_logprob                 L3266   operators/textops
-#     t18_phrase_search                  L5252   operators/textops
-#     t19_proximity_rank                 L4013   operators/textops
-#     t1_lang_id                         L2353   operators/textops
-#     t20_quality_logistic               L5203   operators/textops
-#     t21_zipf_fit                       L4834   operators/textops
-#     t22_repetition_filter              L4761   operators/textops
-#     t23_bpe_train                      L4780   operators/textops
-#     t24_perplexity_buckets             L4823   operators/textops
-#     t25_substring_search               L6820   operators/textops
-#     t26_gopher_rules                   L6914   operators/textops
-#     t27_bpe_encode                     L6980   operators/textops
-#     t28_multi_substring                L7017   operators/textops
-#     t29_char_entropy                   L7069   operators/textops
-#     t2_quality_score                   L2358   operators/textops
-#     t30_hashed_classifier              L7125   operators/textops
-#     t31_ngram_novelty                  L7053   operators/textops
-#     t32_readability                    L7038   operators/textops
-#     t33_rake_keywords                  L6361   operators/textops
-#     t34_blocklist_screen               L6209   operators/curation
+#     t10_tfidf                          L2392   operators/textops
+#     t11_unigram_logprob                L2398   operators/textops
+#     t12_compression_ratio              L2405   operators/textops
+#     t13_chunk_tokens                   L5980   operators/textops
+#     t14_bpe_pairs                      L5989   operators/textops
+#     t15_fold_accents                   L5732   functions/text
+#     t16_inverted_index                 L3209   operators/textops
+#     t17_bigram_logprob                 L3265   operators/textops
+#     t18_phrase_search                  L5251   operators/textops
+#     t19_proximity_rank                 L4012   operators/textops
+#     t1_lang_id                         L2352   operators/textops
+#     t20_quality_logistic               L5202   operators/textops
+#     t21_zipf_fit                       L4833   operators/textops
+#     t22_repetition_filter              L4760   operators/textops
+#     t23_bpe_train                      L4779   operators/textops
+#     t24_perplexity_buckets             L4822   operators/textops
+#     t25_substring_search               L6819   operators/textops
+#     t26_gopher_rules                   L6913   operators/textops
+#     t27_bpe_encode                     L6979   operators/textops
+#     t28_multi_substring                L7016   operators/textops
+#     t29_char_entropy                   L7068   operators/textops
+#     t2_quality_score                   L2357   operators/textops
+#     t30_hashed_classifier              L7124   operators/textops
+#     t31_ngram_novelty                  L7052   operators/textops
+#     t32_readability                    L7037   operators/textops
+#     t33_rake_keywords                  L6360   operators/textops
+#     t34_blocklist_screen               L6208   operators/curation
 #     t35_vocab_gini                     L987    operators/textops
-#     t3_token_counts                    L2363   operators/textops
-#     t4_fingerprints                    L2368   operators/textops
-#     t5_corpus_stats                    L2373   operators/textops
-#     t6_repetition                      L2434   operators/curation
-#     t7_redact_pii                      L2519   operators/curation
-#     t8_quality_gate                    L2499   operators/curation
-#     t9_top_tokens                      L2387   operators/textops
+#     t3_token_counts                    L2362   operators/textops
+#     t4_fingerprints                    L2367   operators/textops
+#     t5_corpus_stats                    L2372   operators/textops
+#     t6_repetition                      L2433   operators/curation
+#     t7_redact_pii                      L2518   operators/curation
+#     t8_quality_gate                    L2498   operators/curation
+#     t9_top_tokens                      L2386   operators/textops
 #   [u]
-#     u10_leakage_safe_splits            L7309   operators/graph
-#     u11_dedup_eval                     L7270   operators/dedup
-#     u12_lsh_eval                       L6562   operators/dedup
-#     u13_entity_resolution              L6236   operators/dedup
-#     u14_dataloader_pipeline            L6295   operators/curation
-#     u15_kcenter_coreset                L4615   operators/similarity
-#     u16_temperature_mixture            L4738   operators/curation
-#     u1_canonical_urls                  L2414   operators/curation
-#     u2_domain_stats                    L3507   operators/curation
-#     u3_url_dedup_groups                L3940   operators/curation
-#     u4_domain_quota                    L3522   operators/textops
-#     u6_winsorize                       L4966   operators/curation
-#     u7_winsorize_pct                   L4985   operators
-#     u8_importance_weights              L6962   operators/curation
-#     u9_curation_pipeline               L7209   operators/textops
+#     u10_leakage_safe_splits            L7308   operators/graph
+#     u11_dedup_eval                     L7269   operators/dedup
+#     u12_lsh_eval                       L6561   operators/dedup
+#     u13_entity_resolution              L6235   operators/dedup
+#     u14_dataloader_pipeline            L6294   operators/curation
+#     u15_kcenter_coreset                L4614   operators/similarity
+#     u16_temperature_mixture            L4737   operators/curation
+#     u1_canonical_urls                  L2413   operators/curation
+#     u2_domain_stats                    L3506   operators/curation
+#     u3_url_dedup_groups                L3939   operators/curation
+#     u4_domain_quota                    L3521   operators/textops
+#     u6_winsorize                       L4965   operators/curation
+#     u7_winsorize_pct                   L4984   operators
+#     u8_importance_weights              L6961   operators/curation
+#     u9_curation_pipeline               L7208   operators/textops
 #   [v]
-#     v10_prefix_rerank                  L4551   operators/similarity
-#     v11_ann_recall                     L5004   operators/similarity
-#     v12_ivf_pruned                     L2279   operators/similarity
-#     v13_lsh_pruned                     L2187   operators/similarity
-#     v14_rank_metrics                   L6892   operators/similarity
-#     v15_kmeans_stats                   L7000   operators/similarity
-#     v16_ivfpq_topk                     L7106   operators/similarity
-#     v17_filtered_ann                   L7181   operators/similarity
-#     v18_mmr_topk                       L4568   operators/similarity
-#     v19_binary_ann                     L4634   operators/similarity
-#     v1_ann_topk                        L2168   operators/similarity
-#     v20_rag_pipeline                   L4695   operators/similarity
-#     v21_l2_range_join                  L4587   operators/similarity
-#     v22_ivf_batch_probe                L2304   operators/similarity
-#     v2_ann_lsh                         L2175   operators/similarity
-#     v3_ivf_topk                        L2236   operators/similarity
-#     v4_pca_project                     L2333   operators/similarity
-#     v5_knn_join                        L5821   operators/similarity
-#     v6_sq8_topk                        L3417   operators/similarity
-#     v7_pq_topk                         L3860   operators/similarity
-#     v8_pooled_embeddings               L5224   operators/similarity
-#     v9_hybrid_rrf                      L4650   operators/similarity
+#     v10_prefix_rerank                  L4550   operators/similarity
+#     v11_ann_recall                     L5003   operators/similarity
+#     v12_ivf_pruned                     L2278   operators/similarity
+#     v13_lsh_pruned                     L2186   operators/similarity
+#     v14_rank_metrics                   L6891   operators/similarity
+#     v15_kmeans_stats                   L6999   operators/similarity
+#     v16_ivfpq_topk                     L7105   operators/similarity
+#     v17_filtered_ann                   L7180   operators/similarity
+#     v18_mmr_topk                       L4567   operators/similarity
+#     v19_binary_ann                     L4633   operators/similarity
+#     v1_ann_topk                        L2167   operators/similarity
+#     v20_rag_pipeline                   L4694   operators/similarity
+#     v21_l2_range_join                  L4586   operators/similarity
+#     v22_ivf_batch_probe                L2303   operators/similarity
+#     v2_ann_lsh                         L2174   operators/similarity
+#     v3_ivf_topk                        L2235   operators/similarity
+#     v4_pca_project                     L2332   operators/similarity
+#     v5_knn_join                        L5820   operators/similarity
+#     v6_sq8_topk                        L3416   operators/similarity
+#     v7_pq_topk                         L3859   operators/similarity
+#     v8_pooled_embeddings               L5223   operators/similarity
+#     v9_hybrid_rrf                      L4649   operators/similarity
 #   [w]
-#     w10_rolling_distinct               L3899   (inline DataFrame ops)
-#     w11_rolling_quantiles              L5147   operators
-#     w12_sessionize                     L4902   operators/analytics
-#     w13_session_flows                  L5023   operators/analytics
+#     w10_rolling_distinct               L3898   (inline DataFrame ops)
+#     w11_rolling_quantiles              L5146   operators
+#     w12_sessionize                     L4901   operators/analytics
+#     w13_session_flows                  L5022   operators/analytics
 #     w14_sequence_match                 L1179   operators/analytics
 #     w15_touch_attribution              L1002   operators/analytics
 #     w16_touch_lag                      L1019   operators/analytics
@@ -282,34 +282,34 @@ Cross-engine determinism rules used throughout:
 #     w3_rank_topn_per_group             L1318   (inline DataFrame ops)
 #     w5_funnel                          L975    operators/analytics
 #     w6_cohort_retention                L1206   operators/analytics
-#     w7_hopping_window                  L5912   streaming/upsert
-#     w8_time_weighted_avg               L3570   operators
-#     w9_ohlc_bars                       L3819   operators/similarity
+#     w7_hopping_window                  L5911   streaming/upsert
+#     w8_time_weighted_avg               L3569   operators
+#     w9_ohlc_bars                       L3818   operators/similarity
 #   [x]
-#     x10_rolling_median                 L3487   operators
-#     x11_ewma                           L5369   operators
-#     x12_cusum_changepoint              L5065   operators
-#     x13_matrix_profile                 L4842   operators
-#     x14_sax_symbols                    L5039   operators/temporal
-#     x15_sax_motifs                     L4875   operators/temporal
-#     x16_sax_similarity                 L6730   operators/temporal
-#     x17_holt_linear                    L5392   operators/temporal
-#     x18_acf                            L3442   operators/temporal
-#     x19_holt_winters                   L5421   operators/temporal
+#     x10_rolling_median                 L3486   operators
+#     x11_ewma                           L5368   operators
+#     x12_cusum_changepoint              L5064   operators
+#     x13_matrix_profile                 L4841   operators
+#     x14_sax_symbols                    L5038   operators/temporal
+#     x15_sax_motifs                     L4874   operators/temporal
+#     x16_sax_similarity                 L6729   operators/temporal
+#     x17_holt_linear                    L5391   operators/temporal
+#     x18_acf                            L3441   operators/temporal
+#     x19_holt_winters                   L5420   operators/temporal
 #     x1_asof_join                       L912    operators/temporal
-#     x21_dtw_band                       L5454   operators/temporal
-#     x22_binseg_changepoints            L5490   operators/temporal
-#     x23_forecast_mase                  L5518   operators/temporal
-#     x24_series_features                L5548   operators/temporal
-#     x25_strength_features              L3313   operators/temporal
+#     x21_dtw_band                       L5453   operators/temporal
+#     x22_binseg_changepoints            L5489   operators/temporal
+#     x23_forecast_mase                  L5517   operators/temporal
+#     x24_series_features                L5547   operators/temporal
+#     x25_strength_features              L3312   operators/temporal
 #     x2_interval_join                   L929    operators/temporal
 #     x3_hierarchical_rollup             L952    operators/rollup
 #     x4_gapfill                         L1221   operators/temporal
 #     x5_mad_anomalies                   L1252   operators/temporal
-#     x6_ltob_downsample                 L5715   operators/temporal
-#     x7_lttb_downsample                 L5930   operators/temporal
-#     x8_seasonal_decompose              L3345   operators
-#     x9_series_correlation              L3466   operators
+#     x6_ltob_downsample                 L5714   operators/temporal
+#     x7_lttb_downsample                 L5929   operators/temporal
+#     x8_seasonal_decompose              L3344   operators
+#     x9_series_correlation              L3465   operators
 # === end TOC ===
 
 from __future__ import annotations
@@ -1451,20 +1451,20 @@ def q_s8_upsert_lastwin(spark, sf_dir):
 
 
 def q_s14_soft_delete(spark, sf_dir):
-    """Soft-delete / merge-on-read lifecycle (r8): import customers
-    into the bucketed store, tombstone every 7th id
-    (BucketedResourceStore.delete — O(batch) appended deletion
-    vectors, NO data rewrite), then upsert every 14th id (update-create
-    RESURRECTS a deleted id by clearing its tombstone), and read back.
-    Final state: %14 ids live at version 2 with the shifted balance,
-    remaining %7 ids gone, everyone else untouched — the oracle states
-    exactly that in one CASE/filter over the base table."""
+    """Delete-then-resurrect lifecycle (r8): import customers into the
+    bucketed resource store, delete every 7th id (copy-on-write: the
+    touched buckets are rewritten without them into the next snapshot),
+    then upsert every 14th id (update-create creates a deleted id
+    again), and read back. Final state: %14 ids live at version 2 with
+    the shifted balance, remaining %7 ids gone, everyone else untouched
+    — the oracle states exactly that in one CASE/filter over the base
+    table."""
     import hashlib
     import os
     import shutil
     import tempfile
 
-    from healthcare_api_spark.sources.store import BucketedResourceStore
+    from healthcare_api_spark.sources.store import ResourceStore
 
     _tune(spark)
     cust = _t(spark, sf_dir, "customer")
@@ -1481,7 +1481,7 @@ def q_s14_soft_delete(spark, sf_dir):
     root = f"{tempfile.gettempdir()}/spark_graft_s14_{sf_tag}_{os.getpid()}"
     shutil.rmtree(root, ignore_errors=True)
     try:
-        store = BucketedResourceStore(spark, root, num_buckets=8)
+        store = ResourceStore(spark, root, num_buckets=8)
         store.import_resources(base, "Customer")
         store.delete(doomed, "Customer")
         store.upsert(revived, "Customer", version_col="version")
@@ -1494,24 +1494,23 @@ def q_s14_soft_delete(spark, sf_dir):
 
 
 def q_s15_time_travel(spark, sf_dir):
-    """Snapshot time travel (r9, second session): the versioned
-    copy-on-write store (sources/store.VersionedResourceStore —
-    Iceberg-lite manifests: every write rewrites ONLY touched buckets
-    into a new v=K directory and publishes a bucket→version manifest;
-    old snapshots' files are never modified). Lifecycle: import
-    customers (v1) → upsert every 5th id with a shifted balance (v2)
-    → COPY-ON-WRITE delete every 7th id (v3, contrast s14's
-    merge-on-read tombstones), then read ALL THREE snapshots back via
-    ``AS OF`` and union them under a ``snap`` column. The oracle
-    states each snapshot's exact contents as CASE/filter SQL over the
-    base table — time travel is correct iff every historical read is
-    bit-identical to the declarative restatement."""
+    """Snapshot time travel (r9, second session): the bucketed resource
+    store (sources/store.ResourceStore — Iceberg-lite manifests: every
+    write rewrites ONLY touched buckets into a new v=K directory and
+    publishes a bucket→version manifest; old snapshots' files are never
+    modified). Lifecycle: import customers (v1) → upsert every 5th id
+    with a shifted balance (v2) → copy-on-write delete every 7th id
+    (v3), then read ALL THREE snapshots back via ``AS OF`` and union
+    them under a ``snap`` column. The oracle states each snapshot's
+    exact contents as CASE/filter SQL over the base table — time travel
+    is correct iff every historical read is bit-identical to the
+    declarative restatement."""
     import hashlib
     import os
     import shutil
     import tempfile
 
-    from healthcare_api_spark.sources.store import VersionedResourceStore
+    from healthcare_api_spark.sources.store import ResourceStore
 
     _tune(spark)
     cust = _t(spark, sf_dir, "customer")
@@ -1529,7 +1528,7 @@ def q_s15_time_travel(spark, sf_dir):
     root = f"{tempfile.gettempdir()}/spark_graft_s15_{sf_tag}_{os.getpid()}"
     shutil.rmtree(root, ignore_errors=True)
     try:
-        store = VersionedResourceStore(spark, root, num_buckets=8)
+        store = ResourceStore(spark, root, num_buckets=8)
         store.import_resources(base, "Customer")
         store.upsert(bumped, "Customer", version_col="version")
         store.delete(doomed, "Customer")
@@ -1559,7 +1558,7 @@ def q_s9_bucketed_upsert(spark, sf_dir):
     import shutil
     import tempfile
 
-    from healthcare_api_spark.sources.store import BucketedResourceStore
+    from healthcare_api_spark.sources.store import ResourceStore
 
     _tune(spark)
     cust = _t(spark, sf_dir, "customer")
@@ -1578,7 +1577,7 @@ def q_s9_bucketed_upsert(spark, sf_dir):
     root = f"{tempfile.gettempdir()}/spark_graft_s9_{sf_tag}_{os.getpid()}"
     shutil.rmtree(root, ignore_errors=True)
     try:
-        store = BucketedResourceStore(spark, root, num_buckets=8)
+        store = ResourceStore(spark, root, num_buckets=8)
         store.import_resources(base, "Customer")
         store.upsert(updates, "Customer", version_col="version")
         merged = store.table("Customer")

@@ -5,8 +5,7 @@ The reference derives stable Assay ids with
 RFC-4122 v5 is SHA-1 of namespace||utf8(name) with the version and
 variant bits forced; v3 is the same with MD5. Both are built here from
 built-in hash/substring/conv expressions, so the byte-exact ids stay
-inside whole-stage codegen with no Python worker. For pipelines that
-just need *a* stable id, ``stable_id`` skips the RFC-4122 bit surgery.
+inside whole-stage codegen with no Python worker.
 """
 
 from __future__ import annotations
@@ -60,20 +59,3 @@ def uuid3_ns(name: Column, namespace: uuid.UUID = uuid.NAMESPACE_DNS) -> Column:
     """
     return _name_uuid(F.md5, name, namespace, "3")
 
-
-def stable_id(name: Column) -> Column:
-    """Pure-JVM deterministic id: sha1 hex reshaped to UUID layout.
-
-    NOT RFC-4122-v5 byte-identical (no version bits); use when the only
-    requirement is determinism + uniqueness, which keeps the hot path
-    inside whole-stage codegen.
-    """
-    h = F.sha1(name)
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.substring(h, 13, 4),
-        F.substring(h, 17, 4),
-        F.substring(h, 21, 12),
-    )

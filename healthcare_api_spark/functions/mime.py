@@ -80,22 +80,20 @@ def mime_lookup_df(spark: SparkSession) -> DataFrame:
 
 
 def mime_from_name(file_name: Column) -> Column:
-    """Extension→MIME CASE chain over any file-name/path column — the
-    single source of truth for the lookup (used by guess_mime_expr and
-    the assay rewrite's title/url fallback)."""
-    ext = extension(file_name)
-    out = None
-    for e, m in MIME_BY_EXT.items():
-        cond = ext == F.lit(e)
-        out = F.when(cond, F.lit(m)) if out is None else out.when(cond, F.lit(m))
-    return F.coalesce(out, F.lit(OCTET_STREAM))
+    """Extension→MIME lookup over any file-name/path column — the single
+    source of truth (used by guess_mime_expr and the assay rewrite's
+    title/url fallback). One map literal indexed by the extension, so
+    the extension is derived once per value, also inside a lambda where
+    no common-subexpression elimination applies."""
+    table = F.create_map(*[F.lit(x) for kv in MIME_BY_EXT.items() for x in kv])
+    return F.coalesce(table[extension(file_name)], F.lit(OCTET_STREAM))
 
 
 def guess_mime_expr(url: Column) -> Column:
-    """Pure-expression variant: CASE chain over MIME_BY_EXT.
+    """Pure-expression variant: the MIME map lookup on the url path.
 
-    For narrow pipelines where a join is overkill; constant-folded by
-    Catalyst into a single codegen stage.
+    For narrow pipelines where a join is overkill; the map is a
+    constant-folded literal inside the codegen stage.
     """
     return mime_from_name(url_path(url))
 

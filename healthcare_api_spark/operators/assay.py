@@ -153,7 +153,7 @@ def specimen_doc_keys(docs: DataFrame, specimens: DataFrame) -> DataFrame:
 def _mime_for_attachment(att: Column) -> Column:
     """update_mime_type (assay.py:123-140): file name = url path when it
     has an extension, else the title; then the shared extension→MIME
-    lookup (functions.mime.mime_from_name). Pure CASE expression."""
+    lookup (functions.mime.mime_from_name). Pure map-lookup expression."""
     path = F.parse_url(att["url"], F.lit("PATH"))
     file_name = F.when(
         att["url"].isNotNull() & path.contains("."), path

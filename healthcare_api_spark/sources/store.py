@@ -1,84 +1,287 @@
 """The resource store (SURVEY.md §2.1 S6-S8).
 
 Replaces the reference's GCS-upload + Google-FHIR-store-import path
-(upload.sh:23, README.md:77-90) with a Parquet lakehouse:
+(upload.sh:23, README.md:77-90) with a Parquet lakehouse: one snapshot
+history per resource type. Layout::
 
-- one directory per store, partitioned by ``resourceType`` → a query for
-  one type is a partition-pruned scan (the reference's one-file-per-type
-  layout, made a physical partitioning);
-- import = append/overwrite of a type partition;
-- ``--enable-update-create`` upsert semantics (README.md:29) = merge by
-  id with last-write-wins on a version timestamp.
+    root/resourceType=T/v=K/bucket=NN/part-*.parquet   rows written by snapshot K
+    root/resourceType=T/_manifests/K.json             snapshot K's manifest
+
+- Ids hash (md5 — reproducible across Spark versions and engines) into
+  ``num_buckets`` buckets. The default of one bucket is the plain
+  type-partitioned store: a query for one type scans its directories
+  only.
+- ``import_resources`` (S7) starts a type's history at ``v=1``.
+  ``upsert`` (S8, ``--enable-update-create``, README.md:29: merge by id,
+  last write wins) and the copy-on-write ``delete`` rewrite only the
+  buckets their ids hash into, into a new ``v=K+1``; ``compact``
+  rewrites every bucket. No file of an older snapshot is modified, so
+  ``table(T, as_of=K)`` reads any retained snapshot exactly, and a lazy
+  frame over the store stays valid while a commit writes the next
+  version. ``expire`` is the vacuum.
+- Snapshot K's manifest maps every non-empty bucket to the version
+  directory holding its rows and records the layout contract
+  (``num_buckets``, the id column) and the row schema. It is read and
+  written on the driver (``healthcare_api_spark.manifest``), so
+  ``table`` builds with no Spark job: the scan is the listed bucket
+  directories under the recorded schema, with no footer inference. An
+  operation whose ``num_buckets`` or id column differs from the
+  manifest's raises ``ValueError``.
 """
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from healthcare_api_spark.manifest import (
+    check_contract,
+    filesystem,
+    glob_paths,
+    read_json,
+    write_json,
+)
+
+# a version directory's bucket directories and a type's manifests, matched
+# against the ``{a,b}`` string of a glob listing
+_BUCKET_DIR = re.compile(r"/bucket=(\d+)(?=,|\}$)")
+_MANIFEST_FILE = re.compile(r"/(\d+)\.json(?=,|\}$)")
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _nullable(t):
+    """A schema's JSON with every field, element and value nullable —
+    the schema Parquet footers give back for any written frame."""
+    if isinstance(t, dict):
+        return {k: True if k in _NULLABLE_KEYS else _nullable(v) for k, v in t.items()}
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    return t
 
 
 class ResourceStore:
-    """A Parquet-backed, type-partitioned FHIR resource store."""
+    """A Parquet-backed, type-partitioned, snapshot-versioned FHIR
+    resource store (module docstring)."""
 
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 1):
+        if num_buckets < 1:
+            raise ValueError("num_buckets must be >= 1")
         self.spark = spark
         self.root = root
+        self.num_buckets = num_buckets
 
     def _type_path(self, resource_type: str) -> str:
         return f"{self.root}/resourceType={resource_type}"
 
-    def import_resources(self, df: DataFrame, resource_type: str, mode: str = "overwrite",
+    def _version_path(self, resource_type: str, version: int) -> str:
+        return f"{self._type_path(resource_type)}/v={version}"
+
+    def _manifest_path(self, resource_type: str, version) -> str:
+        return f"{self._type_path(resource_type)}/_manifests/{version}.json"
+
+    def _bucket_expr(self, id_col: str):
+        # 15 hex chars of the md5 fit in a long
+        digest = F.md5(F.col(id_col).cast("string"))
+        return F.pmod(
+            F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
+            F.lit(self.num_buckets),
+        ).cast("int")
+
+    def versions(self, resource_type: str) -> list[int]:
+        """The type's retained snapshot versions, ascending."""
+        fs, hpath_cls = filesystem(self.spark, self.root)
+        listing = glob_paths(self.spark, fs, hpath_cls, self._manifest_path(resource_type, "*"))
+        return sorted(int(v) for v in _MANIFEST_FILE.findall(listing))
+
+    def _snapshot(self, resource_type: str, as_of: int | None = None,
+                  id_col: str | None = None) -> dict:
+        """The manifest of snapshot ``as_of`` (default: the newest),
+        checked against this store's ``num_buckets`` and, for a write,
+        its ``id_col``."""
+        have = self.versions(resource_type)
+        if not have:
+            raise ValueError(f"no snapshots for {resource_type!r}")
+        version = have[-1] if as_of is None else as_of
+        if version not in have:
+            raise ValueError(
+                f"snapshot v={version} of {resource_type!r} does not exist (have {have})"
+            )
+        doc = read_json(self.spark, self._manifest_path(resource_type, version))
+        mine = {"num_buckets": self.num_buckets}
+        if id_col is not None:
+            mine["id_col"] = id_col
+        check_contract(f"resource store {self._type_path(resource_type)}", doc, mine)
+        return doc
+
+    def _scan(self, resource_type: str, doc: dict, buckets=None) -> DataFrame:
+        """The rows of snapshot ``doc``, of ``buckets`` only when given:
+        its listed bucket directories read with its recorded schema."""
+        schema = StructType.fromJson(doc["schema"])
+        paths = [
+            f"{self._version_path(resource_type, v)}/bucket={b}"
+            for b, v in enumerate(doc["buckets"])
+            if v is not None and (buckets is None or b in buckets)
+        ]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
+
+    def _touched(self, ids: DataFrame, id_col: str) -> list[int]:
+        """The buckets ``ids`` hash into: one bounded collect (at most
+        ``num_buckets`` values), none when there is one bucket."""
+        if self.num_buckets == 1:
+            return [0]
+        return [r[0] for r in ids.select(self._bucket_expr(id_col)).distinct().collect()]
+
+    def _commit(self, resource_type: str, rows: DataFrame, id_col: str, touched,
+                doc: dict | None = None, options: dict | None = None) -> None:
+        """Write ``rows`` as the next version of the ``touched`` buckets
+        after snapshot ``doc`` (none: ``v=1``), then publish its
+        manifest. The directory is written even when empty (an empty
+        one-bucket version is an empty, still readable ``bucket=0``),
+        and the manifest last, so a failed write publishes nothing and
+        the retry overwrites it."""
+        version = 1 if doc is None else doc["version"] + 1
+        path = self._version_path(resource_type, version)
+        options = options or {}
+        if self.num_buckets == 1:
+            # the one bucket's directory is the output: no hash column,
+            # and no partitioned writer with its per-row sort
+            rows.write.mode("overwrite").options(**options).parquet(f"{path}/bucket=0")
+            written = {0}
+        else:
+            (
+                rows.withColumn("bucket", self._bucket_expr(id_col))
+                .write.mode("overwrite")
+                .options(**options)
+                .partitionBy("bucket")
+                .parquet(path)
+            )
+            fs, hpath_cls = filesystem(self.spark, path)
+            listing = glob_paths(self.spark, fs, hpath_cls, f"{path}/bucket=*")
+            written = {int(b) for b in _BUCKET_DIR.findall(listing)}
+        buckets = [None] * self.num_buckets if doc is None else doc["buckets"]
+        for b in touched:
+            buckets[b] = version if b in written else None
+        write_json(self.spark, self._manifest_path(resource_type, version), {
+            "version": version,
+            "num_buckets": self.num_buckets,
+            "id_col": id_col,
+            "schema": _nullable(json.loads(rows._jdf.schema().json())),
+            "buckets": buckets,
+        })
+
+    def import_resources(self, df: DataFrame, resource_type: str, id_col: str = "id",
                          bloom_cols: list[str] | None = None) -> None:
-        """S7: bulk import one resource type (idempotent overwrite of the
-        type partition; other types untouched — partitioned layout).
-        ``bloom_cols`` writes parquet bloom filters for those columns so
-        id point-lookups skip row groups (layout.bloom_filter_options)."""
-        writer = df.write.mode(mode)
+        """S7: bulk import one resource type as snapshot ``v=1`` of a new
+        history; the type's earlier history is removed, other types are
+        untouched. ``bloom_cols`` writes parquet bloom filters for those
+        columns so id point-lookups skip row groups
+        (layout.bloom_filter_options)."""
+        fs, hpath_cls = filesystem(self.spark, self.root)
+        fs.delete(hpath_cls(self._type_path(resource_type)), True)
+        options = None
         if bloom_cols:
             from healthcare_api_spark.operators.layout import bloom_filter_options
 
-            writer = writer.options(**bloom_filter_options(bloom_cols))
-        writer.parquet(self._type_path(resource_type))
+            options = bloom_filter_options(bloom_cols)
+        self._commit(resource_type, df, id_col, range(self.num_buckets), options=options)
 
-    def table(self, resource_type: str) -> DataFrame:
-        """Type scan = partition-pruned read (§2.7 'type scan')."""
-        return self.spark.read.parquet(self._type_path(resource_type))
+    def table(self, resource_type: str, as_of: int | None = None,
+              buckets: list[int] | None = None) -> DataFrame:
+        """Snapshot read (§2.7 'type scan'): the newest snapshot, or
+        ``as_of``'s. ``buckets`` restricts it to those hash buckets
+        before the scan — only their directories are listed and read,
+        which bounds the IO of ``upsert`` and ``delete`` to the buckets
+        they touch. Builds with no Spark job."""
+        return self._scan(resource_type, self._snapshot(resource_type, as_of), buckets)
 
     def upsert(self, updates: DataFrame, resource_type: str, id_col: str = "id",
                version_col: str | None = None) -> None:
-        """S8 update-create semantics: merge by id, last-write-wins.
-
-        At lake scale this is the foreachBatch/MERGE pattern; on plain
-        Parquet we rewrite the partition with the deduped union. The
-        winner is deterministic: highest version_col, else the update.
-        """
-        from pyspark.errors import AnalysisException
-
-        try:
-            existing = self.table(resource_type)
-        except AnalysisException as e:
-            # first write for this type: only a missing path is a valid
-            # reason to skip the merge — anything else (corrupt footer,
-            # permissions) must NOT silently overwrite history
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            self.import_resources(updates, resource_type)
+        """S8 update-create semantics: merge by id, last write wins —
+        the highest ``version_col``, else the update (``upsert_frames``).
+        The merged rows of the touched buckets become the next snapshot;
+        the first upsert of a type imports it."""
+        if not self.versions(resource_type):
+            self.import_resources(updates, resource_type, id_col=id_col)
             return
+        doc = self._snapshot(resource_type, id_col=id_col)
+        touched = self._touched(updates, id_col)
+        existing = self._scan(resource_type, doc, touched)
         merged = upsert_frames(existing, updates, id_col, version_col)
-        # Rewriting the input partition requires a materialization barrier.
-        merged_local = merged.localCheckpoint(eager=True)
-        self.import_resources(merged_local, resource_type, mode="overwrite")
+        self._commit(resource_type, merged, id_col, touched, doc)
 
-    def compact(self, resource_type: str, target_files: int = 1) -> None:
-        """Small-file compaction: rewrite the type partition into
-        ``target_files`` files. Incremental upserts fragment the layout
-        (every merge emits one file per shuffle task); at 100 TB the
-        resulting tiny-file scans dominate NameNode/list costs and break
-        split planning. Run compaction as periodic maintenance, exactly
-        like OPTIMIZE in Delta/Iceberg."""
-        existing = self.table(resource_type).coalesce(target_files)
-        merged_local = existing.localCheckpoint(eager=True)
-        self.import_resources(merged_local, resource_type, mode="overwrite")
+    def delete(self, ids: DataFrame, resource_type: str, id_col: str = "id") -> None:
+        """Copy-on-write delete by id: the touched buckets are rewritten
+        without the deleted rows into the next snapshot, and the
+        previous snapshot still serves them. Deleting an absent id
+        changes no row; a later ``upsert`` of a deleted id creates it
+        again."""
+        doc = self._snapshot(resource_type, id_col=id_col)
+        doomed = ids.select(id_col).distinct()
+        touched = self._touched(doomed, id_col)
+        kept = self._scan(resource_type, doc, touched).join(doomed, id_col, "left_anti")
+        self._commit(resource_type, kept, id_col, touched, doc)
+
+    def compact(self, resource_type: str, target_files: int = 1,
+                zorder: tuple[str, str] | None = None) -> None:
+        """Small-file compaction: rewrite every bucket into the next
+        snapshot. Incremental upserts fragment the layout (every merge
+        emits one file per shuffle task); the repartition keys rows by
+        their bucket, so each write task emits whole buckets and the
+        file count drops to about one a bucket while the id-hash layout
+        (and so bounded upsert IO) is kept — OPTIMIZE in Delta/Iceberg.
+
+        ``zorder=(col_a, col_b)`` also clusters each bucket by the
+        rank-normalized Morton key of the two columns
+        (``layout.zorder_by_ranked``), as ``OPTIMIZE ... ZORDER BY``
+        does: row groups then carry tight min/max on both columns and
+        scans prune on either.
+        """
+        doc = self._snapshot(resource_type)
+        rows = self._scan(resource_type, doc)
+        bucket = self._bucket_expr(doc["id_col"])
+        if zorder is not None:
+            from healthcare_api_spark.operators.layout import zorder_by_ranked
+
+            # attach zkey FIRST: zorder_by_ranked's rank-normalize join
+            # re-shuffles when the distinct-rank frame is not broadcast
+            # sized, which would destroy a prior repartition-by-bucket
+            # and fragment each bucket across O(write-tasks) files
+            rows = zorder_by_ranked(rows, *zorder)
+        rows = rows.repartition(self.num_buckets * target_files, bucket)
+        if zorder is not None:
+            # the partitioned writer needs its rows ordered by bucket,
+            # which this order already is, so rows inside each bucket
+            # file stay z-clustered
+            rows = rows.sortWithinPartitions(bucket, "zkey").drop("zkey")
+        self._commit(resource_type, rows, doc["id_col"], range(self.num_buckets), doc)
+
+    def expire(self, resource_type: str, keep_last: int = 1) -> list[int]:
+        """Vacuum: drop the manifests older than the last ``keep_last``
+        snapshots and the version directories no retained manifest
+        references. Returns the removed directory versions."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be ≥ 1")
+        have = self.versions(resource_type)
+        keep = have[-keep_last:]
+        referenced = {
+            v for k in keep for v in self._snapshot(resource_type, k)["buckets"]
+        }
+        fs, hpath_cls = filesystem(self.spark, self.root)
+        for v in have:
+            if v not in keep:
+                fs.delete(hpath_cls(self._manifest_path(resource_type, v)), False)
+        return [
+            v
+            for v in have
+            if v not in referenced
+            and fs.delete(hpath_cls(self._version_path(resource_type, v)), True)
+        ]
 
     def counts_by_type(self, types: list[str]) -> DataFrame:
         """A4: per-type counts across the store catalog."""
@@ -90,267 +293,6 @@ class ResourceStore:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out
-
-
-class BucketedResourceStore(ResourceStore):
-    """Copy-on-write store with sub-partition upsert granularity — the
-    100 TB production story for S8 (plain ``ResourceStore.upsert``
-    rewrites the whole type partition, correct but O(partition) IO per
-    batch).
-
-    Layout: ``root/resourceType=T/bucket=NN/*.parquet`` where NN =
-    md5-derived hash of the id modulo ``num_buckets``. An upsert:
-
-    1. computes the bucket of every update row (narrow),
-    2. collects the ≤ num_buckets TOUCHED bucket ids to the driver,
-    3. reads ONLY those bucket directories of the existing table
-       (partition-pruned scan),
-    4. merges with the same last-write-wins semantics, and
-    5. rewrites ONLY the touched buckets (dynamic partition overwrite).
-
-    IO per batch is O(touched buckets), not O(type partition) — with
-    well-spread ids a small batch touches few buckets; the worst case
-    equals the plain store. The same idea is what Delta/Iceberg MERGE
-    does with file-level pruning; this is the table-format-free version
-    behind the identical API.
-
-    ``num_buckets`` must stay constant for the lifetime of a store
-    directory (it defines the physical layout); changing it requires a
-    rewrite via ``import_resources``.
-    """
-
-    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32):
-        super().__init__(spark, root)
-        self.num_buckets = num_buckets
-
-    def _bucket_expr(self, id_col: str):
-        # md5-based (not F.hash) so the physical layout is reproducible
-        # across Spark versions and engines; 15 hex chars fit in a long
-        digest = F.md5(F.col(id_col).cast("string"))
-        return F.pmod(
-            F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
-            F.lit(self.num_buckets),
-        ).cast("int")
-
-    def import_resources(self, df: DataFrame, resource_type: str, mode: str = "overwrite",
-                         id_col: str = "id") -> None:
-        (
-            df.withColumn("bucket", self._bucket_expr(id_col))
-            .write.mode(mode)
-            .partitionBy("bucket")
-            .parquet(self._type_path(resource_type))
-        )
-
-    def _tombstone_path(self, resource_type: str) -> str:
-        # leading underscore: Hadoop/Spark file listing skips _-prefixed
-        # directories, so the data scan never sees tombstones
-        return f"{self._type_path(resource_type)}/_tombstones"
-
-    def _tombstones(self, resource_type: str) -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.parquet(self._tombstone_path(resource_type))
-        except AnalysisException as e:
-            # UNABLE_TO_INFER_SCHEMA: the dir exists but every bucket
-            # partition was cleared (all tombstones consumed) — same as
-            # no tombstones at all
-            ok = (
-                "PATH_NOT_FOUND" in str(e)
-                or "Path does not exist" in str(e)
-                or "UNABLE_TO_INFER_SCHEMA" in str(e)
-            )
-            if not ok:
-                raise
-            return None
-
-    def delete(self, ids: DataFrame, resource_type: str, id_col: str = "id") -> None:
-        """Soft delete by id — the deletion-vector idea (Delta/Iceberg
-        merge-on-read), table-format-free: APPEND tombstone rows under
-        ``_tombstones/bucket=NN`` instead of rewriting any data file.
-        IO per delete batch is O(batch), not O(touched data); readers
-        anti-join the (bucket-aligned, usually broadcast-sized)
-        tombstone set; ``compact()`` physically applies and clears
-        them — the vacuum step. Deleting an absent id is a no-op
-        tombstone; a later ``upsert`` of a deleted id RESURRECTS it
-        (update-create semantics — the upsert clears matching
-        tombstones in its touched buckets)."""
-        existing = self._tombstones(resource_type)
-        if existing is not None:
-            prev = self._tombstone_id_col(existing)
-            if prev != id_col:
-                raise ValueError(
-                    f"tombstones for {resource_type!r} are keyed by "
-                    f"{prev!r}; delete() was called with id_col="
-                    f"{id_col!r} — one id column per resource type"
-                )
-        (
-            ids.select(F.col(id_col)).distinct()
-            .withColumn("bucket", self._bucket_expr(id_col))
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(self._tombstone_path(resource_type))
-        )
-
-    @staticmethod
-    def _tombstone_id_col(tomb: DataFrame) -> str:
-        """The tombstone layout is exactly (id value, bucket); the id
-        column KEEPS its live-table name so readers join by name. A
-        mixed-name tombstone dir means delete() calls disagreed — that
-        is rejected at write time, so a multi-column read here is
-        corruption, not a soft case."""
-        cols = [c for c in tomb.columns if c != "bucket"]
-        if len(cols) != 1:
-            raise ValueError(
-                f"tombstone store is corrupt: expected one id column, "
-                f"found {cols!r}"
-            )
-        return cols[0]
-
-    def table(self, resource_type: str) -> DataFrame:
-        live = super().table(resource_type).drop("bucket")
-        tomb = self._tombstones(resource_type)
-        if tomb is None:
-            return live
-        id_col = self._tombstone_id_col(tomb)
-        if id_col not in live.columns:
-            raise ValueError(
-                f"tombstones for {resource_type!r} are keyed by "
-                f"{id_col!r}, which is not a live-table column — "
-                f"reads would silently miss the deletes"
-            )
-        return live.join(
-            tomb.select(id_col).distinct(), id_col, "left_anti"
-        )
-
-    def upsert(self, updates: DataFrame, resource_type: str, id_col: str = "id",
-               version_col: str | None = None) -> None:
-        from pyspark.errors import AnalysisException
-
-        updates_b = updates.withColumn("bucket", self._bucket_expr(id_col))
-        # ONE touched-bucket collect (r12: the tombstone path and the
-        # data path each ran this identical distinct — two full passes
-        # over the updates plan per upsert)
-        touched = [
-            r["bucket"] for r in updates_b.select("bucket").distinct().collect()
-        ]
-        # update-create beats delete: clear tombstones for upserted ids
-        # (touched tombstone partitions only — same bounded-IO contract)
-        tomb = self._tombstones(resource_type)
-        if tomb is not None and self._tombstone_id_col(tomb) != id_col:
-            raise ValueError(
-                f"tombstones for {resource_type!r} are keyed by "
-                f"{self._tombstone_id_col(tomb)!r}; upsert() was called "
-                f"with id_col={id_col!r} — resurrection would silently "
-                f"fail"
-            )
-        if tomb is not None:
-            t_touched = touched
-            kept = (
-                tomb.filter(F.col("bucket").isin(t_touched))
-                .join(updates.select(id_col).distinct(), id_col, "left_anti")
-                .localCheckpoint(eager=True)  # we rewrite what we read
-            )
-            # NOT dynamic partition overwrite: a touched bucket whose
-            # tombstones ALL clear yields zero rows, and dynamic mode
-            # skips row-less partitions — the stale tombstones would
-            # survive and the resurrection silently fail. Remove the
-            # touched partition dirs explicitly, then append survivors.
-            for b in t_touched:
-                self._remove_dir(
-                    f"{self._tombstone_path(resource_type)}/bucket={b}"
-                )
-            if kept.take(1):
-                (
-                    kept.write.mode("append")
-                    .partitionBy("bucket")
-                    .parquet(self._tombstone_path(resource_type))
-                )
-        try:
-            existing = self.spark.read.parquet(self._type_path(resource_type))
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            self.import_resources(updates, resource_type, id_col=id_col)
-            return
-        # partition-pruned read: only the touched bucket directories
-        existing_touched = existing.filter(F.col("bucket").isin(touched))
-        merged = upsert_frames(
-            existing_touched.drop("bucket"), updates, id_col, version_col
-        ).withColumn("bucket", self._bucket_expr(id_col))
-        # barrier: we overwrite directories we just read
-        merged_local = merged.localCheckpoint(eager=True)
-        (
-            merged_local.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self._type_path(resource_type))
-        )
-
-    def compact(
-        self,
-        resource_type: str,
-        target_files: int = 1,
-        zorder: tuple[str, str] | None = None,
-    ) -> None:
-        """Compaction for the bucketed layout: one pass that rewrites
-        every bucket directory down to ~``target_files`` file(s) each.
-        The repartition keys rows by their bucket, so each write task
-        emits whole buckets — file count drops from O(upserts × tasks)
-        to O(buckets) while the id-hash layout (and therefore bounded
-        future upsert IO) is preserved.
-
-        ``zorder=(col_a, col_b)`` additionally clusters each rewritten
-        bucket by the rank-normalized Morton key of the two columns
-        (``layout.zorder_by_ranked``) — compaction already rewrites the
-        data, so Z-order maintenance rides along for free, exactly like
-        ``OPTIMIZE ... ZORDER BY`` in Delta/Iceberg. Row groups then
-        carry tight min/max on BOTH columns and scans prune on either.
-        """
-        existing = self.spark.read.parquet(self._type_path(resource_type))
-        merged = existing
-        # apply tombstones physically (the vacuum half of merge-on-read):
-        # compaction rewrites everything anyway, so the anti-join rides
-        # along for free and the tombstone set resets to empty below
-        tomb = self._tombstones(resource_type)
-        if tomb is not None:
-            t_id = self._tombstone_id_col(tomb)
-            if t_id not in merged.columns:
-                raise ValueError(
-                    f"tombstones for {resource_type!r} are keyed by "
-                    f"{t_id!r}, which is not a table column — compaction "
-                    f"would silently drop the deletes"
-                )
-            merged = merged.join(
-                tomb.select(t_id).distinct(), t_id, "left_anti"
-            )
-        if zorder is not None:
-            from healthcare_api_spark.operators.layout import zorder_by_ranked
-
-            # attach zkey FIRST: zorder_by_ranked's rank-normalize join
-            # re-shuffles when the distinct-rank frame is not broadcast
-            # sized, which would destroy a prior repartition-by-bucket
-            # and fragment each bucket across O(write-tasks) files
-            merged = zorder_by_ranked(merged, *zorder)
-        merged = merged.repartition(max(self.num_buckets * target_files, 1), "bucket")
-        if zorder is not None:
-            # sort by (bucket, zkey): the partitionBy writer splits by
-            # bucket, and rows inside each bucket file stay z-clustered
-            merged = merged.sortWithinPartitions("bucket", "zkey").drop("zkey")
-        merged_local = merged.localCheckpoint(eager=True)
-        (
-            merged_local.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._type_path(resource_type))
-        )
-        if tomb is not None:
-            self._remove_dir(self._tombstone_path(resource_type))
-
-    def _remove_dir(self, path: str) -> None:
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
 
 
 def import_bucketed(
@@ -409,8 +351,9 @@ def snapshot_diff(
     via a struct equality, so NULL→value and value→NULL both register.
     Unchanged rows are filtered out, so output is proportional to the
     churn, not the table. At lake scale run it per id-hash bucket
-    (BucketedResourceStore layout) so both sides co-partition and the
-    join never shuffles the full snapshots.
+    (``ResourceStore.table(T, as_of=K, buckets=...)`` of two snapshots)
+    so both sides co-partition and the join never shuffles the full
+    snapshots.
     """
     if compare_cols is None:
         compare_cols = [
@@ -438,275 +381,3 @@ def snapshot_diff(
             "change",
         )
     )
-
-
-class VersionedResourceStore(ResourceStore):
-    """Snapshot-versioned copy-on-write store — the time-travel /
-    snapshot-isolation half of the lakehouse story
-    (BucketedResourceStore covers bounded-IO upserts and s14 covers
-    merge-on-read deletes; this is Iceberg-lite `AS OF`):
-
-    - layout ``root/resourceType=T/v=K/bucket=NN/*.parquet`` plus one
-      tiny JSON manifest per snapshot under the listing-invisible
-      ``_manifests/`` (the underscore trick) mapping every bucket to
-      the version directory holding its CURRENT files;
-    - a write (upsert or copy-on-write delete) rewrites ONLY the
-      touched buckets into a NEW ``v=K+1`` directory and publishes a
-      new manifest — previous snapshots' files are never modified, so
-      ``table(T, as_of=K)`` reconstructs any retained snapshot
-      EXACTLY;
-    - reads group the manifest's buckets by version: one
-      partition-pruned parquet scan per distinct version (the
-      ``bucket IN (...)`` filter prunes at the directory level), then
-      a union — IO is the live file set, never the full history;
-    - ``expire(T, keep_last=N)`` is the vacuum: drops version dirs no
-      retained manifest references.
-
-    Manifest IO is driver-side (a few hundred bytes per snapshot —
-    exactly where table formats keep their metadata); data IO stays
-    on the cluster. ``num_buckets`` is fixed for a store's lifetime,
-    same contract as the bucketed store.
-    """
-
-    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32):
-        super().__init__(spark, root)
-        self.num_buckets = num_buckets
-
-    # same md5 contract as BucketedResourceStore: layout reproducible
-    # across Spark versions and engines
-    def _bucket_expr(self, id_col: str):
-        digest = F.md5(F.col(id_col).cast("string"))
-        return F.pmod(
-            F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
-            F.lit(self.num_buckets),
-        ).cast("int")
-
-    def _manifest_dir(self, resource_type: str) -> str:
-        return f"{self._type_path(resource_type)}/_manifests"
-
-    def _fs(self, path: str):
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
-
-    def _write_manifest(
-        self, resource_type: str, version: int, mapping: dict[int, int]
-    ) -> None:
-        import json
-
-        fs, _ = self._fs(self._manifest_dir(resource_type))
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(
-            f"{self._manifest_dir(resource_type)}/{version}.json"
-        )
-        out = fs.create(p, True)
-        payload = json.dumps(
-            {"version": version, "buckets": {str(k): v for k, v in mapping.items()}}
-        )
-        out.write(bytearray(payload.encode("utf-8")))
-        out.close()
-
-    def versions(self, resource_type: str) -> list[int]:
-        fs, hpath = self._fs(self._manifest_dir(resource_type))
-        if not fs.exists(hpath):
-            return []
-        out = []
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if name.endswith(".json"):
-                out.append(int(name[:-5]))
-        return sorted(out)
-
-    def _read_manifest(
-        self, resource_type: str, as_of: int | None = None
-    ) -> tuple[int, dict[int, int]]:
-        import json
-
-        avail = self.versions(resource_type)
-        if not avail:
-            raise ValueError(f"no snapshots for {resource_type!r}")
-        version = max(avail) if as_of is None else as_of
-        if version not in avail:
-            raise ValueError(
-                f"snapshot v={version} of {resource_type!r} does not "
-                f"exist (have {avail})"
-            )
-        line = (
-            self.spark.read.text(
-                f"{self._manifest_dir(resource_type)}/{version}.json"
-            )
-            .agg(F.concat_ws("", F.collect_list("value")))
-            .head()[0]
-        )
-        doc = json.loads(line)
-        return version, {int(k): v for k, v in doc["buckets"].items()}
-
-    def _version_path(self, resource_type: str, version: int) -> str:
-        return f"{self._type_path(resource_type)}/v={version}"
-
-    def import_resources(self, df: DataFrame, resource_type: str, mode: str = "overwrite",
-                         id_col: str = "id") -> None:
-        if mode != "overwrite":
-            raise ValueError("versioned store imports are snapshot v1: mode='overwrite'")
-        fs, hpath = self._fs(self._type_path(resource_type))
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-        (
-            df.withColumn("bucket", self._bucket_expr(id_col))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._version_path(resource_type, 1))
-        )
-        self._write_manifest(
-            resource_type, 1, {b: 1 for b in range(self.num_buckets)}
-        )
-
-    def table(
-        self,
-        resource_type: str,
-        as_of: int | None = None,
-        buckets: list[int] | None = None,
-    ) -> DataFrame:
-        """Snapshot read. ``buckets`` restricts the read to those hash
-        buckets BEFORE the scan (ADVICE r9): the manifest mapping is
-        pruned driver-side so only versions holding a wanted bucket are
-        scanned at all, and each per-version scan carries a
-        ``bucket IN (...)`` filter on the partition column — directory-
-        level pruning, which the write path (upsert/delete) relies on
-        for its 'IO bounded to touched buckets' contract."""
-        from functools import reduce
-
-        from pyspark.errors import AnalysisException
-
-        _, mapping = self._read_manifest(resource_type, as_of)
-        want = (
-            mapping
-            if buckets is None
-            else {b: v for b, v in mapping.items() if b in set(buckets)}
-        )
-        by_version: dict[int, list[int]] = {}
-        for b, v in want.items():
-            by_version.setdefault(v, []).append(b)
-        parts = []
-
-        def _read_version(v):
-            try:
-                return self.spark.read.parquet(
-                    self._version_path(resource_type, v)
-                )
-            except AnalysisException as e:
-                # a version dir is absent only when every bucket it
-                # would hold ended empty (copy-on-write delete emptied
-                # them) — semantically an empty contribution
-                if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                    return None
-                raise
-
-        for v, bs in sorted(by_version.items()):
-            df = _read_version(v)
-            if df is not None:
-                parts.append(df.filter(F.col("bucket").isin(bs)))
-        if not parts and buckets is not None:
-            # every wanted bucket's version dir is absent (emptied by
-            # copy-on-write deletes): recover the schema from any
-            # readable version; the result is correctly empty
-            for v in sorted(set(mapping.values())):
-                df = _read_version(v)
-                if df is not None:
-                    parts.append(df.filter(F.lit(False)))
-                    break
-        if not parts:
-            raise ValueError(f"snapshot has no readable data for {resource_type!r}")
-        return reduce(lambda a, b: a.unionByName(b), parts).drop("bucket")
-
-    def _commit_touched(
-        self,
-        resource_type: str,
-        merged,  # rows for the touched buckets, WITHOUT bucket column
-        id_col: str,
-        touched: list[int],
-        mapping: dict[int, int],
-        new_version: int,
-    ) -> None:
-        out = merged.withColumn("bucket", self._bucket_expr(id_col))
-        # barrier: new version dirs never overlap files we read, but the
-        # checkpoint also keeps the plan from re-reading the store after
-        # the manifest flips
-        out_local = out.localCheckpoint(eager=True)
-        if out_local.take(1):
-            (
-                out_local.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(self._version_path(resource_type, new_version))
-            )
-        for b in touched:
-            mapping[b] = new_version
-        self._write_manifest(resource_type, new_version, mapping)
-
-    def upsert(self, updates: DataFrame, resource_type: str, id_col: str = "id",
-               version_col: str | None = None) -> None:
-        current, mapping = self._read_manifest(resource_type)
-        updates_b = updates.withColumn("bucket", self._bucket_expr(id_col))
-        touched = [
-            r["bucket"] for r in updates_b.select("bucket").distinct().collect()
-        ]
-        # bucket-pruned snapshot read: the IN filter rides the partition
-        # column into each per-version scan instead of being re-derived
-        # from md5 post-read (which cannot prune directories)
-        existing_touched = self.table(resource_type, buckets=touched)
-        merged = upsert_frames(existing_touched, updates, id_col, version_col)
-        self._commit_touched(
-            resource_type, merged, id_col, touched, mapping, current + 1
-        )
-
-    def delete(self, ids: DataFrame, resource_type: str, id_col: str = "id") -> None:
-        """COPY-ON-WRITE delete (contrast s14's merge-on-read
-        tombstones): touched buckets are rewritten without the doomed
-        rows into the next version — the read path needs no anti-join,
-        and the PREVIOUS snapshot still serves the deleted rows."""
-        current, mapping = self._read_manifest(resource_type)
-        ids_b = (
-            ids.select(F.col(id_col)).distinct()
-            .withColumn("bucket", self._bucket_expr(id_col))
-        )
-        touched = [
-            r["bucket"] for r in ids_b.select("bucket").distinct().collect()
-        ]
-        kept = self.table(resource_type, buckets=touched).join(
-            ids.select(id_col).distinct(), id_col, "left_anti"
-        )
-        self._commit_touched(
-            resource_type, kept, id_col, touched, mapping, current + 1
-        )
-
-    def expire(self, resource_type: str, keep_last: int = 1) -> list[int]:
-        """Vacuum: drop manifests older than the last ``keep_last``
-        snapshots and delete version DIRECTORIES no retained manifest
-        references. Returns the removed directory versions."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be ≥ 1")
-        avail = self.versions(resource_type)
-        keep = set(avail[-keep_last:])
-        referenced: set[int] = set()
-        for v in sorted(keep):
-            _, mapping = self._read_manifest(resource_type, v)
-            referenced.update(mapping.values())
-        removed = []
-        fs, _ = self._fs(self._type_path(resource_type))
-        sc = self.spark.sparkContext
-        for v in avail:
-            if v not in keep:
-                p = sc._jvm.org.apache.hadoop.fs.Path(
-                    f"{self._manifest_dir(resource_type)}/{v}.json"
-                )
-                fs.delete(p, False)
-        for v in set(avail) - referenced:
-            # a data dir may be unreferenced even for a kept manifest's
-            # version number (pure-delete snapshots write no files)
-            p = sc._jvm.org.apache.hadoop.fs.Path(
-                self._version_path(resource_type, v)
-            )
-            if fs.exists(p) and v not in referenced:
-                fs.delete(p, True)
-                removed.append(v)
-        return sorted(removed)

@@ -85,10 +85,17 @@ import re
 from contextlib import contextmanager
 from functools import reduce
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
+
+from healthcare_api_spark.manifest import (
+    check_contract,
+    filesystem,
+    glob_paths,
+    read_json,
+    write_json,
+)
 
 _BUCKET_SEED = 42
 _MANIFEST = "_store.json"
@@ -96,29 +103,6 @@ _MANIFEST = "_store.json"
 # of their paths
 _COMPLETE = re.compile(r"/([dv])(\d+)/_SUCCESS(?=,|\}$)")
 _SNAPSHOT_BUCKET = re.compile(r"/v(\d+)/_pt=(\d+)(?=,|\}$)")
-
-
-def _jclass(spark: SparkSession, name: str) -> JavaClass:
-    """A JVM class by its full name: ``jvm.a.b.C`` would cost one py4j
-    round trip per name segment."""
-    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
-
-
-def _filesystem(spark: SparkSession, path: str):
-    """(Hadoop FileSystem of ``path``, the Path class) — the same
-    listing code addresses local paths and object stores."""
-    hpath_cls = _jclass(spark, "org.apache.hadoop.fs.Path")
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return hpath_cls(path).getFileSystem(conf), hpath_cls
-
-
-def _glob(spark: SparkSession, fs, hpath_cls, pattern: str) -> str:
-    """The paths matching ``pattern`` as one ``{a,b}`` string — the
-    listing and the conversion are one py4j call each."""
-    stats = fs.globStatus(hpath_cls(pattern))
-    return _jclass(spark, "org.apache.commons.lang3.ArrayUtils").toString(
-        _jclass(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(stats)
-    )
 
 
 def sum_merge(key_cols: list[str], col: str):
@@ -223,16 +207,16 @@ class BucketedVersionedState:
         ``v{id}`` snapshots holding it, the complete snapshot ids, the
         complete delta ids) — two glob listings, whatever the number of
         versions and buckets."""
-        fs, hpath_cls = _filesystem(spark, self.path)
+        fs, hpath_cls = filesystem(spark, self.path)
         complete = {
             (kind, int(v))
             for kind, v in _COMPLETE.findall(
-                _glob(spark, fs, hpath_cls, f"{self.path}/[dv]*/_SUCCESS")
+                glob_paths(spark, fs, hpath_cls, f"{self.path}/[dv]*/_SUCCESS")
             )
         }
         bases: dict[int, list[int]] = {}
         for v, b in _SNAPSHOT_BUCKET.findall(
-            _glob(spark, fs, hpath_cls, f"{self.path}/v*/_pt=*")
+            glob_paths(spark, fs, hpath_cls, f"{self.path}/v*/_pt=*")
         ):
             if ("v", int(v)) in complete:
                 bases.setdefault(int(b), []).append(int(v))
@@ -259,31 +243,16 @@ class BucketedVersionedState:
         (None before the first commit). A commit passes its delta's
         ``schema``, which the first one records with the
         configuration."""
-        fs, hpath_cls = _filesystem(spark, self.path)
-        mpath = hpath_cls(f"{self.path}/{_MANIFEST}")
+        mpath = f"{self.path}/{_MANIFEST}"
         mine = self._manifest()
-        if not fs.exists(mpath):
+        theirs = read_json(spark, mpath)
+        if theirs is None:
             if schema is not None:
-                out = fs.create(mpath, True)
-                try:
-                    doc = {**mine, "schema": json.loads(schema.json())}
-                    out.write(bytearray(json.dumps(doc).encode()))
-                finally:
-                    out.close()
+                write_json(
+                    spark, mpath, {**mine, "schema": json.loads(schema.json())}
+                )
             return schema
-        stream = fs.open(mpath)
-        try:
-            theirs = json.loads(bytes(stream.readAllBytes()).decode())
-        finally:
-            stream.close()
-        diff = [k for k in mine if mine[k] != theirs.get(k)]
-        if diff:
-            raise ValueError(
-                f"state store {self.path} was written with "
-                + ", ".join(f"{k}={theirs.get(k)!r}" for k in diff)
-                + "; opened with "
-                + ", ".join(f"{k}={mine[k]!r}" for k in diff)
-            )
+        check_contract(f"state store {self.path}", theirs, mine)
         return StructType.fromJson(theirs["schema"])
 
     # -- reads --------------------------------------------------------
@@ -631,6 +600,6 @@ class BucketedVersionedState:
             and sum(1 for s in snapshots if s > v) >= self.keep_versions
         ]
         if doomed:
-            fs, hpath_cls = _filesystem(spark, self.path)
+            fs, hpath_cls = filesystem(spark, self.path)
             for name in doomed:
                 fs.delete(hpath_cls(f"{self.path}/{name}"), True)

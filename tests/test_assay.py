@@ -170,6 +170,16 @@ def test_plan_scans_documents_once_and_runs_no_python(result):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_mime_extension_derived_once(result):
+    # the MIME lookup sits inside the rewrite's transform lambda, where no
+    # common-subexpression elimination applies: one map lookup derives
+    # the extension once per attachment, a CASE chain once per entry
+    from healthcare_api_spark.functions.mime import _EXT_PATTERN
+
+    plan = result.documents._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(_EXT_PATTERN) == 1
+
+
 def _self_join_documents(docs, groups, specimens):
     """The documents derivation as it bound specimen docs before: by
     joining the documents back to their own specimen keys on doc id."""

@@ -57,7 +57,7 @@ def test_zorder_compaction_prunes_row_groups(spark, tmp_path):
     selective predicate on EITHER z-column materializes row groups from
     a subset of files (min/max pruning)."""
     from healthcare_api_spark.operators.layout import zorder_by_ranked
-    from healthcare_api_spark.sources.store import BucketedResourceStore
+    from healthcare_api_spark.sources.store import ResourceStore
 
     root = str(tmp_path / "store")
     n = 4096
@@ -66,7 +66,7 @@ def test_zorder_compaction_prunes_row_groups(spark, tmp_path):
         (F.col("id") % 64).cast("double").alias("price"),
         F.pmod(F.hash(F.col("id")), F.lit(64)).cast("long").alias("cust"),
     )
-    store = BucketedResourceStore(spark, root, num_buckets=2)
+    store = ResourceStore(spark, root, num_buckets=2)
     store.import_resources(df, "Order")
     # fragment, then compact with z-order maintenance; several files per
     # bucket so pruning has something to skip
@@ -79,7 +79,7 @@ def test_zorder_compaction_prunes_row_groups(spark, tmp_path):
         store.compact("Order", target_files=8, zorder=("price", "cust"))
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    tbl = spark.read.parquet(f"{root}/resourceType=Order")
+    tbl = store.table("Order")
     all_files = set(tbl.inputFiles())
     assert len(all_files) >= 8
     # ADVICE r3: the rank-normalize join inside zorder_by_ranked must

@@ -817,19 +817,19 @@ def test_series_features_all_keyed_no_cartesian(spark):
 
 
 def test_time_travel_snapshot_union_of_pruned_scans(spark):
-    # s15 (r9): the three AS-OF reads are unions of per-version parquet
-    # scans (manifest-routed); nothing cartesian, no global exchange —
-    # the bucket-IN pruning of the WRITE path is pinned in
-    # test_store_pruning (PartitionFilters on bucket)
+    # s15 (r9): an AS-OF read is one parquet scan whose root paths are
+    # the snapshot's live bucket directories, routed by its manifest —
+    # v1's untouched buckets with v2's touched one; nothing cartesian,
+    # no global exchange, no footer job
     # the gate checkpoints the unioned snapshots (the store dir is
     # cleaned up before the driver collects), so its own plan is a
     # bare ExistingRDD — pin the READ plan on a live store instead
-    from healthcare_api_spark.sources.store import VersionedResourceStore
+    from healthcare_api_spark.sources.store import ResourceStore
 
     import tempfile
 
     with tempfile.TemporaryDirectory() as root:
-        store = VersionedResourceStore(spark, root, num_buckets=4)
+        store = ResourceStore(spark, root, num_buckets=4)
         base = spark.createDataFrame(
             [(i, 1, float(i)) for i in range(1, 9)],
             "id bigint, version int, val double",
@@ -842,9 +842,14 @@ def test_time_travel_snapshot_union_of_pruned_scans(spark):
             "T",
             version_col="version",
         )
-        plan = _plan(store.table("T"))
-        assert "Union" in plan  # v1 untouched buckets ∪ v2 touched
+        snap = store.table("T")
+        plan = _plan(snap)
+        assert plan.count("FileScan") == 1
         assert "CartesianProduct" not in plan
+        assert "Exchange" not in plan
+        dirs = {f.rsplit("/", 1)[0].split("/resourceType=T/")[1] for f in snap.inputFiles()}
+        assert {d.split("/")[0] for d in dirs} == {"v=1", "v=2"}
+        assert len({d.split("/")[1] for d in dirs}) == len(dirs)  # one version per bucket
     df = entrymod.q_s15_time_travel(spark, SF_DIR)
     plan = _plan(df)
     assert "CartesianProduct" not in plan

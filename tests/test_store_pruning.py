@@ -1,24 +1,26 @@
 """The store's type-partitioned layout must actually prune: a one-type
-query reads one partition directory, never the whole store. The bucketed
-copy-on-write variant must additionally bound upsert IO to the touched
-bucket directories."""
+query reads one partition directory, never the whole store. With several
+buckets, upsert and delete IO is bounded to the touched bucket
+directories, every snapshot stays readable, and the manifest enforces
+the layout contract and carries the schema."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from healthcare_api_spark.sources.store import BucketedResourceStore, ResourceStore
+from healthcare_api_spark.sources.store import ResourceStore
 
 
-def _bucket_files(type_path: str) -> dict[str, set[tuple[str, int]]]:
+def _bucket_files(version_path: str) -> dict[str, set[tuple[str, int]]]:
     """{bucket_dir: {(file_name, size)}} snapshot of the physical layout."""
     out = {}
-    for d in os.listdir(type_path):
+    for d in os.listdir(version_path):
         if not d.startswith("bucket="):
             continue
-        full = os.path.join(type_path, d)
+        full = os.path.join(version_path, d)
         out[d] = {
             (f, os.path.getsize(os.path.join(full, f)))
             for f in os.listdir(full)
@@ -43,39 +45,43 @@ def test_type_scan_reads_single_partition(spark, tmp_path):
 
 
 def test_bucketed_upsert_semantics_match_plain_store(spark, tmp_path):
-    # same last-write-wins merge as ResourceStore.upsert (S8)
-    store = BucketedResourceStore(spark, str(tmp_path / "bs"), num_buckets=8)
-    store.import_resources(
-        spark.createDataFrame([(f"p{i}", 1, f"v{i}") for i in range(50)],
-                              ["id", "version", "payload"]), "Patient"
-    )
-    store.upsert(
-        spark.createDataFrame([("p3", 2, "updated"), ("p999", 1, "created")],
-                              ["id", "version", "payload"]),
-        "Patient", version_col="version",
-    )
-    rows = {r["id"]: r for r in store.table("Patient").collect()}
-    assert len(rows) == 51
-    assert rows["p3"]["payload"] == "updated" and rows["p999"]["payload"] == "created"
-    # stale update loses to a higher existing version
-    store.upsert(
-        spark.createDataFrame([("p3", 1, "stale")], ["id", "version", "payload"]),
-        "Patient", version_col="version",
-    )
-    assert {r["payload"] for r in store.table("Patient").filter(F.col("id") == "p3").collect()} \
-        == {"updated"}
+    # the same last-write-wins merge (S8) at eight buckets and at one
+    tables = []
+    for nb in (8, 1):
+        store = ResourceStore(spark, str(tmp_path / f"bs{nb}"), num_buckets=nb)
+        store.import_resources(
+            spark.createDataFrame([(f"p{i}", 1, f"v{i}") for i in range(50)],
+                                  ["id", "version", "payload"]), "Patient"
+        )
+        store.upsert(
+            spark.createDataFrame([("p3", 2, "updated"), ("p999", 1, "created")],
+                                  ["id", "version", "payload"]),
+            "Patient", version_col="version",
+        )
+        rows = {r["id"]: r for r in store.table("Patient").collect()}
+        assert len(rows) == 51
+        assert rows["p3"]["payload"] == "updated" and rows["p999"]["payload"] == "created"
+        # stale update loses to a higher existing version
+        store.upsert(
+            spark.createDataFrame([("p3", 1, "stale")], ["id", "version", "payload"]),
+            "Patient", version_col="version",
+        )
+        assert {r["payload"] for r in store.table("Patient").filter(F.col("id") == "p3").collect()} \
+            == {"updated"}
+        tables.append(sorted(tuple(r) for r in store.table("Patient").collect()))
+    assert tables[0] == tables[1]
 
 
 def test_bucketed_upsert_touches_bounded_file_set(spark, tmp_path):
     # VERDICT r1 #6: an upsert must rewrite ONLY the buckets its update
-    # batch hashes into — untouched bucket directories stay bit-identical.
-    store = BucketedResourceStore(spark, str(tmp_path / "bs2"), num_buckets=8)
+    # batch hashes into — the new version holds the touched bucket only,
+    # and the previous version's files stay bit-identical.
+    store = ResourceStore(spark, str(tmp_path / "bs2"), num_buckets=8)
     store.import_resources(
         spark.createDataFrame([(f"p{i}", f"v{i}") for i in range(200)], ["id", "payload"]),
         "Patient",
     )
-    type_path = store._type_path("Patient")
-    before = _bucket_files(type_path)
+    before = _bucket_files(store._version_path("Patient", 1))
     assert len(before) == 8  # 200 spread ids populate every bucket
 
     updates = spark.createDataFrame([("p7", "new")], ["id", "payload"])
@@ -83,13 +89,12 @@ def test_bucketed_upsert_touches_bounded_file_set(spark, tmp_path):
     touched = {f"bucket={r[0]}" for r in
                updates.select(store._bucket_expr("id")).distinct().collect()}
     assert len(touched) == 1
-    after = _bucket_files(type_path)
-    for d in before:
-        if d in touched:
-            assert after[d] != before[d]  # rewritten
-        else:
-            assert after[d] == before[d]  # bit-identical: no IO
-    # and the merge read was pruned to the touched directory
+    assert set(_bucket_files(store._version_path("Patient", 2))) == touched
+    assert _bucket_files(store._version_path("Patient", 1)) == before
+    # the snapshot reads the touched bucket from v=2, the others from v=1
+    live = store.table("Patient").inputFiles()
+    assert {f.split("/v=")[1].split("/")[0] for f in live} == {"1", "2"}
+    assert all("/v=2/" in f for f in live if any(f"/{d}/" in f for d in touched))
     assert store.table("Patient").count() == 200
     assert {r["payload"] for r in
             store.table("Patient").filter(F.col("id") == "p7").collect()} == {"new"}
@@ -97,7 +102,7 @@ def test_bucketed_upsert_touches_bounded_file_set(spark, tmp_path):
 
 def test_compact_bounds_file_count_and_preserves_data(spark, tmp_path):
     root = str(tmp_path / "bstore")
-    store = BucketedResourceStore(spark, root, num_buckets=4)
+    store = ResourceStore(spark, root, num_buckets=4)
     store.import_resources(
         spark.createDataFrame([(f"p{i}", 0) for i in range(40)], ["id", "v"]), "Patient"
     )
@@ -119,14 +124,14 @@ def test_compact_bounds_file_count_and_preserves_data(spark, tmp_path):
             )
     finally:
         spark.conf.set(coalesce_key, old)
-    type_path = f"{root}/resourceType=Patient"
-    before = sum(len(fs) for fs in _bucket_files(type_path).values())
-    assert before > 4  # fragmented: more files than bucket dirs
+    before = len(store.table("Patient").inputFiles())
+    assert before > 4  # fragmented: more live files than buckets
     expect = {r["id"]: r["v"] for r in store.table("Patient").collect()}
 
     store.compact("Patient")
-    after_layout = _bucket_files(type_path)
-    after = sum(len(fs) for fs in after_layout.values())
+    after_layout = _bucket_files(store._version_path("Patient", store.versions("Patient")[-1]))
+    after = len(store.table("Patient").inputFiles())
+    assert after == sum(len(fs) for fs in after_layout.values())  # all in the new version
     assert after <= len(after_layout)  # ~one file per bucket dir
     assert after < before
     got = {r["id"]: r["v"] for r in store.table("Patient").collect()}
@@ -145,7 +150,7 @@ def test_plain_store_compact(spark, tmp_path):
 
 
 def test_bucketed_first_upsert_creates_table(spark, tmp_path):
-    store = BucketedResourceStore(spark, str(tmp_path / "bs3"), num_buckets=4)
+    store = ResourceStore(spark, str(tmp_path / "bs3"), num_buckets=4)
     store.upsert(spark.createDataFrame([("a", 1)], ["id", "v"]), "Patient")
     assert store.table("Patient").count() == 1
 
@@ -227,99 +232,35 @@ def test_snapshot_diff_change_taxonomy(spark):
     assert out_s == {4: "delete", 5: "insert"}
 
 
-def test_soft_delete_hides_rows_without_touching_data_files(spark, tmp_path):
-    root = str(tmp_path / "store")
-    store = BucketedResourceStore(spark, root, num_buckets=4)
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(40)], ["id", "val"]
-    )
-    store.import_resources(base, "T")
-    before = _bucket_files(f"{root}/resourceType=T")
-    store.delete(base.filter(F.col("id") % 5 == 0).select("id"), "T")
-    after = _bucket_files(f"{root}/resourceType=T")
-    # deletion vectors: NOT ONE data file rewritten
-    assert before == after
-    got = {r["id"] for r in store.table("T").collect()}
-    assert got == {i for i in range(40) if i % 5 != 0}
-    # deleting an absent id is a no-op
-    store.delete(spark.createDataFrame([(999,)], ["id"]), "T")
-    assert store.table("T").count() == 32
-
-
-def test_tombstone_id_col_mismatch_raises(spark, tmp_path):
-    """ADVICE r8: delete()/upsert()/table() disagreeing on the id
-    column must raise loudly — the old code inferred cols[0] in reads
-    and SILENTLY skipped tombstone clearing in upsert(), so mis-joined
-    reads or failed resurrection never surfaced."""
-    import pytest
-
-    root = str(tmp_path / "store")
-    store = BucketedResourceStore(spark, root, num_buckets=4)
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(10)], ["id", "val"]
-    )
-    store.import_resources(base, "T")
-    store.delete(spark.createDataFrame([(3,)], ["id"]), "T")
-    # a second delete keyed differently is rejected at write time
-    with pytest.raises(ValueError, match="keyed by"):
-        store.delete(
-            spark.createDataFrame([(4,)], ["other_id"]), "T",
-            id_col="other_id",
-        )
-    # an upsert keyed differently is rejected instead of silently
-    # skipping the tombstone clear
-    with pytest.raises(ValueError, match="keyed by"):
-        store.upsert(
-            spark.createDataFrame([(3, "x")], ["other_id", "val"]),
-            "T", id_col="other_id",
-        )
-    # the matching-name paths still work
-    got = {r["id"] for r in store.table("T").collect()}
-    assert got == set(range(10)) - {3}
-
-
 def test_upsert_resurrects_deleted_ids_even_when_bucket_fully_clears(spark, tmp_path):
     root = str(tmp_path / "store")
-    store = BucketedResourceStore(spark, root, num_buckets=4)
+    store = ResourceStore(spark, root, num_buckets=4)
     base = spark.createDataFrame(
         [(i, 1, f"v{i}") for i in range(20)], ["id", "version", "val"]
     )
     store.import_resources(base, "T")
-    # delete exactly one id -> its bucket holds exactly one tombstone;
-    # the resurrecting upsert clears ALL tombstones of that bucket
-    # (the dynamic-overwrite-skips-empty-partitions trap, pinned)
-    store.delete(spark.createDataFrame([(7,)], ["id"]), "T")
+    # delete every id of id 7's bucket: the delete's version writes no
+    # directory for it and the manifest maps the bucket to nothing; the
+    # upsert into the emptied bucket must bring id 7 back
+    in_bucket = base.withColumn("b", store._bucket_expr("id"))
+    b7 = in_bucket.filter(F.col("id") == 7).first()["b"]
+    doomed = in_bucket.filter(F.col("b") == b7).select("id")
+    n_doomed = doomed.count()
+    store.delete(doomed, "T")
+    assert not os.path.exists(f"{store._version_path('T', 2)}/bucket={b7}")
     assert store.table("T").filter(F.col("id") == 7).count() == 0
+    assert store.table("T").count() == 20 - n_doomed
     store.upsert(
         spark.createDataFrame([(7, 2, "reborn")], ["id", "version", "val"]),
         "T", version_col="version",
     )
     got = store.table("T").filter(F.col("id") == 7).collect()
     assert len(got) == 1 and got[0]["val"] == "reborn"
-    assert store.table("T").count() == 20
-
-
-def test_compact_applies_and_clears_tombstones(spark, tmp_path):
-    root = str(tmp_path / "store")
-    store = BucketedResourceStore(spark, root, num_buckets=4)
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(30)], ["id", "val"]
-    )
-    store.import_resources(base, "T")
-    store.delete(base.filter(F.col("id") < 10).select("id"), "T")
-    store.compact("T")
-    # physically applied: raw parquet (bypassing the anti-join) agrees
-    raw = spark.read.parquet(f"{root}/resourceType=T")
-    assert {r["id"] for r in raw.collect()} == set(range(10, 30))
-    # and the tombstone dir is gone
-    assert not os.path.exists(f"{root}/resourceType=T/_tombstones")
-    assert store.table("T").count() == 20
+    assert store.table("T").count() == 20 - n_doomed + 1
 
 
 def _vstore(spark, tmp_path, rows, nb=4):
-    from healthcare_api_spark.sources.store import VersionedResourceStore
-
-    store = VersionedResourceStore(spark, str(tmp_path / "vstore"), num_buckets=nb)
+    store = ResourceStore(spark, str(tmp_path / "vstore"), num_buckets=nb)
     df = spark.createDataFrame(rows, "id bigint, version int, val double")
     store.import_resources(df, "T")
     return store
@@ -396,8 +337,6 @@ def test_expire_vacuums_unreferenced_versions(spark, tmp_path):
         (r["id"], r["version"]) for r in store.table("T").collect()
     )
     assert live_after == live_before
-    import pytest
-
     with pytest.raises(ValueError):
         store.table("T", as_of=1)
     with pytest.raises(ValueError):
@@ -405,16 +344,14 @@ def test_expire_vacuums_unreferenced_versions(spark, tmp_path):
 
 
 def test_versioned_store_validation(spark, tmp_path):
-    import pytest
-
-    from healthcare_api_spark.sources.store import VersionedResourceStore
-
-    store = VersionedResourceStore(spark, str(tmp_path / "v2"), num_buckets=2)
+    with pytest.raises(ValueError, match="num_buckets"):
+        ResourceStore(spark, str(tmp_path / "v0"), num_buckets=0)
+    store = ResourceStore(spark, str(tmp_path / "v2"), num_buckets=2)
     with pytest.raises(ValueError, match="no snapshots"):
         store.table("T")
+    with pytest.raises(ValueError, match="no snapshots"):
+        store.delete(spark.createDataFrame([(1,)], "id bigint"), "T")
     df = spark.createDataFrame([(1, 1, 1.0)], "id bigint, version int, val double")
-    with pytest.raises(ValueError, match="overwrite"):
-        store.import_resources(df, "T", mode="append")
     store.import_resources(df, "T")
     with pytest.raises(ValueError, match="does not exist"):
         store.table("T", as_of=9)
@@ -422,9 +359,9 @@ def test_versioned_store_validation(spark, tmp_path):
 
 def test_versioned_table_bucket_pruning_bounds_input_files(spark, tmp_path):
     """ADVICE r9: upsert/delete must read ONLY touched buckets' files.
-    table(buckets=...) pushes the bucket IN filter onto each
-    per-version parquet scan (partition-directory pruning); the
-    md5-re-derivation the write path used before could not prune."""
+    table(buckets=...) scans only the wanted buckets' directories, as
+    the manifest routes them; the md5-re-derivation the write path used
+    before could not prune."""
     store = _vstore(
         spark, tmp_path, [(i, 1, float(i)) for i in range(1, 41)], nb=8
     )
@@ -434,11 +371,9 @@ def test_versioned_table_bucket_pruning_bounds_input_files(spark, tmp_path):
     )
     b3 = probe.collect()[0]["bucket"]
     pruned = store.table("T", buckets=[b3])
-    # the IN filter must land as PartitionFilters on the scan —
-    # inputFiles() reflects the unpruned relation, so read the plan
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters")[1].split("]")[0]
+    # the scan's root paths are that bucket's directory only
+    files = pruned.inputFiles()
+    assert files and all(f"/v=1/bucket={b3}/" in f for f in files)
     # and the rows are exactly that bucket's rows
     full = store.table("T").withColumn("bucket", store._bucket_expr("id"))
     want = sorted(
@@ -467,3 +402,116 @@ def test_versioned_table_pruned_read_of_emptied_bucket(spark, tmp_path):
         version_col="version",
     )
     assert [(r["id"], r["version"]) for r in store.table("T").collect()] == [(1, 2)]
+
+
+@pytest.mark.parametrize("written, opened", [(8, 16), (16, 8)])
+def test_num_buckets_mismatch_raises(spark, tmp_path, written, opened):
+    """The manifest records num_buckets: a store opened on the same
+    directory with another bucket count would hash upserted ids into
+    other buckets than their existing rows, so the type would read back
+    with duplicated or lost ids. Every operation through it raises."""
+    root = str(tmp_path / "store")
+    base = spark.range(1000).select(
+        F.concat(F.lit("id-"), F.col("id")).alias("id"), F.lit(1).alias("version")
+    )
+    ResourceStore(spark, root, num_buckets=written).import_resources(base, "T")
+    wrong = ResourceStore(spark, root, num_buckets=opened)
+    ups = spark.createDataFrame(
+        [("id-3", 2), ("id-400", 2), ("id-777", 2)], "id string, version int"
+    )
+    for op in (
+        lambda: wrong.upsert(ups, "T", version_col="version"),
+        lambda: wrong.delete(ups.select("id"), "T"),
+        lambda: wrong.table("T"),
+        lambda: wrong.compact("T"),
+    ):
+        with pytest.raises(ValueError, match=f"num_buckets={written}"):
+            op()
+    right = ResourceStore(spark, root, num_buckets=written)
+    assert right.versions("T") == [1]
+    right.upsert(ups, "T", version_col="version")
+    got = right.table("T")
+    assert got.count() == 1000 and got.select("id").distinct().count() == 1000
+
+
+def test_id_col_mismatch_raises(spark, tmp_path):
+    """The manifest records the id column the type was imported with: an
+    upsert or delete keyed by another column raises."""
+    store = ResourceStore(spark, str(tmp_path / "store"), num_buckets=4)
+    base = spark.createDataFrame(
+        [(i, i, f"v{i}") for i in range(10)], "id bigint, other_id bigint, val string"
+    )
+    store.import_resources(base, "T")
+    with pytest.raises(ValueError, match="id_col='id'"):
+        store.upsert(
+            spark.createDataFrame([(3, 3, "x")], "id bigint, other_id bigint, val string"),
+            "T", id_col="other_id",
+        )
+    with pytest.raises(ValueError, match="id_col='id'"):
+        store.delete(spark.createDataFrame([(4,)], "other_id bigint"), "T", id_col="other_id")
+    assert store.versions("T") == [1]
+    store.delete(spark.createDataFrame([(4,)], "id bigint"), "T")
+    assert {r["id"] for r in store.table("T").collect()} == set(range(10)) - {4}
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("nb", [1, 4])
+def test_table_builds_without_a_job(spark, tmp_path, nb):
+    """Building a snapshot read submits no Spark job: the manifest is
+    read on the driver and names the bucket directories and the row
+    schema, so no footer-inference or manifest-reading job runs."""
+    store = ResourceStore(spark, str(tmp_path / "store"), num_buckets=nb)
+    store.import_resources(
+        spark.createDataFrame([(i, 1) for i in range(20)], "id bigint, version int"), "T"
+    )
+    store.upsert(spark.createDataFrame([(3, 2), (30, 2)], "id bigint, version int"), "T",
+                 version_col="version")
+    first = _next_job_id(spark)
+    now, then = store.table("T"), store.table("T", as_of=1)
+    assert _next_job_id(spark) == first
+    assert now.count() == 21 and then.count() == 20
+
+
+def test_table_schema_is_the_footer_schema(spark, tmp_path):
+    """The manifest's schema is what footer inference of the same files
+    gives: same names, same types, every field, element and value
+    nullable."""
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType([
+        StructField("id", StringType(), False),
+        StructField("meta", StructType([
+            StructField("n", IntegerType(), False),
+            StructField("tags", ArrayType(StringType(), False), False),
+        ]), False),
+        StructField("attrs", MapType(StringType(), IntegerType(), False), True),
+    ])
+    df = spark.createDataFrame(
+        [("a", (1, ["x"]), {"k": 1}), ("b", (2, []), {})], schema
+    )
+    store = ResourceStore(spark, str(tmp_path / "store"), num_buckets=4)
+    store.import_resources(df, "T")
+    footer = spark.read.parquet(store._version_path("T", 1)).drop("bucket").schema
+    assert store.table("T").schema == footer
+    assert store.table("T", as_of=1).schema == footer
+    assert all(f.nullable for f in footer.fields)
+    # an upsert that adds a column records the widened schema; rows of
+    # untouched buckets read it as NULL
+    store.upsert(
+        spark.createDataFrame([("a", (3, ["y"]), None, "new")],
+                              StructType([*schema.fields, StructField("note", StringType())])),
+        "T",
+    )
+    got = {r["id"]: (r["meta"]["n"], r["note"]) for r in store.table("T").collect()}
+    assert got == {"a": (3, "new"), "b": (2, None)}
+    assert store.table("T", as_of=1).schema == footer

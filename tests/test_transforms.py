@@ -165,8 +165,9 @@ def test_mime_strips_compression_encoding_suffix(spark):
     from healthcare_api_spark.functions.mime import mime_from_name
 
     df = spark.createDataFrame(
-        [("a.vcf.gz",), ("b.maf.GZ",), ("c.tsv.bz2",), ("d.gz",), ("e.vcf",)],
-        ["name"],
+        [("a.vcf.gz",), ("b.maf.GZ",), ("c.tsv.bz2",), ("d.gz",), ("e.vcf",),
+         ("",), (None,), ("F.PDF",)],
+        "name string",
     ).select("name", mime_from_name(F.col("name")).alias("mime"))
     got = {r["name"]: r["mime"] for r in df.collect()}
     assert got["a.vcf.gz"] == "text/tab-separated-values"
@@ -174,3 +175,6 @@ def test_mime_strips_compression_encoding_suffix(spark):
     assert got["c.tsv.bz2"] == "text/tab-separated-values"
     assert got["d.gz"] == "application/octet-stream"
     assert got["e.vcf"] == "text/tab-separated-values"
+    assert got[""] == "application/octet-stream"
+    assert got[None] == "application/octet-stream"
+    assert got["F.PDF"] == "application/pdf"
